@@ -190,7 +190,7 @@ def merge_batch(
             adds, total = table.write_data_files(
                 snap,
                 rows,
-                n_out_partitions=len(per_bucket),
+                touched_buckets=len(per_bucket),
                 kind="delta",
                 # per-file stats come from the stats job above — no driver
                 # footer reads
@@ -257,7 +257,7 @@ def merge_batch(
         # row count observed inside the write job itself (O8 estimate
         # wiring) — no footer reads, no extra job
         adds, total = table.write_data_files(
-            snap, result, n_out_partitions=len(touched)
+            snap, result, touched_buckets=len(touched)
         )
         lineage["rows_upserted"] = total
         if stage:

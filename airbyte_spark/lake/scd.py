@@ -211,7 +211,7 @@ def scd_merge_batch(
                 F.col("_b"),
             )
             adds, total = table.write_data_files(
-                snap, rows, n_out_partitions=len(touched), kind="delta",
+                snap, rows, touched_buckets=len(touched), kind="delta",
                 rows_per_bucket={b: v["rows"] for b, v in per_bucket.items()},
             )
             version = table.commit(
@@ -263,7 +263,7 @@ def scd_merge_batch(
         ).withColumn("_b", table.bucket_expr(snap))
 
         adds, total = table.write_data_files(
-            snap, rows, n_out_partitions=len(touched)
+            snap, rows, touched_buckets=len(touched)
         )
         lineage["rows_upserted"] = total
         version = table.commit(
@@ -431,7 +431,7 @@ def scd_compact(
         F.col(snap.primary_key[-1]).cast("long").alias(META_LSN),
         F.lit(False).alias(META_DELETED),
     ).withColumn("_b", table.bucket_expr(snap))
-    adds, _ = table.write_data_files(snap, rows, n_out_partitions=len(targets))
+    adds, _ = table.write_data_files(snap, rows, touched_buckets=len(targets))
     removes = [p for b in targets for p in per_bucket[b]]
     return table.commit(snap, adds, removes, op="scd_compact")
 

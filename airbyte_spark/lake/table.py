@@ -17,9 +17,12 @@ committed-state contract, BufferedStreamConsumer.java:178-203):
   (the Spark analog of "destination echoes STATE only after commit").
 * **Bucket partitioning** — data files live under ``_b=<k>`` computed as
   ``pmod(hash(bucket_cols), n_buckets)``; MERGE prunes to touched buckets,
-  so an upsert of B buckets rewrites only those files (copy-on-write). At
-  1000-executor scale, n_buckets is sized so one bucket ≈ one task's worth
-  of data.
+  so an upsert of B buckets rewrites only those files (copy-on-write).
+  Buckets are the unit of layout and pruning, not of write parallelism:
+  a write of B buckets hash-partitions by ``_b`` into
+  ``min(B, defaultParallelism)`` tasks, each holding whole buckets, so a
+  commit still writes exactly one file per bucket while a small
+  micro-batch pays for the cores it has, not for B task launches.
 * **Schema evolution without rewrite** — every data file records the
   ``schema_id`` it was written under; schemas carry stable field uids
   (catalog.py). Readers project each file group onto the CURRENT schema by
@@ -38,11 +41,11 @@ connection owning its destination tables.
 
 from __future__ import annotations
 
-import threading
-
 import json
 import os
+import threading
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
 from typing import Optional, Sequence
 
@@ -111,12 +114,54 @@ class Snapshot:
         return self.schemas[self.current_schema_id]
 
 
-#: parquet timestamp-encoding conf guard (see write_data_files): one
-#: SparkSession per process, shared across concurrent lake writers
+#: parquet timestamp encoding pinned around every data-file write
 _TS_KEY = "spark.sql.parquet.outputTimestampType"
-_TS_CONF_LOCK = threading.Lock()
-_TS_CONF_DEPTH = 0
-_TS_CONF_PREV = None
+#: paths above this count are listed by a distributed Spark job; raised
+#: around scans, whose file lists come from the snapshot (see read)
+_LISTING_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_NO_LISTING_JOB = str(2**31 - 1)
+
+#: scope registry, module-wide because a session's conf is shared by every
+#: LakeTable and thread using that session:
+#: (id(session), key) -> [depth, value, prior value or None when unset]
+_CONF_LOCK = threading.Lock()
+_CONF_SCOPES: dict[tuple[int, str], list] = {}
+
+
+@contextmanager
+def _scoped_conf(spark: SparkSession, key: str, value: str):
+    """Hold session conf ``key`` at ``value`` for the block, then restore
+    the user's own setting (unset if it was unset). Session confs are
+    session-global, and concurrent lake writers and readers in one
+    session (multi-stream sync's foreachBatch threads) overlap, so a plain
+    save/restore would let the first finisher flip an in-flight sibling
+    back. Scopes are therefore REFCOUNTED per (session, key): only the
+    outermost captures the prior value and only the last to leave
+    restores it. Overlapping scopes of one key must agree on the value."""
+    scope = (id(spark), key)
+    with _CONF_LOCK:
+        held = _CONF_SCOPES.get(scope)
+        if held is None:
+            held = _CONF_SCOPES[scope] = [0, value, spark.conf.get(key, None)]
+            spark.conf.set(key, value)
+        elif held[1] != value:
+            raise RuntimeError(
+                f"conf {key} is already held at {held[1]!r}; cannot also "
+                f"hold it at {value!r}"
+            )
+        held[0] += 1
+    try:
+        yield
+    finally:
+        with _CONF_LOCK:
+            held[0] -= 1
+            if held[0] == 0:
+                del _CONF_SCOPES[scope]
+                if held[2] is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, held[2])
+
 
 class CommitConflict(RuntimeError):
     pass
@@ -754,7 +799,7 @@ class LakeTable:
         self,
         snap: Snapshot,
         df: DataFrame,
-        n_out_partitions: Optional[int] = None,
+        touched_buckets: Optional[int] = None,
         kind: str = "base",
         rows_per_bucket: Optional[dict] = None,
         sort_within: Optional[Sequence[str]] = None,
@@ -762,6 +807,16 @@ class LakeTable:
         """Write rows (payload + meta cols, with ``_b`` bucket col already
         attached) under a fresh commit subdir; return (add-entries,
         total_rows).
+
+        ``touched_buckets`` (the number of distinct ``_b`` values in
+        ``df``) makes the write bucket-exact: rows hash-partition by
+        ``_b`` into ``min(touched_buckets, defaultParallelism)`` tasks, so
+        every bucket stays whole inside one task and the commit writes
+        exactly ONE file per bucket (exact per-file rows, LSN bounds and
+        blooms) with no more tasks than the cores can run at once — a
+        per-bucket task would only add launch cost, the whole of it on a
+        small micro-batch. Without it the input partitioning is kept
+        (appends / overwrites: a bucket may span several files).
 
         Row counts come FROM THE WRITE JOB: either ``rows_per_bucket``
         (the merge's stats aggregate, already computed) or an
@@ -780,8 +835,11 @@ class LakeTable:
         if rows_per_bucket is None:
             obs = Observation()
             writer = writer.observe(obs, F.count(F.lit(1)).alias("rows"))
-        if n_out_partitions:
-            writer = writer.repartition(n_out_partitions, "_b")
+        if touched_buckets:
+            n_tasks = min(
+                touched_buckets, self.spark.sparkContext.defaultParallelism
+            )
+            writer = writer.repartition(n_tasks, "_b")
         if sort_within:
             # table sort order (compaction-time): leading "_b" keeps each
             # output file's rows contiguous per bucket and clustered on
@@ -795,23 +853,8 @@ class LakeTable:
         # per-write option), so it is save/restored around the write — a
         # user session that configured its own encoding must not have it
         # silently hijacked for its OWN writes after touching a LakeTable.
-        # REFCOUNTED: concurrent lake writers in one session (multi-stream
-        # sync's foreachBatch threads) overlap; a plain save/restore would
-        # let the first finisher flip an in-flight sibling back to INT96.
-        # Only the OUTERMOST writer captures and restores.
-        with _TS_CONF_LOCK:
-            global _TS_CONF_DEPTH, _TS_CONF_PREV
-            if _TS_CONF_DEPTH == 0:
-                _TS_CONF_PREV = self.spark.conf.get(_TS_KEY)
-                self.spark.conf.set(_TS_KEY, "TIMESTAMP_MICROS")
-            _TS_CONF_DEPTH += 1
-        try:
+        with _scoped_conf(self.spark, _TS_KEY, "TIMESTAMP_MICROS"):
             writer.write.partitionBy("_b").parquet(out, compression="zstd")
-        finally:
-            with _TS_CONF_LOCK:
-                _TS_CONF_DEPTH -= 1
-                if _TS_CONF_DEPTH == 0:
-                    self.spark.conf.set(_TS_KEY, _TS_CONF_PREV)
         total: Optional[int] = None
         if obs is not None:
             try:
@@ -1065,6 +1108,11 @@ class LakeTable:
         the current schema by field uid (rename/widen/null-pad), then
         union-by-name'd — the scan stays fully columnar/JVM-side.
 
+        The scan is built from the snapshot's own file list: planning
+        checks the selected files in-process and starts NO Spark job,
+        however many files the snapshot holds (Spark would otherwise list
+        more than 32 paths with a distributed listing job).
+
         Merge-on-read: when delta files are present (strategy="mor"
         merges), the scan resolves latest-per-key by ``__lsn`` across
         base+delta rows (tombstones win when newest), exactly like
@@ -1314,14 +1362,17 @@ class LakeTable:
         unique and no commit-order tiebreak is needed; default is the raw
         record feed. Pair with ``lineage_totals()['max_lsn']`` /
         ``partition_watermarks()`` to checkpoint the next watermark."""
+        # ONE snapshot for the scan and its key: a commit landing between
+        # two snapshot() calls would otherwise mix two table versions
+        snap = self.snapshot()
         df = self.read(
             buckets=buckets,
             include_meta=True,
             include_deleted=True,
             resolve=False,
             since_lsn=since_lsn,
+            snap=snap,
         )
-        snap = self.snapshot()
         if resolve and snap.primary_key:
             from ..operators.dedup import latest_per_key
 
@@ -1338,7 +1389,10 @@ class LakeTable:
         struct = file_schema.to_struct()
         # meta cols are physical in every data file
         read_struct = struct.add(META_LSN, "long").add(META_DELETED, "boolean")
-        raw = self.spark.read.schema(read_struct).parquet(*paths)
+        # the snapshot already names every file: check them in-process
+        # (one status call each) instead of in a distributed listing job
+        with _scoped_conf(self.spark, _LISTING_KEY, _NO_LISTING_JOB):
+            raw = self.spark.read.schema(read_struct).parquet(*paths)
         by_uid = file_schema.by_uid()
         cols = []
         for fs in cur.fields:
@@ -1632,7 +1686,7 @@ class LakeTable:
             buckets=targets, include_meta=True, include_deleted=True, snap=snap
         ).withColumn("_b", self.bucket_expr(snap))
         adds, _ = self.write_data_files(
-            snap, df, n_out_partitions=len(targets),
+            snap, df, touched_buckets=len(targets),
             sort_within=self._rewrite_sort(snap),
         )
         removes = [p for b in targets for p in per_bucket[b]]
@@ -1696,7 +1750,7 @@ class LakeTable:
         adds, _ = self.write_data_files(
             Snapshot(**{**snap.__dict__, "n_buckets": new_n_buckets}),
             rows,
-            n_out_partitions=new_n_buckets,
+            touched_buckets=new_n_buckets,
             sort_within=self._rewrite_sort(snap),
         )
         entry: dict = {

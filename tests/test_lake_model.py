@@ -14,7 +14,10 @@ from pyspark.sql import functions as F
 from airbyte_spark.catalog import TableSchema
 from airbyte_spark.functions.names import canonicalize_identifier
 from airbyte_spark.lake import LakeTable, merge_batch
+from airbyte_spark.lake.table import _LISTING_KEY, _TS_KEY, _scoped_conf
 from airbyte_spark.schemas import CHANGE_STRUCT, ORDER_COLS, PK, TRANSCRIPT_STRUCT
+
+_SCOPED_KEYS = (_TS_KEY, _LISTING_KEY)
 
 KEYS = [("c%d" % c, t) for c in range(6) for t in range(3)]
 
@@ -149,12 +152,151 @@ def test_append_foreign_lsn_col_and_session_conf_restored(spark, tmp_path):
     lake write must not permanently hijack the session's parquet
     timestamp-encoding conf."""
     table = _mk_plain_table(spark, tmp_path / "t")
-    key = "spark.sql.parquet.outputTimestampType"
-    before = spark.conf.get(key)
+    before = {k: spark.conf.get(k, None) for k in _SCOPED_KEYS}
     src = _batch_df(spark, [("c0", 0, 5, "x", False)]).withColumn(
         "__lsn", F.col("_ab_cdc_lsn") * 2
     )
     table.append(src, lsn_col="__lsn")  # '__lsn' is NOT a schema column
     got = table.read(include_meta=True).select("conv_id", "__lsn").collect()
     assert [(r["conv_id"], r["__lsn"]) for r in got] == [("c0", 10)]
-    assert spark.conf.get(key) == before
+    # both the write's timestamp encoding and the scan's listing threshold
+    # return to their prior values
+    assert {k: spark.conf.get(k, None) for k in _SCOPED_KEYS} == before
+
+
+def test_concurrent_lake_readers_and_writers_restore_session_conf(
+    spark, tmp_path
+):
+    """Two threads each writing and reading a lake table in ONE session
+    overlap their scopes of both confs (the write's timestamp encoding,
+    the scan's listing threshold); the user's own settings come back once
+    both are done."""
+    import threading
+
+    user = {_TS_KEY: "TIMESTAMP_MILLIS", _LISTING_KEY: "48"}
+    for k, v in user.items():
+        spark.conf.set(k, v)
+    try:
+        tables = [_mk_plain_table(spark, tmp_path / f"t{n}") for n in range(2)]
+        start = threading.Barrier(len(tables))
+        errors = []
+
+        def work(table):
+            try:
+                start.wait()
+                for i in range(3):
+                    table.append(_batch_df(spark, [(f"c{i}", 0, 1 + i, "x", False)]))
+                    table.read()
+            except Exception as e:  # surfaced below
+                errors.append(e)
+
+        threads = [threading.Thread(target=work, args=(t,)) for t in tables]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert {k: spark.conf.get(k, None) for k in user} == user
+        assert [t.read().count() for t in tables] == [3, 3]
+    finally:
+        for k in user:
+            spark.conf.unset(k)
+
+
+class _FakeConf:
+    """The slice of RuntimeConfig that _scoped_conf uses, over a dict."""
+
+    def __init__(self, **kv):
+        self.kv = dict(kv)
+
+    def get(self, key, default):
+        return self.kv.get(key, default)
+
+    def set(self, key, value):
+        self.kv[key] = value
+
+    def unset(self, key):
+        self.kv.pop(key, None)
+
+
+def test_scoped_conf_stress_keeps_value_and_restores_prior():
+    """Many threads entering and leaving scopes of two keys in one session:
+    inside any scope the key holds the scoped value, and after the last
+    scope each key is back to the user's value (or unset)."""
+    import sys
+    import threading
+    import types
+
+    spark = types.SimpleNamespace(conf=_FakeConf(a="user"))
+    start = threading.Barrier(12)
+    errors = []
+
+    def work(key, value):
+        try:
+            start.wait()
+            for _ in range(300):
+                with _scoped_conf(spark, key, value):
+                    if spark.conf.get(key, None) != value:
+                        errors.append((key, spark.conf.get(key, None)))
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=work, args=(k, v))
+            for k, v in [("a", "A"), ("b", "B")] * 6
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:5]
+    assert spark.conf.kv == {"a": "user"}
+    with _scoped_conf(spark, "a", "A"):
+        with pytest.raises(RuntimeError, match="already held"):
+            with _scoped_conf(spark, "a", "other"):
+                pass
+    assert spark.conf.kv == {"a": "user"}
+
+
+def test_read_planning_starts_no_spark_job(spark, tmp_path, monkeypatch):
+    """read() builds its scan from the snapshot's file list: planning a
+    scan of more than 32 files (Spark's parallel-listing threshold) starts
+    no Spark job, and read_incremental plans off ONE snapshot likewise."""
+    import uuid
+
+    table = _mk_plain_table(spark, tmp_path / "t", n_buckets=16)
+    for i in range(3):
+        rows = [(f"conv{c}", 0, 10 * i + 1, f"v{i}", False) for c in range(40)]
+        merge_batch(
+            table, _batch_df(spark, rows), ORDER_COLS, app_id="m",
+            batch_id=i, strategy="mor",
+        )
+    assert len(table.snapshot().files) > 32
+    snapshots = []
+    take = table.snapshot
+
+    def counted_snapshot(*args, **kwargs):
+        snapshots.append(1)
+        return take(*args, **kwargs)
+
+    monkeypatch.setattr(table, "snapshot", counted_snapshot)
+    sc = spark.sparkContext
+    group = f"plan-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan lake reads")
+    try:
+        df = table.read()
+        snapshots.clear()
+        changes = table.read_incremental(since_lsn=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert len(snapshots) == 1
+    assert sorted(r.text for r in df.select("text").collect()) == ["v2"] * 40
+    assert changes.count() == 80  # the last two batches' rows

@@ -7,6 +7,7 @@ from airbyte_spark.catalog import TableSchema
 from airbyte_spark.feedgen import FeedSpec, generate_feed, oracle_final_state
 from airbyte_spark.functions.text import canonicalize_pandas
 from airbyte_spark.lake import LakeTable, merge_batch
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airbyte_spark.schemas import CHANGE_STRUCT, ORDER_COLS, PK, TRANSCRIPT_STRUCT
@@ -206,3 +207,97 @@ def test_cow_merge_folds_pending_deltas(spark, tmp_path, tmp_path_factory):
     touched_kinds = {m["kind"] for m in snap.files.values()}
     assert "base" in touched_kinds
     assert_same(table.read(), oracle_final_state(ev))
+
+
+def _rows_df(spark, rows):
+    """(conv_id, turn_idx, lsn) rows as a CHANGE_STRUCT batch."""
+    import datetime as dt
+
+    ts = dt.datetime(2025, 1, 1)
+    return spark.createDataFrame(
+        [(c, t, "user", f"{c}/{t}@{lsn}", None, ts, lsn, ts, None, ts)
+         for c, t, lsn in rows],
+        schema=CHANGE_STRUCT,
+    )
+
+
+def _group_stages(sc, group):
+    """{stage id: StageInfo} of every job run under job group ``group``.
+    Stage ids grow in submission order, so a write's highest stage is the
+    one whose tasks write the files (the map stages before it only feed
+    its shuffle)."""
+    st = sc.statusTracker()
+    out = {}
+    for j in st.getJobIdsForGroup(group):
+        job = st.getJobInfo(j)
+        for sid in job.stageIds if job else ():
+            info = st.getStageInfo(sid)
+            if info is not None:
+                out[sid] = info
+    return out
+
+
+def test_mor_write_one_file_per_bucket_in_core_sized_tasks(
+    spark, tmp_path, monkeypatch
+):
+    """A MOR merge touching B buckets leaves exactly one delta file per
+    touched bucket with exact LSN bounds, written by a stage of at most
+    min(B, defaultParallelism) tasks; compaction leaves one base file per
+    rewritten bucket and an unchanged resolved read."""
+    import uuid
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    groups = []
+    orig = LakeTable.write_data_files
+
+    def grouped_write(self, *args, **kwargs):
+        group = f"bucket-write-{uuid.uuid4().hex}"
+        groups.append(group)
+        sc.setJobGroup(group, "lake bucket write")
+        try:
+            return orig(self, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(LakeTable, "write_data_files", grouped_write)
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), TableSchema.from_struct(TRANSCRIPT_STRUCT),
+        primary_key=list(PK), bucket_cols=["conv_id"], n_buckets=16,
+    )
+    rows = [(f"conv-{c}", t, 1000 + 7 * c + t) for c in range(60) for t in range(2)]
+    batch = _rows_df(spark, rows)
+    stats = merge_batch(table, batch, ORDER_COLS, batch_id=0, strategy="mor")
+    b = stats.touched_buckets
+    assert b > cores, "the batch must touch more buckets than there are cores"
+
+    write_stage = _group_stages(sc, groups[-1])
+    assert write_stage[max(write_stage)].numTasks <= min(b, cores)
+
+    snap = table.snapshot()
+    expected = {
+        r["_b"]: (r["lo"], r["hi"])
+        for r in batch.withColumn("_b", table.bucket_expr(snap))
+        .groupBy("_b")
+        .agg(F.min("_ab_cdc_lsn").alias("lo"), F.max("_ab_cdc_lsn").alias("hi"))
+        .collect()
+    }
+    deltas = [m for m in snap.files.values() if m["kind"] == "delta"]
+    assert sorted(m["bucket"] for m in deltas) == sorted(expected)
+    assert len(deltas) == b
+    for m in deltas:
+        assert (m["min_lsn"], m["max_lsn"]) == expected[m["bucket"]]
+    assert sum(m["rows"] for m in deltas) == len(rows)
+
+    def resolved():
+        got = table.read().select("conv_id", "turn_idx", "text").collect()
+        return sorted(tuple(r) for r in got)
+
+    before = resolved()
+    table.compact()
+    compact_stage = _group_stages(sc, groups[-1])
+    assert compact_stage[max(compact_stage)].numTasks <= min(b, cores)
+    snap = table.snapshot()
+    assert {m["kind"] for m in snap.files.values()} == {"base"}
+    assert sorted(m["bucket"] for m in snap.files.values()) == sorted(expected)
+    assert resolved() == before
