@@ -26,6 +26,17 @@ Scale shape (the part that must survive 100 TB):
    AQE skew-join handles residual imbalance.
 4. Fence + adds/removes + lineage land in ONE atomic commit; a replayed
    batch_id is a no-op BEFORE any compute happens.
+5. A merge-on-read batch is ONE Spark action, its write: collapse,
+   canonicalize, conform and bucket all run inside it, and the per-bucket
+   lineage (rows, LSN high-watermark, deletes) comes from the written
+   files' footers plus an Observation on the same write — no persist, no
+   stats job. Only the COW path runs a stats job first: it must know the
+   touched buckets before it reads the target.
+
+Lineage ``rows_in`` counts the batch's rows after the per-key collapse.
+Nothing upstream drops cross-batch re-deliveries (the sink is idempotent
+on (pk, LSN): fences, the collapse and LSN resolution absorb them), so an
+event delivered again in a later batch is counted again there.
 """
 
 from __future__ import annotations
@@ -33,7 +44,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.dedup import latest_per_key
@@ -114,7 +125,121 @@ def merge_batch(
     src = src.withColumn(META_LSN, F.col(cursor).cast("long")).withColumn(
         "_src_deleted", F.col(deleted_col).isNotNull()
     )
-    src = src.withColumn("_b", table.bucket_expr(snap)).persist()
+    src = src.withColumn("_b", table.bucket_expr(snap))
+    if strategy == "mor":
+        written = _write_mor(table, snap, src)
+    else:
+        written = _write_cow(table, snap, src)
+
+    if written is None:
+        if not commit_empty:
+            # idle-tail policy: BEFORE the staged branch too — an audited
+            # sync would otherwise stage+publish one empty commit per
+            # quiet-hour trigger, exactly the O(commits) growth this flag
+            # exists to prevent
+            return MergeStats(skipped=False, version=None, rows_in=0, buckets=[])
+        # commit_empty=True (default): per-batch lineage accounting is
+        # itself a feature (O2) and bounded-sync tests rely on it
+        adds, removes, per_bucket, rows_in = [], [], {}, 0
+        lineage = _lineage(app_id, batch_id, 0, 0, 0, None, epoch, rows_invalid)
+    else:
+        adds, removes, per_bucket, rows_upserted = written
+        rows_in = sum(v["rows"] for v in per_bucket.values())
+        # rows with a null/uncastable cursor (snapshot / full-refresh
+        # records without CDC metadata) yield max_lsn=None for their
+        # bucket — they must not crash the merge, and the high-watermark
+        # ignores them
+        _lsns = [v["max_lsn"] for v in per_bucket.values() if v["max_lsn"] is not None]
+        lineage = _lineage(
+            app_id, batch_id, rows_in, rows_upserted,
+            sum(v["deletes"] for v in per_bucket.values()),
+            max(_lsns) if _lsns else None, epoch, rows_invalid,
+        )
+        lineage["partitions"] = per_bucket
+    buckets = sorted(per_bucket)
+    if stage:
+        sid = table.stage_commit(
+            snap, adds, removes, fence=(app_id, batch_id), lineage=lineage,
+            op="merge",
+        )
+        return MergeStats(
+            skipped=False, rows_in=rows_in, touched_buckets=len(buckets),
+            staged_id=sid, buckets=buckets,
+        )
+    version = table.commit(
+        snap, adds, removes, fence=(app_id, batch_id), lineage=lineage,
+        op="merge",
+        # a COW rewrite resolved against the buckets it read: it may not be
+        # rebased onto a concurrent commit; appends (MOR, empty) may
+        retry_conflicts=2 if strategy == "mor" or written is None else 0,
+    )
+    return MergeStats(
+        skipped=False, version=version, rows_in=rows_in,
+        touched_buckets=len(buckets), buckets=buckets,
+    )
+
+
+def _write_mor(table: LakeTable, snap: Snapshot, src: DataFrame):
+    """LSM write path: ONE Spark action, the write. The collapsed batch is
+    conformed to the table schema and appended as per-bucket delta files
+    — no target read, no persist, no stats job. Per-bucket rows and LSN
+    high-watermarks come from the footers of the files just written (one
+    file per bucket); per-bucket delete counts from an Observation riding
+    the same write."""
+    schema_cols = []
+    for fs in snap.schema.fields:
+        if fs.name in src.columns:
+            schema_cols.append(F.col(fs.name).cast(fs.dtype).alias(fs.name))
+        else:
+            schema_cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
+    rows = src.select(
+        *schema_cols,
+        F.col(META_LSN),
+        F.col("_src_deleted").alias(META_DELETED),
+        F.col("_b"),
+    )
+    deleted = Observation()
+    adds, total = table.write_data_files(
+        snap,
+        rows,
+        # the touched buckets are unknown until written: n_buckets bounds
+        # them, and the write's task count is min(that, cores) anyway
+        touched_buckets=snap.n_buckets,
+        kind="delta",
+        observe=(
+            deleted,
+            F.collect_list(F.when(F.col(META_DELETED), F.col("_b"))).alias("b"),
+        ),
+    )
+    if total == 0:
+        return None
+    per_bucket = bucket_lineage(adds)
+    for b in deleted.get["b"]:
+        per_bucket[int(b)]["deletes"] += 1
+    return adds, [], per_bucket, total
+
+
+def bucket_lineage(adds: list[dict]) -> dict[int, dict]:
+    """Per-bucket lineage ``{rows, max_lsn, deletes: 0}`` of one write,
+    from its add-entries: the footer row counts and ``__lsn`` bounds that
+    ``write_data_files`` records per file."""
+    out: dict[int, dict] = {}
+    for ad in adds:
+        v = out.setdefault(ad["bucket"], {"rows": 0, "max_lsn": None, "deletes": 0})
+        v["rows"] += ad["rows"]
+        if ad["max_lsn"] is not None and (
+            v["max_lsn"] is None or ad["max_lsn"] > v["max_lsn"]
+        ):
+            v["max_lsn"] = ad["max_lsn"]
+    return out
+
+
+def _write_cow(table: LakeTable, snap: Snapshot, src: DataFrame):
+    """Read + full-outer-resolve + rewrite the touched buckets. The
+    touched buckets must be known BEFORE the target read, so the collapsed
+    batch is persisted and one stats job yields them."""
+    pk = snap.primary_key
+    src = src.persist()
     try:
         # ONE stats job materializes the persist AND yields rows_in, the
         # touched-bucket list, the LSN high-watermark, and delete counts —
@@ -128,93 +253,12 @@ def merge_batch(
             )
             .collect()
         )
-        rows_in = sum(r["n"] for r in stats_rows)
-        if rows_in == 0:
-            if not commit_empty:
-                # idle-tail policy: BEFORE the staged branch too — an
-                # audited sync would otherwise stage+publish one empty
-                # commit per quiet-hour trigger, exactly the O(commits)
-                # growth this flag exists to prevent
-                return MergeStats(skipped=False, version=None, rows_in=0, buckets=[])
-            empty_lineage = _lineage(
-                app_id, batch_id, 0, 0, 0, None, epoch, rows_invalid
-            )
-            if stage:
-                sid = table.stage_commit(
-                    snap, [], [], fence=(app_id, batch_id),
-                    lineage=empty_lineage, op="merge",
-                )
-                return MergeStats(
-                    skipped=False, rows_in=0, staged_id=sid, buckets=[]
-                )
-            # commit_empty=True (default): per-batch lineage accounting
-            # is itself a feature (O2) and bounded-sync tests rely on it;
-            # the False case (idle-tail, no commit) returned above.
-            version = table.commit(
-                snap, [], [], fence=(app_id, batch_id),
-                lineage=empty_lineage,
-                op="merge", retry_conflicts=2,
-            )
-            return MergeStats(skipped=False, version=version, rows_in=0, buckets=[])
-
+        if not stats_rows:
+            return None
         per_bucket = {
             int(r["_b"]): {"rows": r["n"], "max_lsn": r["mx"], "deletes": r["nd"]}
             for r in stats_rows
         }
-        # rows with a null/uncastable cursor (snapshot / full-refresh records
-        # without CDC metadata) yield max_lsn=None for their bucket — they
-        # must not crash the merge, and the high-watermark ignores them
-        _lsns = [v["max_lsn"] for v in per_bucket.values() if v["max_lsn"] is not None]
-        max_lsn = max(_lsns) if _lsns else None
-        n_del = sum(v["deletes"] for v in per_bucket.values())
-        lineage = _lineage(
-            app_id, batch_id, rows_in, rows_in, n_del, max_lsn, epoch, rows_invalid
-        )
-        lineage["partitions"] = per_bucket
-
-        if strategy == "mor":
-            # LSM write path: conform the collapsed batch to the table
-            # schema, append as delta files, fence — no target read at all.
-            schema_cols = []
-            for fs in snap.schema.fields:
-                if fs.name in src.columns:
-                    schema_cols.append(F.col(fs.name).cast(fs.dtype).alias(fs.name))
-                else:
-                    schema_cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
-            rows = src.select(
-                *schema_cols,
-                F.col(META_LSN),
-                F.col("_src_deleted").alias(META_DELETED),
-                F.col("_b"),
-            )
-            adds, total = table.write_data_files(
-                snap,
-                rows,
-                touched_buckets=len(per_bucket),
-                kind="delta",
-                # per-file stats come from the stats job above — no driver
-                # footer reads
-                rows_per_bucket={b: v["rows"] for b, v in per_bucket.items()},
-            )
-            lineage["rows_upserted"] = total
-            if stage:
-                sid = table.stage_commit(
-                    snap, adds, [], fence=(app_id, batch_id),
-                    lineage=lineage, op="merge",
-                )
-                return MergeStats(
-                    skipped=False, rows_in=rows_in,
-                    touched_buckets=len(per_bucket), staged_id=sid,
-                    buckets=sorted(per_bucket),
-                )
-            version = table.commit(
-                snap, adds, [], fence=(app_id, batch_id), lineage=lineage,
-                op="merge", retry_conflicts=2,
-            )
-            return MergeStats(
-                skipped=False, version=version, rows_in=rows_in,
-                touched_buckets=len(per_bucket), buckets=sorted(per_bucket),
-            )
 
         # 2. bucket pruning
         touched = list(per_bucket)
@@ -253,34 +297,12 @@ def merge_batch(
         out_cols.append(F.coalesce(F.col("t._b"), F.col("s._b")).alias("_b"))
         result = joined.select(*out_cols)
 
-        # 4. rewrite touched buckets + atomic fenced commit
-        # row count observed inside the write job itself (O8 estimate
-        # wiring) — no footer reads, no extra job
+        # 4. rewrite touched buckets + atomic fenced commit (per-file row
+        # counts from the footers the write already reads)
         adds, total = table.write_data_files(
             snap, result, touched_buckets=len(touched)
         )
-        lineage["rows_upserted"] = total
-        if stage:
-            sid = table.stage_commit(
-                snap, adds, old_files, fence=(app_id, batch_id),
-                lineage=lineage, op="merge",
-            )
-            return MergeStats(
-                skipped=False, rows_in=rows_in, touched_buckets=len(touched),
-                staged_id=sid, buckets=sorted(touched),
-            )
-        version = table.commit(
-            snap,
-            adds,
-            old_files,
-            fence=(app_id, batch_id),
-            lineage=lineage,
-            op="merge",
-        )
-        return MergeStats(
-            skipped=False, version=version, rows_in=rows_in,
-            touched_buckets=len(touched), buckets=sorted(touched),
-        )
+        return adds, old_files, per_bucket, total
     finally:
         src.unpersist()
 

@@ -27,10 +27,12 @@ IMMUTABLE — only the derived columns (``_airbyte_end_at``,
 version arrives, and both are pure functions of the key's version set
 (the next-version lag). So the batch's collapsed versions are APPENDED
 as per-bucket delta files (O(batch) per trigger, no history read at
-all) with the derived columns left NULL; ``read_scd`` re-derives them
-from the lag at scan time, and ``scd_compact`` materializes them back
-into base files (exactly the LSM treatment ``LakeTable`` gives the SCD1
-table: merge.py strategy="mor" + table.compact). NOTE: an SCD table
+all, one Spark action: the write, its per-bucket lineage read from the
+written footers) with the derived columns left NULL; ``read_scd``
+re-derives them from the lag at scan time, and ``scd_compact``
+materializes them back into base files (exactly the LSM treatment
+``LakeTable`` gives the SCD1 table: merge.py strategy="mor" +
+table.compact). NOTE: an SCD table
 carrying deltas must be folded with ``scd_compact`` (which re-windows),
 never plain ``LakeTable.compact`` (which would materialize the NULL
 derived columns as-is).
@@ -64,6 +66,7 @@ from pyspark.sql import types as T
 from ..catalog import TableSchema
 from ..operators.dedup import scd2, scd2_bounded, surrogate_key_expr
 from ..operators.skew import salted_scd2_input
+from .merge import bucket_lineage
 from .table import LakeTable, META_DELETED, META_LSN, Snapshot
 
 #: columns computed by the SCD window — everything else is carried state
@@ -153,75 +156,26 @@ def scd_merge_batch(
     new = salted_scd2_input(batch, pk, cursor)
     if post_dedup is not None:
         new = post_dedup(new)
-    new = new.withColumn("_b", table.bucket_expr(snap)).persist()
+    new = new.withColumn("_b", table.bucket_expr(snap))
+    if strategy == "mor":
+        return _scd_append_mor(
+            table, snap, new, pk, cursor, app_id, batch_id, epoch, commit_empty
+        )
+    new = new.persist()
     try:
         stats_rows = (
             new.groupBy("_b")
             .agg(F.count("*").alias("n"), F.max(F.col(cursor).cast("long")).alias("mx"))
             .collect()
         )
-        rows_in = sum(r["n"] for r in stats_rows)
-        if rows_in == 0:
-            if not commit_empty:
-                # idle-tail policy (same contract as merge_batch): leave no
-                # commit — the fence needn't advance for a zero-row trigger
-                return ScdMergeStats(skipped=False, version=None, rows_in=0)
-            version = table.commit(
-                snap, [], [], fence=(app_id, batch_id),
-                lineage=_scd_lineage(app_id, batch_id, 0, None, epoch),
-                op="scd_merge", retry_conflicts=2,
-            )
-            return ScdMergeStats(skipped=False, version=version, rows_in=0)
+        if not stats_rows:
+            return _scd_commit_empty(table, snap, app_id, batch_id, epoch, commit_empty)
         per_bucket = {
-            int(r["_b"]): {"rows": r["n"], "max_lsn": r["mx"]} for r in stats_rows
+            int(r["_b"]): {"rows": r["n"], "max_lsn": r["mx"], "deletes": 0}
+            for r in stats_rows
         }
         touched = list(per_bucket)
-        _lsns = [
-            v["max_lsn"] for v in per_bucket.values() if v["max_lsn"] is not None
-        ]
-        lineage = _scd_lineage(
-            app_id, batch_id, rows_in, max(_lsns) if _lsns else None, epoch
-        )
-        lineage["partitions"] = {
-            b: {"rows": v["rows"], "max_lsn": v["max_lsn"], "deletes": 0}
-            for b, v in per_bucket.items()
-        }
-
-        if strategy == "mor":
-            # LSM write path: append the immutable version rows; the two
-            # derived columns stay NULL until read/compaction re-derives
-            # them from the next-version lag.
-            uk = surrogate_key_expr(pk)
-            schema_cols = []
-            for fs in snap.schema.fields:
-                if fs.name == "_airbyte_unique_key":
-                    schema_cols.append(uk.cast(fs.dtype).alias(fs.name))
-                elif fs.name == "_airbyte_start_at":
-                    schema_cols.append(F.col(cursor).cast(fs.dtype).alias(fs.name))
-                elif fs.name in ("_airbyte_end_at", "_airbyte_active_row"):
-                    schema_cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
-                elif fs.name in new.columns:
-                    schema_cols.append(F.col(fs.name).cast(fs.dtype).alias(fs.name))
-                else:
-                    schema_cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
-            rows = new.select(
-                *schema_cols,
-                F.col(cursor).cast("long").alias(META_LSN),
-                F.lit(False).alias(META_DELETED),
-                F.col("_b"),
-            )
-            adds, total = table.write_data_files(
-                snap, rows, touched_buckets=len(touched), kind="delta",
-                rows_per_bucket={b: v["rows"] for b, v in per_bucket.items()},
-            )
-            version = table.commit(
-                snap, adds, [], fence=(app_id, batch_id), lineage=lineage,
-                op="scd_merge", retry_conflicts=2,
-            )
-            return ScdMergeStats(
-                skipped=False, version=version, rows_in=rows_in,
-                touched_buckets=len(touched),
-            )
+        lineage = _scd_lineage(app_id, batch_id, per_bucket, epoch)
 
         old_files = [p for p, m in snap.files.items() if m["bucket"] in set(touched)]
 
@@ -271,11 +225,82 @@ def scd_merge_batch(
             op="scd_merge",
         )
         return ScdMergeStats(
-            skipped=False, version=version, rows_in=rows_in,
+            skipped=False, version=version, rows_in=lineage["rows_in"],
             touched_buckets=len(touched),
         )
     finally:
         new.unpersist()
+
+
+def _scd_append_mor(
+    table: LakeTable,
+    snap: Snapshot,
+    new: DataFrame,
+    pk: Sequence[str],
+    cursor: str,
+    app_id: str,
+    batch_id: int,
+    epoch: Optional[int],
+    commit_empty: bool,
+) -> ScdMergeStats:
+    """LSM write path, ONE Spark action: append the immutable version rows
+    as delta files; the two derived columns stay NULL until read/compaction
+    re-derives them from the next-version lag. Per-bucket rows and cursor
+    high-watermarks come from the written files' footers (``__lsn`` is the
+    cursor); history rows are never deletes."""
+    uk = surrogate_key_expr(pk)
+    schema_cols = []
+    for fs in snap.schema.fields:
+        if fs.name == "_airbyte_unique_key":
+            schema_cols.append(uk.cast(fs.dtype).alias(fs.name))
+        elif fs.name == "_airbyte_start_at":
+            schema_cols.append(F.col(cursor).cast(fs.dtype).alias(fs.name))
+        elif fs.name in ("_airbyte_end_at", "_airbyte_active_row"):
+            schema_cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
+        elif fs.name in new.columns:
+            schema_cols.append(F.col(fs.name).cast(fs.dtype).alias(fs.name))
+        else:
+            schema_cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
+    rows = new.select(
+        *schema_cols,
+        F.col(cursor).cast("long").alias(META_LSN),
+        F.lit(False).alias(META_DELETED),
+        F.col("_b"),
+    )
+    adds, total = table.write_data_files(
+        snap, rows, touched_buckets=snap.n_buckets, kind="delta"
+    )
+    if total == 0:
+        return _scd_commit_empty(table, snap, app_id, batch_id, epoch, commit_empty)
+    lineage = _scd_lineage(app_id, batch_id, bucket_lineage(adds), epoch)
+    version = table.commit(
+        snap, adds, [], fence=(app_id, batch_id), lineage=lineage,
+        op="scd_merge", retry_conflicts=2,
+    )
+    return ScdMergeStats(
+        skipped=False, version=version, rows_in=total,
+        touched_buckets=len(lineage["partitions"]),
+    )
+
+
+def _scd_commit_empty(
+    table: LakeTable,
+    snap: Snapshot,
+    app_id: str,
+    batch_id: int,
+    epoch: Optional[int],
+    commit_empty: bool,
+) -> ScdMergeStats:
+    if not commit_empty:
+        # idle-tail policy (same contract as merge_batch): leave no
+        # commit — the fence needn't advance for a zero-row trigger
+        return ScdMergeStats(skipped=False, version=None, rows_in=0)
+    version = table.commit(
+        snap, [], [], fence=(app_id, batch_id),
+        lineage=_scd_lineage(app_id, batch_id, {}, epoch),
+        op="scd_merge", retry_conflicts=2,
+    )
+    return ScdMergeStats(skipped=False, version=version, rows_in=0)
 
 
 def _resolved_history(
@@ -436,13 +461,18 @@ def scd_compact(
     return table.commit(snap, adds, removes, op="scd_compact")
 
 
-def _scd_lineage(app_id, batch_id, rows_in, max_lsn, epoch):
-    return {
+def _scd_lineage(app_id, batch_id, per_bucket: dict, epoch):
+    rows_in = sum(v["rows"] for v in per_bucket.values())
+    lsns = [v["max_lsn"] for v in per_bucket.values() if v["max_lsn"] is not None]
+    out = {
         "app_id": app_id,
         "batch_id": batch_id,
         "rows_in": rows_in,
         "rows_upserted": rows_in,
         "rows_deleted": 0,
-        "max_lsn": max_lsn,
+        "max_lsn": max(lsns) if lsns else None,
         "epoch": epoch,
     }
+    if per_bucket:
+        out["partitions"] = per_bucket
+    return out

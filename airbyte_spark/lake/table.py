@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 import uuid
 from contextlib import contextmanager
@@ -801,40 +802,38 @@ class LakeTable:
         df: DataFrame,
         touched_buckets: Optional[int] = None,
         kind: str = "base",
-        rows_per_bucket: Optional[dict] = None,
         sort_within: Optional[Sequence[str]] = None,
-    ) -> tuple[list[dict], Optional[int]]:
+        observe: Optional[tuple] = None,
+    ) -> tuple[list[dict], int]:
         """Write rows (payload + meta cols, with ``_b`` bucket col already
         attached) under a fresh commit subdir; return (add-entries,
         total_rows).
 
-        ``touched_buckets`` (the number of distinct ``_b`` values in
-        ``df``) makes the write bucket-exact: rows hash-partition by
-        ``_b`` into ``min(touched_buckets, defaultParallelism)`` tasks, so
-        every bucket stays whole inside one task and the commit writes
-        exactly ONE file per bucket (exact per-file rows, LSN bounds and
-        blooms) with no more tasks than the cores can run at once — a
-        per-bucket task would only add launch cost, the whole of it on a
-        small micro-batch. Without it the input partitioning is kept
-        (appends / overwrites: a bucket may span several files).
+        ``touched_buckets`` (at most the number of distinct ``_b`` values
+        in ``df``; ``snap.n_buckets`` when the caller has not counted
+        them) makes the write bucket-exact: rows hash-partition by ``_b``
+        into ``min(touched_buckets, defaultParallelism)`` tasks, so every
+        bucket stays whole inside one task and the commit writes exactly
+        ONE file per bucket (exact per-file rows, LSN bounds and blooms)
+        with no more tasks than the cores can run at once — a per-bucket
+        task would only add launch cost, the whole of it on a small
+        micro-batch. Without it the input partitioning is kept (appends /
+        overwrites: a bucket may span several files).
 
-        Row counts come FROM THE WRITE JOB: either ``rows_per_bucket``
-        (the merge's stats aggregate, already computed) or an
-        ``Observation`` attached to the write plan — never from driver-side
-        parquet-footer reads. The post-write listing touches only this
-        commit's fresh subdirectory (O(files written this commit) — the
-        same driver cost any commit protocol pays), not the table.
-        ``kind`` is "base" (fully-resolved rows) or "delta" (merge-on-read
-        change files that the scan resolves by LSN)."""
-        from pyspark.sql import Observation
-
+        Every file's row count and cursor/stats-column bounds come from
+        its parquet FOOTER — one few-KB metadata read of each file this
+        commit just wrote, the same O(files written this commit) driver
+        cost as the post-write listing — never from a second Spark job.
+        ``observe`` = ``(Observation, *aggregate columns)`` rides the write
+        stage itself: it is the result stage, whose accumulator updates
+        count each task once even when tasks are retried. A write of no
+        rows leaves no files and removes its subdirectory: an empty batch
+        adds nothing to the data directory. ``kind`` is "base"
+        (fully-resolved rows) or "delta" (merge-on-read change files that
+        the scan resolves by LSN)."""
         sub = uuid.uuid4().hex
         out = os.path.join(self.path, _DATA_DIR, sub)
         writer = df
-        obs = None
-        if rows_per_bucket is None:
-            obs = Observation()
-            writer = writer.observe(obs, F.count(F.lit(1)).alias("rows"))
         if touched_buckets:
             n_tasks = min(
                 touched_buckets, self.spark.sparkContext.defaultParallelism
@@ -846,6 +845,8 @@ class LakeTable:
             # the sort columns — tight per-row-group min/max bounds, so
             # pushed-down range predicates prune inside surviving files
             writer = writer.sortWithinPartitions("_b", *sort_within)
+        if observe is not None:
+            writer = writer.observe(*observe)
         # INT96 (Spark's default parquet timestamp encoding) carries no
         # column statistics, which would silence event-time data skipping;
         # TIMESTAMP_MICROS is the modern stats-bearing encoding. The
@@ -855,14 +856,6 @@ class LakeTable:
         # silently hijacked for its OWN writes after touching a LakeTable.
         with _scoped_conf(self.spark, _TS_KEY, "TIMESTAMP_MICROS"):
             writer.write.partitionBy("_b").parquet(out, compression="zstd")
-        total: Optional[int] = None
-        if obs is not None:
-            try:
-                total = obs.get.get("rows")
-            except Exception:
-                total = None
-        elif rows_per_bucket:
-            total = sum(rows_per_bucket.values())
         per_bucket_files: dict[int, list[tuple[str, int]]] = {}
         for entry in os.scandir(out):
             if not entry.is_dir() or not entry.name.startswith("_b="):
@@ -873,8 +866,11 @@ class LakeTable:
                     per_bucket_files.setdefault(bucket, []).append(
                         (f2.path, f2.stat().st_size)
                     )
-        known = rows_per_bucket or {}
-        n_files = sum(len(v) for v in per_bucket_files.values())
+        if not per_bucket_files:
+            # nothing written (only Spark's _SUCCESS marker): the fresh,
+            # never-referenced subdir goes too
+            shutil.rmtree(out, ignore_errors=True)
+            return [], 0
         # per-bucket pk blooms for point-lookup skipping (opt-in): ONE
         # distributed columnar re-read of this commit's fresh files (pk
         # cols only — never a driver-side row scan, never a recompute of
@@ -882,22 +878,14 @@ class LakeTable:
         # Deltas/tombstones are included: a point lookup must scan every
         # file that can affect its key's MOR resolution.
         blooms: dict[int, dict] = {}
-        if snap.bloom_bits and per_bucket_files:
+        if snap.bloom_bits:
             blooms = self._bucket_blooms(out, snap)
         adds = []
+        total = 0
         for bucket, paths in per_bucket_files.items():
             for p, nbytes in paths:
-                if len(paths) == 1 and bucket in known:
-                    rows = known[bucket]
-                elif n_files == 1 and total is not None:
-                    rows = total
-                else:
-                    rows = None  # split across files unknown; totals tracked in lineage
-                # per-file cursor + stats-column bounds for read-time data
-                # skipping — ONE footer-only read of the file this commit
-                # just wrote (same O(files-this-commit) driver cost as the
-                # listing above; row counts still come from the write job)
-                st = _footer_col_stats(p, [META_LSN, *snap.stats_cols])
+                rows, st = _footer_stats(p, [META_LSN, *snap.stats_cols])
+                total += rows
                 lsn_b = st.get(META_LSN)
                 ad = {
                     "path": os.path.relpath(p, self.path),
@@ -1916,6 +1904,11 @@ class LakeTable:
         return self.spark.createDataFrame(rows, self._PARTITION_LINEAGE_SCHEMA)
 
     def lineage_df(self) -> DataFrame:
+        """One row per retained commit's lineage. ``rows_in`` counts a
+        merge's input rows after its per-key collapse; the stream has no
+        cross-batch dedup, so an event re-delivered in a later batch is
+        counted again in that batch (the fence and LSN resolution keep
+        the table itself exactly-once)."""
         snap = self.snapshot()
         rows = [
             (
@@ -2085,8 +2078,8 @@ def _stat_value(v):
     return None  # unorderable/unknown type ⇒ no bound
 
 
-def _footer_col_stats(path: str, cols: Sequence[str]) -> dict[str, tuple]:
-    """Per-file (min, max) for the requested columns from the parquet
+def _footer_stats(path: str, cols: Sequence[str]) -> tuple[int, dict[str, tuple]]:
+    """(row count, per-column (min, max)) of one parquet file from its
     FOOTER — one few-KB metadata read, no data pages touched (Delta
     collects the same stats in the write transaction; reading the footer
     the writer just produced is the PySpark-reachable equivalent).
@@ -2095,10 +2088,7 @@ def _footer_col_stats(path: str, cols: Sequence[str]) -> dict[str, tuple]:
     such files are simply never pruned on that column."""
     import pyarrow.parquet as pq
 
-    try:
-        md = pq.read_metadata(path)
-    except Exception:
-        return {}
+    md = pq.read_metadata(path)
     idx = {}
     for i in range(md.num_columns):
         nm = md.schema.column(i).name
@@ -2121,15 +2111,7 @@ def _footer_col_stats(path: str, cols: Sequence[str]) -> dict[str, tuple]:
             hi = smx if hi is None else max(hi, smx)
         if ok and lo is not None:
             out[nm] = (lo, hi)
-    return out
-
-
-def _footer_lsn_stats(path: str) -> tuple[Optional[int], Optional[int]]:
-    """Back-compat shim: (min, max) of ``__lsn`` via ``_footer_col_stats``."""
-    st = _footer_col_stats(path, [META_LSN]).get(META_LSN)
-    if st is None:
-        return None, None
-    return int(st[0]), int(st[1])
+    return md.num_rows, out
 
 
 def _typed(df: DataFrame) -> DataFrame:

@@ -29,7 +29,10 @@ class ReplayMetricsListener(StreamingQueryListener):
 
     # -- StreamingQueryListener interface ---------------------------------
     def onQueryStarted(self, event):
-        pass
+        # a reused listener waits for ITS next query: Spark delivers the
+        # started event before ``start()`` returns, so the latch from a
+        # previous query is cleared before anyone can wait on this one
+        self._terminated.clear()
 
     def onQueryProgress(self, event):
         p = event.progress
@@ -76,7 +79,9 @@ class ReplayMetricsListener(StreamingQueryListener):
         ``awaitTermination`` returns MUST wait here first: query
         termination on the driver races the async listener delivery, and
         the row most likely to be missing is the final batch's — exactly
-        the one a drift check cares about."""
+        the one a drift check cares about. The latch re-arms when the next
+        query starts, so one listener serves consecutive queries (one at a
+        time)."""
         return self._terminated.wait(timeout)
 
     # -- convenience ------------------------------------------------------

@@ -2,21 +2,34 @@
 
 Tails a WAL/binlog feed directory (ordered parquet segments ≈ Debezium's
 bounded event queue, AirbyteDebeziumHandler.java:94-130) and upserts each
-micro-batch into a LakeTable via the fenced copy-on-write MERGE:
+micro-batch into a LakeTable via the fenced MERGE:
 
     readStream(feed)
-      -> [watermarked dropDuplicatesWithinWatermark on (pk, lsn)]
       -> foreachBatch:
+           collapse to the latest event per key (pk, LSN order)
            canonicalize text (pandas UDF)
            conform to current table schema (cast / null-pad — star_intersect)
            merge_batch(...)  # fenced, atomic
 
-Exactly-once: foreachBatch is at-least-once on failure/restart; the fence
+The query has no stateful operator. Exactly-once rests on a replayable
+source, write-ahead offsets and an idempotent sink (the Structured Streaming
+model): foreachBatch is at-least-once on failure/restart; the fence
 (app_id, batch_id) recorded in the same lake commit as the data makes
 re-delivery a no-op — the Spark analog of Airbyte's committed-state contract
 (BufferedStreamConsumer.java:178-203, DefaultReplicationWorker.java:500-521).
+An event re-delivered in a LATER batch is absorbed by LSN resolution: the
+per-batch collapse, the MOR scan's max-LSN resolution, the COW merge keeping
+the target on an equal LSN, and the SCD paths' distinct (pk, cursor)
+versions. Late events are never dropped: a late event that carries its
+key's newest LSN still wins, however old its ``_airbyte_emitted_at``.
 The fence is scoped to one checkpoint lineage: a new checkpoint dir must use
 a new app_id (same contract as the reference's per-connection state).
+
+Upgrade: earlier versions put a watermarked ``dropDuplicatesWithinWatermark``
+in front of the sink, and Spark refuses to resume a checkpoint whose state
+metadata names an operator the query no longer has. ``run_replay_stream``
+therefore moves such a checkpoint's ``state/`` directory aside (renamed to
+``state.removed-dedup``, never deleted) before it starts the query.
 
 Boundedness: ``Trigger.AvailableNow`` reproduces the reference's
 "read to target position then stop" (CdcTargetPosition semantics);
@@ -25,6 +38,7 @@ Boundedness: ``Trigger.AvailableNow`` reproduces the reference's
 
 from __future__ import annotations
 
+import logging
 import os
 from dataclasses import dataclass, field
 from typing import Callable, Optional
@@ -38,6 +52,12 @@ from ..plans.replay import prepare_changes
 from ..schemas import CHANGE_META_COLS, CHANGE_STRUCT, ORDER_COLS, PK, TRANSCRIPT_STRUCT
 from ..catalog import TableSchema
 
+log = logging.getLogger(__name__)
+
+#: where ``run_replay_stream`` moves a checkpoint's state of the removed
+#: watermark dedup
+REMOVED_DEDUP_STATE = "state.removed-dedup"
+
 
 @dataclass
 class ReplayConfig:
@@ -48,6 +68,9 @@ class ReplayConfig:
     max_files_per_trigger: Optional[int] = None
     max_bytes_per_trigger: Optional[str] = None
     canonicalize: bool = True
+    #: DEPRECATED, inert: the stateful watermark dedup is gone (the sink
+    #: is idempotent on (pk, LSN) — module docstring). Both fields are
+    #: accepted so existing callers keep working; they select nothing.
     watermark_dedup: bool = True
     watermark: str = "2 hours"
     #: "cow" rewrites touched buckets per batch (read-optimized);
@@ -373,6 +396,11 @@ def _process_batch(
     dedup_ctx: Optional[tuple] = None,
     emb_ctx: Optional[tuple] = None,
 ):
+    # a feed without some of the ordering columns (e.g. no
+    # _airbyte_emitted_at) orders by the ones it has
+    feed_cols = {f.name for f in cfg.feed_struct.fields}
+    order_cols = [c for c in ORDER_COLS if c in feed_cols]
+
     def _apply(
         batch_df: DataFrame, app_id: str, batch_id: int, commit_empty: bool
     ):
@@ -400,10 +428,10 @@ def _process_batch(
             from ..lake.quality import audited_merge_batch
 
             stats = audited_merge_batch(
-                table, batch_df, ORDER_COLS, **cfg.audit_tests, **merge_kwargs
+                table, batch_df, order_cols, **cfg.audit_tests, **merge_kwargs
             )
         else:
-            stats = merge_batch(table, batch_df, ORDER_COLS, **merge_kwargs)
+            stats = merge_batch(table, batch_df, order_cols, **merge_kwargs)
         if scd_table is not None:
             # AFTER the (possibly audited) main merge: an audit-failed
             # batch must abort before ANY table sees it — committing the
@@ -435,7 +463,7 @@ def _process_batch(
                 child_specs,
                 batch_df,
                 PK,
-                ORDER_COLS,
+                order_cols,
                 stream_name=cfg.stream_name,
                 app_id=app_id,
                 batch_id=batch_id,
@@ -500,13 +528,9 @@ def _process_batch(
                 table, tail_dst,
                 app_id=cfg.tail_app_id or f"{cfg.app_id}-tail",
             )
-        if stats.skipped:
-            # fenced re-delivery: still drain every partition so the upstream
-            # stateful operator (dropDuplicatesWithinWatermark) can commit its
-            # state stores — Spark validates this since 4.x
-            batch_df.write.format("noop").mode("overwrite").save()
-        elif (
-            cfg.compact_every_batches
+        if (
+            not stats.skipped
+            and cfg.compact_every_batches
             and (batch_id + 1) % cfg.compact_every_batches == 0
         ):
             # single-writer window between merges: safe to fold; the grace
@@ -553,6 +577,23 @@ def _process_batch(
 
     process.apply_batch = _apply  # snapshot-chunk drain reuses the pipeline
     return process
+
+
+def _set_aside_dedup_state(checkpoint_dir: str) -> None:
+    """Move a checkpoint's ``state/`` aside (rename, never delete). The
+    query has no stateful operator, so that directory can only hold the
+    state of the removed watermark dedup; left in place, Spark would
+    refuse to resume (STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_
+    METADATA)."""
+    state = os.path.join(checkpoint_dir, "state")
+    if not os.path.isdir(state):
+        return
+    dst = os.path.join(checkpoint_dir, REMOVED_DEDUP_STATE)
+    os.rename(state, dst)
+    log.warning(
+        "checkpoint %s: moved the removed watermark dedup's state to %s",
+        checkpoint_dir, dst,
+    )
 
 
 def run_replay_stream(
@@ -650,6 +691,7 @@ def run_replay_stream(
         )
         snapshot_ctx = (plan, snap_source)
     os.makedirs(cfg.checkpoint_dir, exist_ok=True)
+    _set_aside_dedup_state(cfg.checkpoint_dir)
 
     reader = spark.readStream.schema(cfg.feed_struct)
     if cfg.max_files_per_trigger:
@@ -678,20 +720,6 @@ def run_replay_stream(
             raise ValueError(f"drift_cols not in feed_struct: {missing}")
         obs_cols.extend(profile_cols(cfg.drift_cols))
     stream = stream.observe("replay_feed", *obs_cols)
-
-    if cfg.watermark_dedup:
-        feed_cols = {f.name for f in cfg.feed_struct.fields}
-        if "_airbyte_emitted_at" not in feed_cols:
-            raise ValueError(
-                "watermark_dedup=True needs an '_airbyte_emitted_at' column "
-                "in feed_struct (the dedup watermark's event time); add the "
-                "column or pass ReplayConfig(watermark_dedup=False) — the "
-                "merge itself stays idempotent without it"
-            )
-        # cross-batch duplicate suppression before the merge even sees the
-        # rows; the merge stays idempotent regardless (defense in depth)
-        stream = stream.withWatermark("_airbyte_emitted_at", cfg.watermark)
-        stream = stream.dropDuplicatesWithinWatermark([*PK, "_ab_cdc_lsn"])
 
     writer = (
         stream.writeStream.foreachBatch(

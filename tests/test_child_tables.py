@@ -305,7 +305,8 @@ def test_merge_children_randomized_against_feed_oracle(
     late/ahead deliveries cross batch boundaries) must converge to exactly
     the unnest of the final live parent state, at every nesting level —
     under BOTH write strategies (COW bucket rewrites; MOR delta appends
-    resolved at scan, then folded by compact)."""
+    resolved at scan, then folded by compact) — and stay there when a
+    later batch re-delivers earlier batches' events."""
     src = tmp_path_factory.mktemp("childrand")
     generate_feed(str(src), FeedSpec(
         n_convs=15, turns_per_conv=3, n_updates=120, n_deletes=18,
@@ -345,6 +346,18 @@ def test_merge_children_randomized_against_feed_oracle(
             tables[s["name"]].compact()
             tables[s["name"]].vacuum()
             _assert_df_equal(tables[s["name"]].read(), expected[s["name"]])
+    # cross-batch re-delivery: a later batch carries verbatim copies of
+    # batches 0 and 5 (under mor both were folded above); nothing drops
+    # them before the sink, which must absorb them
+    again = raw.filter(
+        F.pmod(F.xxhash64(F.col("_ab_cdc_lsn") * 2654435761), F.lit(6)).isin(0, 5)
+    )
+    merge_children_batch(
+        tables, specs, again, PK, ORDER_COLS, stream_name="transcripts",
+        app_id="rand", batch_id=6, strategy=strategy,
+    )
+    for s in specs:
+        _assert_df_equal(tables[s["name"]].read(), expected[s["name"]])
 
 
 def test_streaming_sync_persists_children_exactly_once(

@@ -45,3 +45,38 @@ def test_listener_counts_match_feed(spark, tmp_path, tmp_path_factory):
         assert obs["max_lsn_obs"] == int(lin["max_lsn"].max())
     finally:
         detach(spark, lst)
+
+
+def test_listener_reused_across_two_queries_waits_for_the_second(
+    spark, tmp_path
+):
+    """One listener, two consecutive queries: once the second query has
+    started, ``wait_terminated`` must block until THAT query ends, not
+    return on the first query's latch."""
+    feed = tmp_path / "feed"
+    spark.range(10).write.parquet(str(feed))
+    schema = spark.read.parquet(str(feed)).schema
+    lst = attach(spark)
+    try:
+        def start(name, **trigger):
+            return (
+                spark.readStream.schema(schema).parquet(str(feed))
+                .writeStream.format("noop").queryName(name)
+                .option("checkpointLocation", str(tmp_path / name))
+                .trigger(**trigger).start()
+            )
+
+        q1 = start("first", availableNow=True)
+        assert q1.awaitTermination(120)
+        assert lst.wait_terminated(30)
+        q2 = start("second", processingTime="1 second")
+        deadline = time.time() + 120
+        while lst.totals(name="second")["rows"] < 10:
+            assert time.time() < deadline, "second query made no progress"
+            time.sleep(0.2)
+        assert not lst.wait_terminated(0.5)  # q2 still runs
+        q2.stop()
+        assert lst.wait_terminated(30)
+        assert not q2.isActive
+    finally:
+        detach(spark, lst)

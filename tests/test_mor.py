@@ -125,9 +125,14 @@ def test_mor_streaming_autocompact(spark, tmp_path, tmp_path_factory):
     table = LakeTable(spark, cfg.table_path)
     assert_same(table.read(), oracle_final_state(ev, canonicalize=canonicalize_pandas))
     # folds happened mid-stream: base files exist; delta backlog is bounded
-    kinds = [m["kind"] for m in table.snapshot().files.values()]
-    assert "base" in kinds
-    assert kinds.count("delta") <= 2  # at most compact_every-1 un-folded batches
+    files = table.snapshot().files
+    assert "base" in {m["kind"] for m in files.values()}
+    # at most compact_every-1 un-folded batches: every live delta file was
+    # written by one commit (its data/<commit subdir>/_b=k/ path)
+    delta_commits = {
+        p.split("/")[1] for p, m in files.items() if m["kind"] == "delta"
+    }
+    assert len(delta_commits) <= 1
 
 
 def test_mor_lsn_tie_is_deterministic_and_matches_cow(spark, tmp_path):
@@ -301,3 +306,96 @@ def test_mor_write_one_file_per_bucket_in_core_sized_tasks(
     assert {m["kind"] for m in snap.files.values()} == {"base"}
     assert sorted(m["bucket"] for m in snap.files.values()) == sorted(expected)
     assert resolved() == before
+
+
+def test_mor_merge_is_one_action_with_exact_bucket_lineage(
+    spark, tmp_path, monkeypatch
+):
+    """With AQE off (so every job is one action, not an AQE query stage), a
+    MOR merge launches exactly ONE Spark job — its write — and persists
+    nothing. Its lineage ``partitions`` (rows, max_lsn, deletes per bucket)
+    equal a groupBy("_b") over the collapsed batch, and an empty batch
+    leaves no data subdirectory behind."""
+    import datetime as dt
+    import os
+    import uuid
+
+    from pyspark.sql import DataFrame
+
+    from airbyte_spark.operators.dedup import latest_per_key
+
+    sc = spark.sparkContext
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), TableSchema.from_struct(TRANSCRIPT_STRUCT),
+        primary_key=list(PK), bucket_cols=["conv_id"], n_buckets=8,
+    )
+    ts = dt.datetime(2025, 1, 1)
+    # 30 keys, in-batch duplicates and superseded versions, every 4th
+    # key's winner a delete
+    rows = []
+    for c in range(15):
+        for t in range(2):
+            k = 2 * c + t
+            lsn = 1000 + 10 * k
+            rows.append((f"conv-{c}", t, "user", "old", None, ts, lsn, ts, None, ts))
+            rows.append((f"conv-{c}", t, "user", "new", None, ts, lsn + 1, ts,
+                         ts if k % 4 == 0 else None, ts))
+            rows.append(rows[-1])
+    batch = spark.createDataFrame(rows, schema=CHANGE_STRUCT)
+
+    persisted = []
+    for name in ("persist", "cache"):
+        orig_fn = getattr(DataFrame, name)
+
+        def spy(self, *a, _orig=orig_fn, **kw):
+            persisted.append(self)
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+
+    group = f"mor-merge-{uuid.uuid4().hex}"
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, "one MOR merge")
+    try:
+        stats = merge_batch(table, batch, ORDER_COLS, batch_id=0, strategy="mor")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert persisted == []
+
+    snap = table.snapshot()
+    want = {
+        r["_b"]: {"rows": r["n"], "max_lsn": r["mx"], "deletes": r["nd"]}
+        for r in latest_per_key(batch, PK, ORDER_COLS)
+        .withColumn("_b", table.bucket_expr(snap))
+        .groupBy("_b")
+        .agg(
+            F.count("*").alias("n"),
+            F.max("_ab_cdc_lsn").alias("mx"),
+            F.sum(F.col("_ab_cdc_deleted_at").isNotNull().cast("long")).alias("nd"),
+        )
+        .collect()
+    }
+    (entry,) = [x for x in snap.lineage if x.get("batch_id") == 0]
+    got = {int(b): v for b, v in entry["partitions"].items()}
+    assert got == want
+    assert entry["rows_in"] == stats.rows_in == 30
+    assert entry["rows_deleted"] == sum(v["deletes"] for v in want.values()) > 0
+    assert entry["max_lsn"] == max(v["max_lsn"] for v in want.values())
+    assert stats.touched_buckets == len(want)
+
+    data_dir = os.path.join(table.path, "data")
+    subdirs = set(os.listdir(data_dir))
+    empty = spark.createDataFrame([], schema=CHANGE_STRUCT)
+    stats = merge_batch(table, empty, ORDER_COLS, batch_id=1, strategy="mor")
+    assert stats.rows_in == 0 and stats.version is not None
+    assert set(os.listdir(data_dir)) == subdirs
+    assert table.snapshot().fences["default"] == 1
+    stats = merge_batch(
+        table, empty, ORDER_COLS, batch_id=2, strategy="mor", commit_empty=False
+    )
+    assert stats.version is None
+    assert set(os.listdir(data_dir)) == subdirs
+    assert table.snapshot().fences["default"] == 1

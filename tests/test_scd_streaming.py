@@ -6,7 +6,10 @@ scd2() over the whole feed's distinct versions — including late events,
 deletes, duplicates and hot-key skew (reference stream_processor.py:892-942
 incremental SCD semantics)."""
 
+import dataclasses
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from airbyte_spark.feedgen import FeedSpec, generate_feed
@@ -519,7 +522,8 @@ def test_streaming_cow_scd_is_vacuumed(spark, tmp_path, tmp_path_factory):
     too (not only for strategy='mor') — otherwise one full bucket-rewrite
     per micro-batch accumulates forever."""
     feed = tmp_path_factory.mktemp("scdvac")
-    generate_feed(str(feed), SPEC)
+    # 4 segments, one per batch: the last batch runs a maintenance cycle
+    generate_feed(str(feed), dataclasses.replace(SPEC, n_segments=4))
     cfg = ReplayConfig(
         feed_dir=str(feed),
         table_path=str(tmp_path / "tbl"),
@@ -554,3 +558,52 @@ def test_scd_table_matches_main_bucket_count(spark, tmp_path, tmp_path_factory):
     )
     run_replay_stream(spark, cfg)
     assert LakeTable(spark, cfg.scd_table_path).snapshot().n_buckets == 4
+
+
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_streaming_cross_batch_redelivery_matches_oracles(
+    spark, tmp_path, tmp_path_factory, strategy
+):
+    """Nothing upstream of the sink drops re-delivered events: the last
+    WAL segment carries verbatim copies of segment 0 (folded by the
+    compaction after batch 2) and of segment 3 (batch 3's deltas, not yet
+    folded). The main table and the SCD history, both under ``strategy``,
+    end equal to their oracles, and the main table's lineage counts the
+    re-delivered keys in the last batch's ``rows_in``."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from airbyte_spark.feedgen import oracle_final_state
+    from airbyte_spark.functions.text import canonicalize_pandas
+    from airbyte_spark.lake.scd import read_scd
+    from tests.util import assert_same
+
+    feed = str(tmp_path_factory.mktemp("scdredeliver"))
+    ev = generate_feed(feed, dataclasses.replace(SPEC, n_segments=4))
+    segs = sorted(os.listdir(feed))
+    again = pa.concat_tables([pq.read_table(f"{feed}/{n}") for n in (segs[0], segs[3])])
+    pq.write_table(again, f"{feed}/segment-00004.parquet")
+    for i, name in enumerate(sorted(os.listdir(feed))):
+        os.utime(os.path.join(feed, name), (1_000_000_000 + i,) * 2)
+    cfg = ReplayConfig(
+        feed_dir=feed,
+        table_path=str(tmp_path / "tbl"),
+        checkpoint_dir=str(tmp_path / "ck"),
+        scd_table_path=str(tmp_path / "tbl_scd"),
+        max_files_per_trigger=1,
+        strategy=strategy,
+        scd_strategy=strategy,
+        compact_every_batches=3,
+    )
+    run_replay_stream(spark, cfg)
+
+    main = LakeTable(spark, cfg.table_path)
+    assert_same(main.read(), oracle_final_state(ev, canonicalize=canonicalize_pandas))
+    _assert_df_equal(
+        read_scd(LakeTable(spark, cfg.scd_table_path)), _batch_scd(spark, feed)
+    )
+    (last,) = [x for x in main.snapshot().lineage if x.get("batch_id") == 4]
+    keys = zip(again["conv_id"].to_pylist(), again["turn_idx"].to_pylist())
+    assert last["rows_in"] == len(set(keys))

@@ -109,26 +109,139 @@ def test_crash_between_sink_commit_and_checkpoint(spark, tmp_path, feed_dir):
     assert_same(table.read(), _oracle(ev))
 
 
-def test_watermark_dedup_requires_emitted_at_column(spark, tmp_path):
-    """A custom feed_struct without '_airbyte_emitted_at' + the default
-    watermark_dedup=True must fail fast with a clear error naming the
-    knob, not an opaque AnalysisException at query start."""
+def _copy_segments(src_dir, dst_dir, names):
+    """Land WAL segments in a tailed directory with strictly increasing
+    modification times, so the file source takes them in order."""
+    os.makedirs(dst_dir, exist_ok=True)
+    for name in names:
+        shutil.copy(os.path.join(src_dir, name), os.path.join(dst_dir, name))
+    _order_mtimes(dst_dir)
+
+
+def _order_mtimes(feed):
+    for i, name in enumerate(sorted(os.listdir(feed))):
+        t = 1_000_000_000 + i
+        os.utime(os.path.join(feed, name), (t, t))
+
+
+def test_feed_without_emitted_at_replays_to_oracle(spark, tmp_path, feed_dir):
+    """No column of the feed is required beyond pk, LSN and the payload:
+    a feed without '_airbyte_emitted_at' replays with the default config
+    and orders events by the ordering columns it has."""
+    import pyarrow.parquet as pq
     import pyspark.sql.types as T
 
     from airbyte_spark.schemas import CHANGE_STRUCT
 
+    d, ev = feed_dir
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    for name in sorted(os.listdir(d)):
+        tbl = pq.read_table(os.path.join(d, name))
+        pq.write_table(tbl.drop(["_airbyte_emitted_at"]), str(feed / name))
+    _order_mtimes(str(feed))
     struct = T.StructType(
         [f for f in CHANGE_STRUCT.fields if f.name != "_airbyte_emitted_at"]
     )
-    os.makedirs(tmp_path / "feed", exist_ok=True)
     cfg = ReplayConfig(
-        feed_dir=str(tmp_path / "feed"),
+        feed_dir=str(feed),
         table_path=str(tmp_path / "tbl"),
         checkpoint_dir=str(tmp_path / "ck"),
         feed_struct=struct,
+        max_files_per_trigger=3,
     )
-    with pytest.raises(ValueError, match="_airbyte_emitted_at"):
-        run_replay_stream(spark, cfg)
+    run_replay_stream(spark, cfg)
+    assert_same(LakeTable(spark, cfg.table_path).read(), _oracle(ev))
+
+
+@pytest.mark.filterwarnings("ignore:The behavior of DataFrame concatenation")
+def test_late_event_with_newest_lsn_is_applied(spark, tmp_path, feed_dir):
+    """An update carrying its key's highest LSN but an '_airbyte_emitted_at'
+    3 h older than the newest event of an earlier segment — later than an
+    event-time watermark of 2 h — still lands: the table ends exactly as
+    the oracle says. A watermarked dedup in front of the sink dropped it
+    (Spark drops events behind the watermark of two batches back, so the
+    late segment comes several batches after the first one)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d, ev = feed_dir
+    feed = str(tmp_path / "feed")
+    segs = sorted(os.listdir(d))
+    _copy_segments(d, feed, segs)
+    key = ev.iloc[0]
+    late = ev[(ev.conv_id == key.conv_id) & (ev.turn_idx == key.turn_idx)].tail(1).copy()
+    late["text"] = "late but newest"
+    late["_ab_cdc_lsn"] = int(ev["_ab_cdc_lsn"].max()) + 1
+    late["_ab_cdc_deleted_at"] = pd.NaT
+    seg0 = pd.read_parquet(os.path.join(d, segs[0]))
+    late["_airbyte_emitted_at"] = seg0["_airbyte_emitted_at"].max() - pd.Timedelta(hours=3)
+    schema = pq.read_schema(os.path.join(d, segs[0]))
+    pq.write_table(
+        pa.Table.from_pandas(late[schema.names], schema=schema, preserve_index=False),
+        os.path.join(feed, "segment-99999.parquet"),
+    )
+    _order_mtimes(feed)
+    cfg = ReplayConfig(
+        feed_dir=feed,
+        table_path=str(tmp_path / "tbl"),
+        checkpoint_dir=str(tmp_path / "ck"),
+        max_files_per_trigger=3,  # 2 batches of the feed, then the late one
+    )
+    run_replay_stream(spark, cfg)
+    table = LakeTable(spark, cfg.table_path)
+    want = _oracle(pd.concat([ev, late[ev.columns]], ignore_index=True))
+    assert (want.text == "late but newest").sum() == 1
+    assert_same(table.read(), want)
+    assert table.lineage_df().count() == 3
+
+
+def test_resume_checkpoint_written_with_watermark_dedup(spark, tmp_path, feed_dir):
+    """Upgrade path: the first half of the feed is written by a query that
+    still puts the removed watermark dedup in front of the same sink; the
+    resume through ``run_replay_stream`` moves the dedup's state aside
+    (renamed, not deleted), finishes the feed to the oracle, and applies
+    every batch exactly once."""
+    from airbyte_spark.streaming.runner import (
+        REMOVED_DEDUP_STATE,
+        _process_batch,
+        bootstrap_table,
+    )
+    from airbyte_spark.schemas import PK
+
+    d, ev = feed_dir
+    staged = str(tmp_path / "staged_feed")
+    segs = sorted(os.listdir(d))
+    _copy_segments(d, staged, segs[:3])
+    cfg = ReplayConfig(
+        feed_dir=staged,
+        table_path=str(tmp_path / "table"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        max_files_per_trigger=2,
+    )
+    table = bootstrap_table(spark, cfg.table_path)
+    old = (
+        spark.readStream.schema(cfg.feed_struct)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(f"{staged}/*.parquet")
+        .withWatermark("_airbyte_emitted_at", "2 hours")
+        .dropDuplicatesWithinWatermark([*PK, "_ab_cdc_lsn"])
+        .writeStream.foreachBatch(_process_batch(table, cfg))
+        .option("checkpointLocation", cfg.checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert old.awaitTermination(300)
+    state = tmp_path / "ckpt" / "state"
+    assert state.is_dir()
+
+    _copy_segments(d, staged, segs[3:])
+    run_replay_stream(spark, cfg)
+    assert not state.exists()
+    assert (tmp_path / "ckpt" / REMOVED_DEDUP_STATE).is_dir()
+    assert_same(table.read(), _oracle(ev))
+    lin = table.lineage_df().toPandas()
+    assert lin["batch_id"].is_unique
 
 
 def test_stream_enrich_hook_applies_to_both_tables(spark, tmp_path, feed_dir):
