@@ -1,16 +1,16 @@
 """Driver contract: entry / queries / oracle_sql.
 
-Every implemented operator family from SURVEY.md §2 plus the training-data
-pipeline ops has an entry here, each with a DuckDB oracle that mirrors the
-Spark semantics *exactly* (same md5-based hashing, same double-precision
-left-to-right folds, same rounding, same tiebreaks) so row-count + schema +
-value-hash all match.
+Every implemented operator family from SURVEY.md §2 has an entry here,
+each with a DuckDB oracle that mirrors the Spark semantics *exactly* (same
+md5-based hashing, same double-precision left-to-right folds, same
+rounding, same tiebreaks) so row-count + schema + value-hash all match.
 
-Naming convention: cdc_* = replication/ingest operators (SURVEY §2.1-2.5),
-text_* / dedup_* / ann_* / multimodal_* = training-data pipeline operators.
-Streaming/exactly-once/schema-evolution operators that are not expressible
-as a (spark, sf_dir) -> DataFrame are covered by tests/ instead (see
-tests/test_streaming_replay.py, tests/test_lake_merge.py).
+Naming convention: cdc_* = replication/ingest operators (SURVEY §2.1-2.5);
+text_* and pipeline_* = the paper's text canonicalizer and core-Spark
+passes over the documents table. Streaming/exactly-once/schema-evolution
+operators that are not expressible as a (spark, sf_dir) -> DataFrame are
+covered by tests/ instead (see tests/test_streaming_replay.py,
+tests/test_lake_merge.py).
 """
 
 from __future__ import annotations
@@ -38,16 +38,6 @@ from airbyte_spark.sources.declarative import (
 )
 from airbyte_spark.functions.text import canonicalize_udf
 from airbyte_spark.functions.names import canonicalize_identifier_udf, resolve_collisions
-from airbyte_spark.ops import dedup_docs, embeddings as emb_ops, text_analysis
-from airbyte_spark.ops import lines as line_ops
-from airbyte_spark.ops.curation import EMAIL_RE as EMAIL_RE_SQL, PHONE_RE as PHONE_RE_SQL
-from airbyte_spark.ops.hashing import h60, h60_sql
-from airbyte_spark.ops.multimodal import (
-    attach_fake_payload,
-    attach_synthetic_media,
-    decode_media_features,
-    extract_media_meta,
-)
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -1192,7 +1182,7 @@ def q_cdc_name_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Text analysis / canonicalization
+# Text canonicalization
 # ---------------------------------------------------------------------------
 
 
@@ -1203,402 +1193,6 @@ def q_text_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         canonicalize_udf(F.col("text")).alias("canon_text"),
-    )
-
-
-def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.language_id(_t(spark, sf_dir, "documents"))
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.quality_score(_t(spark, sf_dir, "documents"))
-
-
-def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.token_count(_t(spark, sf_dir, "documents"))
-
-
-def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.fingerprint(_t(spark, sf_dir, "documents"))
-
-
-def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition filters (dup-token fraction, top-bigram /
-    top-trigram fraction, composite flag) — map-only per-row array folds,
-    zero shuffle at any scale."""
-    return text_analysis.repetition_scores(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring dedup at window granularity (Lee et al. 2022
-    reduction): per doc, the fraction of 10-token windows whose hash
-    occurs >= 2 times corpus-wide. Inverted-index shape — one hash agg on
-    the window hash, O(total tokens) shuffle, no joins that fan out."""
-    return dedup_docs.exact_substring_dups(_t(spark, sf_dir, "documents"))
-
-
-#: boilerplate lines injected for the line-level curation queries (the
-#: corpus is newline-free word salad, so lines are synthesized
-#: deterministically — SAME synthesis in the oracle, like text_pii_redact)
-_BOILER_NAV = "subscribe to our newsletter for daily updates"
-_BOILER_FOOTER = "all rights reserved by the publisher"
-_BOILER_JS = "please enable javascript to continue viewing this page."
-_BOILER_SHORT = "short line here."
-_LINE_WORDS = 5
-
-
-def _synth_lines(punct: bool) -> "F.Column":
-    """array<string> of 5-token lines from the whitespace tokens of
-    ``text``; with ``punct`` each line gains a terminal '.' when
-    h60(doc_id:idx) % 4 != 0 (so ~75% pass C4's punctuation rule)."""
-    toks = text_analysis.tokens(F.col("text"))
-    n_lines = F.greatest(
-        F.ceil(F.size(toks) / F.lit(_LINE_WORDS)).cast("int"), F.lit(1)
-    )
-
-    def mk(i):
-        base = F.array_join(
-            F.slice(toks, i * F.lit(_LINE_WORDS) + F.lit(1), F.lit(_LINE_WORDS)),
-            " ",
-        )
-        if punct:
-            mark = (
-                h60(
-                    F.concat(
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        i.cast("string"),
-                    )
-                )
-                % 4
-                != 0
-            )
-            base = F.concat(base, F.when(mark, F.lit(".")).otherwise(F.lit("")))
-        return base
-
-    return F.transform(F.sequence(F.lit(0), n_lines - F.lit(1)), mk)
-
-
-def q_text_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style per-line quality filtering (Raffel et al. 2020 §2.2):
-    min-words + terminal-punctuation + boilerplate-marker rules as pure
-    array-lambda predicates — scan -> project, zero shuffle, zero explode.
-    Rule-exercising lines are injected deterministically: doc_id % 5 == 0
-    gains a 'javascript' marker line (punctuated but marked), doc_id % 7
-    == 0 a 3-word line (fails min-words)."""
-    d = _t(spark, sf_dir, "documents")
-    arr = _synth_lines(punct=True)
-    arr = F.when(
-        F.col("doc_id") % 5 == 0, F.concat(F.array(F.lit(_BOILER_JS)), arr)
-    ).otherwise(arr)
-    arr = F.when(
-        F.col("doc_id") % 7 == 0, F.concat(arr, F.array(F.lit(_BOILER_SHORT)))
-    ).otherwise(arr)
-    lined = d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.array_join(arr, "\n").alias("text"),
-    )
-    return line_ops.c4_line_filter(lined)
-
-
-def q_dedup_line_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RefinedWeb-style corpus-level line dedup (Penedo et al. 2023 §3.3):
-    lines whose normalized form occurs >= 10 times corpus-wide are
-    boilerplate and are removed from every doc. Nav/footer boilerplate is
-    injected on doc_id % 3 / % 4 so the threshold path is exercised; the
-    plan is ONE hash agg on the line hash + an occurrences x 1 count join
-    — hot boilerplate keys collapse map-side, never a fanout join."""
-    d = _t(spark, sf_dir, "documents")
-    arr = _synth_lines(punct=False)
-    arr = F.when(
-        F.col("doc_id") % 3 == 0, F.concat(F.array(F.lit(_BOILER_NAV)), arr)
-    ).otherwise(arr)
-    arr = F.when(
-        F.col("doc_id") % 4 == 0, F.concat(arr, F.array(F.lit(_BOILER_FOOTER)))
-    ).otherwise(arr)
-    lined = d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.array_join(arr, "\n").alias("text"),
-    )
-    return line_ops.line_corpus_dedup(lined)
-
-
-def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup: IVF-cell clustering + within-cell cosine >= threshold
-    drops every vector with a smaller-id near-semantic twin. Candidates
-    only meet inside a (capped) cell — never an all-pairs join."""
-    return emb_ops.semantic_dedup(_t(spark, sf_dir, "embeddings"))
-
-
-def q_sample_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Target-token-mixture downsampling (50/30/20 en/de/fr by tokens):
-    per-domain acceptance rates from one tiny totals aggregate, applied
-    as per-row hash sampling — corpus side is a single scan."""
-    from airbyte_spark.ops.curation import domain_mixture_sample
-
-    return domain_mixture_sample(
-        _t(spark, sf_dir, "documents"), {"en": 0.5, "de": 0.3, "fr": 0.2}
-    )
-
-
-def q_sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance sampling (Xie et al. 2023): hashed-bigram unigram
-    models of a target set (doc_id % 11 == 0, the decontaminate
-    convention) and the remaining corpus; per-doc importance log-weight
-    as an exact micro-unit integer sum (order-free — see
-    curation._q6ln), 256-row distributions broadcast everywhere."""
-    from airbyte_spark.ops.curation import dsir_scores
-
-    d = _t(spark, sf_dir, "documents")
-    target = d.filter(F.col("doc_id") % 11 == 0)
-    corpus = d.filter(F.col("doc_id") % 11 != 0)
-    return dsir_scores(corpus, target)
-
-
-def q_text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction over documents with deterministic synthetic PII
-    injected first (the corpus itself is PII-free word salad): every
-    doc_id % 7 == 0 gains an email, % 7 == 3 a phone number — the SAME
-    injection runs in the oracle, so the redaction (not the fixture) is
-    what the hash compares."""
-    from airbyte_spark.ops.curation import redact_pii
-
-    d = _t(spark, sf_dir, "documents")
-    injected = d.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(
-                    F.lit(" contact user"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@example.com now"),
-                ),
-            )
-            .when(
-                F.col("doc_id") % 7 == 3,
-                F.concat(
-                    F.lit(" call +1 (555) 010-"),
-                    F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-                ),
-            )
-            .otherwise(F.lit("")),
-        ),
-    )
-    return redact_pii(injected)
-
-
-def q_dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: corpus = documents with doc_id % 11 != 0,
-    benchmark (the held-out eval set) = the rest; count 4-gram overlaps."""
-    from airbyte_spark.ops.curation import decontaminate
-
-    d = _t(spark, sf_dir, "documents")
-    return decontaminate(
-        d.filter(F.col("doc_id") % 11 != 0),
-        d.filter(F.col("doc_id") % 11 == 0),
-        n=4,
-    )
-
-
-def q_sample_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from airbyte_spark.ops.curation import stratified_split
-
-    return stratified_split(_t(spark, sf_dir, "documents"))
-
-
-def q_sample_per_stratum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from airbyte_spark.ops.curation import sample_per_stratum
-
-    return sample_per_stratum(_t(spark, sf_dir, "documents"), k=20)
-
-
-def q_text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from airbyte_spark.ops.curation import pack_sequences
-
-    return pack_sequences(_t(spark, sf_dir, "documents"), budget=2048, n_shards=8)
-
-
-# ---------------------------------------------------------------------------
-# Dedup ladder
-# ---------------------------------------------------------------------------
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_docs.exact_dedup(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_docs.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_docs.minhash_lsh_candidates(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL corpus near-dup detection (ops/dedup_index.py): the
-    documents table arrives in three increments; each is flagged against a
-    persistent LakeTable MinHash-LSH band index (intra-batch self-join +
-    batch-vs-accepted-corpus equi-join with a pushed IN-filter on
-    band_key), then fence-appended. Union of the three per-increment flag
-    sets must equal the ONE-SHOT batch candidate set exactly — pairs and
-    shared_bands counts — so this shares dedup_minhash_lsh's oracle. At
-    10^10 docs this is the only dedup shape that works: O(batch +
-    matched-buckets) per ingest instead of O(corpus)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from airbyte_spark.ops.dedup_index import bootstrap_dedup_index, flag_and_ingest
-
-    docs = _t(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="airbyte_spark_q_dedupidx_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    index = bootstrap_dedup_index(spark, path, n_buckets=8)
-    parts = []
-    for i in range(3):
-        inc = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i)
-        parts.append(
-            flag_and_ingest(index, inc, app_id="oracle-dedup-index", batch_id=i)
-        )
-    out = parts[0].unionByName(parts[1]).unionByName(parts[2])
-    return out.select(
-        F.col("doc_a").cast("long").alias("doc_a"),
-        F.col("doc_b").cast("long").alias("doc_b"),
-        F.col("shared_bands"),
-    )
-
-
-def q_dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS from MinHash-LSH candidate pairs — the step every
-    curation pipeline runs after pair generation (keep one canonical doc
-    per component, not per pair). Spark side: iterative min-label
-    propagation with pointer jumping (`ops/graph.py::connected_components`
-    — O(log diameter) rounds, each round two equi-joins + a hash agg over
-    (node, comp) longs, lineage truncated per round). Isolated documents
-    are their own cluster. Oracle: DuckDB recursive CTE computing min
-    reachable id over the same band-bucket pair set."""
-    from airbyte_spark.ops.graph import connected_components
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup_docs.minhash_lsh_candidates(docs)
-    cc = connected_components(
-        docs.select(F.col("doc_id").cast("long").alias("node")),
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-    )
-    return cc.select(
-        F.col("node").cast("long").alias("doc_id"),
-        F.col("component").cast("long").alias("cluster_id"),
-    )
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs form — retained as the small-corpus verifier tier."""
-    return dedup_docs.simhash_pairs(_t(spark, sf_dir, "documents"), max_hamming=1)
-
-
-def q_dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale path: block-permutation banding (C(6,3) = 20 tables keyed on
-    30-bit block concatenations, Manku WWW'07) -> (band_idx, band_val)
-    equi-join; exact recall for hamming ≤ 3, no cartesian anywhere, and
-    bucket occupancy bounded at ~n/2^30 random collisions per table."""
-    return dedup_docs.simhash_banded_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=3
-    )
-
-
-def q_dedup_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SimHash half of the incremental-index story
-    (ops/dedup_index.py::simhash_flag_and_ingest): three fenced increments
-    against a persistent block-permutation index; union of the
-    per-increment flags must equal the one-shot banded self-join exactly
-    (block-permutation recall is exact for hamming ≤ 3 over 6 blocks), so
-    it shares dedup_simhash_banded's oracle."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from airbyte_spark.ops.dedup_index import (
-        bootstrap_simhash_index,
-        simhash_flag_and_ingest,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="airbyte_spark_q_simidx_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    index = bootstrap_simhash_index(spark, path, n_buckets=8)
-    parts = []
-    for i in range(3):
-        inc = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i)
-        parts.append(
-            simhash_flag_and_ingest(
-                index, inc, app_id="oracle-simhash-index", batch_id=i
-            )
-        )
-    out = parts[0].unionByName(parts[1]).unionByName(parts[2])
-    return out.select(
-        F.col("doc_a").cast("long").alias("doc_a"),
-        F.col("doc_b").cast("long").alias("doc_b"),
-        F.col("hamming"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Similarity search
-# ---------------------------------------------------------------------------
-
-
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return emb_ops.cosine_topk(_t(spark, sf_dir, "embeddings"))
-
-
-def q_ann_ivf_label_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return emb_ops.label_blocked_near_dup(_t(spark, sf_dir, "embeddings"))
-
-
-def q_ann_lsh_signbucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Default = occupancy cap ON (rank chunks of ≤48 within a bucket);
-    the oracle mirrors the same window, like ann_ivf_label_blocked's."""
-    return emb_ops.sign_lsh_near_dup(_t(spark, sf_dir, "embeddings"))
-
-
-def q_ann_incremental_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup on the incremental-index machinery
-    (ops/ann_index.py::embedding_flag_and_ingest): three fenced increments
-    against a persistent sign-bucket index — semantic near-dups by cosine,
-    completing the MinHash / SimHash / sign-LSH trilogy. Union of the
-    per-increment flags == one-shot sign_lsh_near_dup(max_bucket_size=
-    None) — an incremental index can't reproduce a rank-based cap, so its
-    oracle is the UNCAPPED bucket join (n_sub=1 persisted default)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from airbyte_spark.ops.ann_index import (
-        bootstrap_embedding_dedup_index,
-        embedding_flag_and_ingest,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="airbyte_spark_q_embidx_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    index = bootstrap_embedding_dedup_index(spark, path, n_buckets=8)
-    parts = []
-    for i in range(3):
-        inc = emb.filter(F.pmod(F.col("vec_id"), F.lit(3)) == i)
-        parts.append(
-            embedding_flag_and_ingest(
-                index, inc, app_id="oracle-emb-index", batch_id=i
-            )
-        )
-    out = parts[0].unionByName(parts[1]).unionByName(parts[2])
-    return out.select(
-        F.col("vec_a").cast("long").alias("vec_a"),
-        F.col("vec_b").cast("long").alias("vec_b"),
-        F.col("bucket"),
-        F.col("cos"),
     )
 
 
@@ -1637,175 +1231,6 @@ def q_cdc_dialog_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     return validate_dialog_format(turns)
 
 
-def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean unigram log-probability under the corpus's own unigram LM
-    (CCNet-style LM quality filtering, unigram reduction) — per-token
-    terms quantized to bigint micro-units so the per-doc sum is exact and
-    order-free on any engine."""
-    return text_analysis.unigram_logprob(_t(spark, sf_dir, "documents"))
-
-
-def q_ann_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return emb_ops.ivf_assign(_t(spark, sf_dir, "embeddings"))
-
-
-def q_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return emb_ops.ivf_search(_t(spark, sf_dir, "embeddings"))
-
-
-def q_ann_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lloyd k-means refinement of the IVF quantizer (2 iterations from
-    the seeded first-k init), returning the final assignment. The oracle
-    unrolls both iterations in SQL — assignment via the same rounded-cos
-    rank, centroid update via per-(cell,pos) mean CAST TO FLOAT32 on both
-    engines (the float cast absorbs either engine's double-sum ordering),
-    empty cells keeping their previous centroid."""
-    emb = _t(spark, sf_dir, "embeddings")
-    trained = emb_ops.train_centroids(emb, k=8, iters=2)
-    cents = trained.select(
-        F.col("cell").alias("vec_id"), F.col("c").alias("embedding")
-    )
-    return emb_ops.ivf_assign(emb, 8, cents)
-
-
-def q_ann_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PERSISTENT incremental IVF (ops/ann_index.py): the embeddings table
-    is ingested in two fenced increments into a cell-bucketed LakeTable
-    (assignment = broadcast centroids + map-side top-1, O(batch)); search
-    then reads ONLY the probed cells' buckets (driver-side probe→bucket
-    resolution, read(buckets=...)) — at 10^9 vectors a search touches
-    nprobe/n_cells of the table, not all of it. Must be bit-equal to the
-    one-shot ivf_search plan, so it shares ann_ivf_search's oracle SQL."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from airbyte_spark.ops.ann_index import (
-        ann_search,
-        bootstrap_ann_index,
-        ingest_vectors,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    path = tempfile.mkdtemp(prefix="airbyte_spark_q_annidx_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    index = bootstrap_ann_index(
-        spark, path, emb_ops._centroids(emb, 8), n_buckets=8
-    )
-    for i in range(2):
-        ingest_vectors(
-            index,
-            emb.filter(F.pmod(F.col("vec_id"), F.lit(2)) == i),
-            app_id="oracle-ann-index",
-            batch_id=i,
-        )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
-    )
-    return ann_search(index, queries, nprobe=2, k=5)
-
-
-# ---------------------------------------------------------------------------
-# Multimodal plumbing
-# ---------------------------------------------------------------------------
-
-
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload metadata extraction through the real mapInPandas
-    plumbing (decode step stubbed with deterministic byte-level features)."""
-    d = _t(spark, sf_dir, "documents")
-    return extract_media_meta(attach_fake_payload(d))
-
-
-def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL media decode end-to-end: encode each doc_id into actual
-    BMP / PNG / baseline-JPEG / PCM-WAV / multi-frame container bytes
-    (``ops.codecs.synth_*`` — image rows cycle all three formats so all
-    three decoders gate, JPEG included), then parse those bytes back
-    (zlib inflate + unfilter, Huffman + IDCT, pixel grid, RIFF chunks,
-    container walk) in an Arrow-batched mapInPandas stage. The oracle
-    recomputes every decoded feature as a closed-form function of
-    doc_id — so a wrong byte layout, filter reconstruction, row-padding
-    error or chunk misparse hash-mismatches."""
-    d = _t(spark, sf_dir, "documents")
-    return decode_media_features(attach_synthetic_media(d))
-
-
-def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode → nearest-neighbor resize → re-encode, verified at PIXEL
-    level on the lossless rows: for BMP/PNG images the resized payload's
-    (0,0) pixel is exactly the synthetic gradient's (0,0) (nearest-
-    neighbor maps output (0,0) to input (0,0)), so the oracle recomputes
-    (r, g, b) closed-form from doc_id. JPEG rows are excluded from the
-    pixel assert (lossy) but still flow through the stage — a crash
-    there fails the query outright."""
-    from airbyte_spark.ops.multimodal import decode_image, resize_images
-
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    d = _t(spark, sf_dir, "documents")
-    resized = resize_images(attach_synthetic_media(d), 4, 5)
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("out_h", LongType()),
-            StructField("out_w", LongType()),
-            StructField("px_r", LongType()),
-            StructField("px_g", LongType()),
-            StructField("px_b", LongType()),
-        ]
-    )
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                rgb = decode_image(payload)
-                r = {
-                    "doc_id": doc_id,
-                    "out_h": rgb.shape[0],
-                    "out_w": rgb.shape[1],
-                }
-                if payload[:2] != b"\xff\xd8":  # lossless rows: exact px
-                    r["px_r"], r["px_g"], r["px_b"] = (
-                        int(v) for v in rgb[0, 0]
-                    )
-                rows.append(r)
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
-
-    return resized.mapInPandas(batches, schema)
-
-
-def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-in-2 frame sampling over the FRMS video payloads: the sampled
-    frame indices (stride walk over the closed-form frame count) and
-    each sampled frame's DECODED dimensions (frame k of doc d is the
-    synthetic image of doc d+k) are all closed-form in (doc_id,
-    frame_idx) — the oracle rebuilds the whole sampled set with
-    generate_series."""
-    from airbyte_spark.ops.multimodal import sample_frames
-
-    d = _t(spark, sf_dir, "documents")
-    out = sample_frames(attach_synthetic_media(d), stride=2)
-    return out.select("doc_id", "frame_idx", "width", "height")
-
-
-def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decoded-SAMPLE-level audio verification: energy / abs-mass /
-    peak / zero-crossings over the PCM stream each WAV payload carries
-    (``ops.multimodal.audio_features``). The synthetic samples are
-    closed-form in doc_id (codecs.synth_audio: s[t] = ((t·k) mod 2048)
-    − 1024, k = 1 + doc_id%13), so the oracle recomputes the exact
-    integer aggregates from generate_series — agreement proves the RIFF
-    parse returns every sample byte-for-byte, not just the header."""
-    from airbyte_spark.ops.multimodal import audio_features
-
-    d = _t(spark, sf_dir, "documents")
-    return audio_features(attach_synthetic_media(d))
-
-
 # ---------------------------------------------------------------------------
 # driver contract
 # ---------------------------------------------------------------------------
@@ -1817,14 +1242,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDERING POLICY: the driver's correctness gate samples the FIRST 50
-    # entries, so every unique operator family sits in the first 50.
-    # Entries past the boundary are by-construction twins of a gated
-    # sibling — incremental indexes whose union-of-increments equals the
-    # gated one-shot (asserted by local tests AND sharing the sibling's
-    # oracle), small-corpus verifier tiers, and plan variants (salting,
-    # slicer shapes) — each noted inline with the sibling that gates its
-    # family. tools/selfcheck.py still verifies ALL entries locally.
     return {
         "cdc_latest_per_key": q_cdc_latest_per_key,
         "cdc_replay_final_state": q_cdc_replay_final_state,
@@ -1853,137 +1270,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdc_sessionize": q_cdc_sessionize,
         "cdc_conversation_assembly": q_cdc_conversation_assembly,
         "text_canonicalize": q_text_canonicalize,
-        "text_lang_id": q_text_lang_id,
-        "text_quality": q_text_quality,
-        "text_repetition": q_text_repetition,
-        "text_line_filter": q_text_line_filter,
-        "dedup_line_corpus": q_dedup_line_corpus,
-        "text_pii_redact": q_text_pii_redact,
-        "dedup_decontaminate": q_dedup_decontaminate,
-        "sample_stratified_split": q_sample_stratified_split,
-        "text_pack_sequences": q_text_pack_sequences,
-        "dedup_exact": q_dedup_exact,
-        "dedup_exact_substring": q_dedup_exact_substring,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_minhash_clusters": q_dedup_minhash_clusters,
-        "dedup_simhash_banded": q_dedup_simhash_banded,
-        "dedup_semantic": q_dedup_semantic,
-        "sample_domain_mixture": q_sample_domain_mixture,
-        "sample_dsir": q_sample_dsir,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_ivf_search": q_ann_ivf_search,
-        "ann_lsh_signbucket": q_ann_lsh_signbucket,
-        "multimodal_decode": q_multimodal_decode,
         "cdc_dialog_format": q_cdc_dialog_format,
-        "text_unigram_logprob": q_text_unigram_logprob,
-        # ---- gate-sample boundary (first 50 above) ----
-        # twins / family-gated variants, each oracle-checked locally by
-        # selfcheck.py; the inline note names the sibling that gates it:
-        "multimodal_meta": q_multimodal_meta,  # decode gates the family
-        "text_token_count": q_text_token_count,  # text_quality materializes n_tokens/n_chars via the same tokenizer
-        "text_vocab_topk": q_text_vocab_topk,  # unigram_logprob gates the corpus token-count aggregate; topk is its order-by-limit view
-        "cdc_scd2_asof_join": q_cdc_scd2_asof_join,  # SCD2 family read variant; history + mor_replay gate the writes, asof_state is its sibling below
-        "cdc_time_window_scan": q_cdc_time_window_scan,  # file-level skipping family; lake_incremental_scan gates it (time_window is the stats_cols range variant of the same pruning)
-        "sample_per_stratum": q_sample_per_stratum,  # sampling family (stratified_split + domain_mixture gate)
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,  # lexical near-dup family; minhash_lsh gates, jaccard is its exact-verifier tier
-        "cdc_cursor_tie_probe": q_cdc_cursor_tie_probe,  # cursor_scan's limit(n+1) probe
-        "cdc_event_projection": q_cdc_event_projection,  # replay_final_state embeds the projection
-        "text_fingerprint": q_text_fingerprint,  # text-analysis family (lang_id/quality/tokens gate)
-        "ann_ivf_label_blocked": q_ann_ivf_label_blocked,  # cell-blocked near-dup; ivf_search + signbucket gate
-        "ann_ivf_assign": q_ann_ivf_assign,  # ivf_search embeds _assign
-        "ann_incremental_ivf": q_ann_incremental_ivf,  # == ann_ivf_search
-        "ann_incremental_signlsh": q_ann_incremental_signlsh,  # == signbucket (uncapped)
-        "dedup_incremental_index": q_dedup_incremental_index,  # == minhash_lsh
-        "dedup_incremental_simhash": q_dedup_incremental_simhash,  # == simhash_banded
-        "dedup_simhash": q_dedup_simhash,  # all-pairs verifier tier
-        "cdc_scd2_asof_state": q_cdc_scd2_asof_state,  # asof_join variant
-        "cdc_salted_latest_per_key": q_cdc_salted_latest_per_key,  # plan variant
-        "cdc_recursive_unnest": q_cdc_recursive_unnest,  # nested_unnest tier
-        "cdc_list_slice": q_cdc_list_slice,  # record_filter_slice family
-        "cdc_substream_slice": q_cdc_substream_slice,  # record_filter_slice family
-        "ann_ivf_train": q_ann_ivf_train,  # ivf family (assign/search gate it)
-        "multimodal_audio": q_multimodal_audio,  # multimodal family (decode gates); sample-level WAV verification
-        "multimodal_resize": q_multimodal_resize,  # multimodal family; pixel-exact resize on lossless rows
-        "multimodal_frames": q_multimodal_frames,  # multimodal family; stride walk + per-frame decoded dims
+        "text_vocab_topk": q_text_vocab_topk,
+        "cdc_scd2_asof_join": q_cdc_scd2_asof_join,
+        "cdc_time_window_scan": q_cdc_time_window_scan,
+        "cdc_cursor_tie_probe": q_cdc_cursor_tie_probe,
+        "cdc_event_projection": q_cdc_event_projection,
+        "cdc_scd2_asof_state": q_cdc_scd2_asof_state,
+        "cdc_salted_latest_per_key": q_cdc_salted_latest_per_key,
+        "cdc_recursive_unnest": q_cdc_recursive_unnest,
+        "cdc_list_slice": q_cdc_list_slice,
+        "cdc_substream_slice": q_cdc_substream_slice,
     }
 
 
 # --- oracle SQL builders ----------------------------------------------------
-
-_H = h60_sql  # 60-bit md5 hash, identical to airbyte_spark.ops.hashing.h60
-
-_DOT = (
-    "list_sum(list_transform(list_zip({a}, {b}), "
-    "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-)
-
-
-def _dot(a: str, b: str) -> str:
-    return _DOT.format(a=a, b=b)
-
-
-def _cos(a: str, b: str) -> str:
-    return f"round({_dot(a, b)} / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)})), 6)"
-
-
-def _LLOYD_ITER(i: int) -> str:
-    """One unrolled Lloyd iteration as CTEs: assign under cents{i-1},
-    mean-update (float32-cast per element), carry empty cells forward."""
-    return f"""
-            a{i} AS (SELECT vec_id, cell, embedding FROM (
-                SELECT e.vec_id, c.cell, e.embedding,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY {_cos("c.c", "e.embedding")} DESC,
-                                  c.cell ASC) rnk
-                FROM embeddings e, cents{i - 1} c) WHERE rnk = 1),
-            m{i} AS (SELECT cell, list(CAST(m AS REAL) ORDER BY pos) AS c
-                     FROM (SELECT cell, pos, avg(CAST(v AS DOUBLE)) AS m
-                           FROM (SELECT cell, unnest(embedding) AS v,
-                                        generate_subscripts(embedding, 1) AS pos
-                                 FROM a{i})
-                           GROUP BY cell, pos)
-                     GROUP BY cell),
-            cents{i} AS (SELECT c.cell, COALESCE(m{i}.c, c.c) AS c
-                         FROM cents{i - 1} c LEFT JOIN m{i} USING (cell)),
-    """.rstrip() + "\n"
-
-
-_SHINGLES_CTE = r"""
-toks AS (SELECT doc_id, string_split_regex(trim(text), '\s+') t FROM documents),
-sh AS MATERIALIZED (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-    generate_series(1, greatest(len(t) - 2, 1)),
-    i -> array_to_string(t[i:i+2], ' ')))) AS s
-  FROM toks
-)"""
-
-
-def _minhash_sig_sql(k: int = 12) -> str:
-    cols = ", ".join(
-        "min(%s) AS s%d" % (_H(f"'{j}:' || s"), j) for j in range(k)
-    )
-    return (
-        f"WITH {_SHINGLES_CTE}, sig AS MATERIALIZED "
-        f"(SELECT doc_id, {cols} FROM sh GROUP BY doc_id)"
-    )
-
-
-#: simhash signature CTE chain (shared by the all-pairs verifier and the
-#: banded scale query) — identical bit semantics to simhash_signatures
-_SIMHASH_SIG_CTE = f"""
-tok AS (
-  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '\\s+'))) t
-  FROM documents
-),
-th AS (SELECT doc_id, {h60_sql("t")} h FROM tok),
-bits AS (SELECT doc_id, b.b,
-                CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END v
-         FROM th, (SELECT unnest(generate_series(0, 59)) b) b),
-pb AS (SELECT doc_id, b, sum(v) s FROM bits GROUP BY 1, 2),
-sig AS MATERIALIZED (SELECT doc_id,
-               CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b)
-                        ELSE 0 END) AS BIGINT) simhash
-        FROM pb GROUP BY 1)"""
 
 
 def _canon_ident_sql(x: str, limit: int | None = None) -> str:
@@ -2023,14 +1324,6 @@ def _name_canon_oracle() -> str:
     """
 
 
-def _lang_cnt(words: list[str]) -> str:
-    parts = " + ".join(
-        f"len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x = '{w}'))"
-        for w in words
-    )
-    return f"CAST({parts} AS BIGINT)"
-
-
 def _codegen_oracle_sql() -> str:
     """The duckdb-dialect render of the SAME generator the Spark query runs
     (normalization/codegen.py), over an identically-packed raw CTE — the
@@ -2058,17 +1351,6 @@ def _codegen_oracle_sql() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
-    en = _lang_cnt(text_analysis.LANG_MARKERS["en"])
-    de = _lang_cnt(text_analysis.LANG_MARKERS["de"])
-    fr = _lang_cnt(text_analysis.LANG_MARKERS["fr"])
-    es = _lang_cnt(text_analysis.LANG_MARKERS["es"])
-    stop = _lang_cnt(text_analysis.EN_STOPWORDS)
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, "
-        f"md5(CAST(s{2 * b} AS VARCHAR) || ',' || CAST(s{2 * b + 1} AS VARCHAR)) AS band_key "
-        f"FROM sig"
-        for b in range(6)
-    )
     return {
         "cdc_latest_per_key": """
             SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
@@ -2502,389 +1784,6 @@ def oracle_sql() -> dict[str, str]:
                    nullif(trim(regexp_replace(text, '\s+', ' ', 'g')), '') AS canon_text
             FROM documents
         """,
-        "text_lang_id": f"""
-            SELECT doc_id, {en} AS en_cnt, {de} AS de_cnt, {fr} AS fr_cnt, {es} AS es_cnt,
-                   CASE WHEN {en} >= {de} AND {en} >= {fr} AND {en} >= {es} AND {en} > 0 THEN 'en'
-                        WHEN {de} >= {fr} AND {de} >= {es} AND {de} > 0 THEN 'de'
-                        WHEN {fr} >= {es} AND {fr} > 0 THEN 'fr'
-                        WHEN {es} > 0 THEN 'es'
-                        ELSE 'und' END AS lang_guess
-            FROM documents
-        """,
-        "text_quality": rf"""
-            SELECT doc_id,
-                   CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-                   CAST(length(text) AS BIGINT) AS n_chars,
-                   round(coalesce(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                                  / nullif(length(text), 0), 0), 6)
-                       AS alpha_ratio,
-                   round(coalesce({stop} / nullif(len(string_split_regex(trim(text), '\s+')), 0), 0), 6)
-                       AS stop_ratio,
-                   round(coalesce(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                                  / nullif(length(text), 0), 0) * 0.5
-                         + coalesce({stop} / nullif(len(string_split_regex(trim(text), '\s+')), 0), 0) * 0.3
-                         + least(len(string_split_regex(trim(text), '\s+')) / 200.0, 1.0) * 0.2,
-                         6) AS quality
-            FROM documents
-        """,
-        "text_token_count": rf"""
-            SELECT doc_id,
-                   CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS ws_tokens,
-                   CAST(len(regexp_extract_all(text, '{text_analysis.BPE_REGEX}')) AS BIGINT)
-                       AS bpe_tokens
-            FROM documents
-        """,
-        "text_fingerprint": f"""
-            SELECT doc_id,
-                   list_min(list_transform(
-                       generate_series(1, greatest(length(text) - 7, 1)),
-                       i -> {_H("substr(text, i, 8)")})) AS fingerprint
-            FROM documents
-        """,
-        "dedup_exact": """
-            SELECT md5(text) AS text_md5, CAST(min(doc_id) AS BIGINT) AS keep_doc_id,
-                   CAST(count(*) AS BIGINT) AS dup_cnt
-            FROM documents GROUP BY md5(text)
-        """,
-        # repetition flags compare on the UNROUNDED ratios, like the Spark
-        # side; top-n-gram multiplicity via unnest+group (the oracle need
-        # not mirror the map-side sorted-run fold, only its values)
-        "text_repetition": r"""
-            WITH toks AS (
-              SELECT doc_id, string_split_regex(trim(text), '\s+') t FROM documents),
-            base AS (
-              SELECT doc_id, t, len(t) n, len(list_distinct(t)) nd,
-                     greatest(len(t) - 1, 0) n2, greatest(len(t) - 2, 0) n3
-              FROM toks),
-            g2 AS (SELECT doc_id, max(c) top2 FROM (
-                     SELECT doc_id, g, count(*) c FROM (
-                       SELECT doc_id, t[i] || ' ' || t[i+1] AS g
-                       FROM base, UNNEST(range(1, greatest(n - 1, 0) + 1)) AS u(i))
-                     GROUP BY doc_id, g) GROUP BY doc_id),
-            g3 AS (SELECT doc_id, max(c) top3 FROM (
-                     SELECT doc_id, g, count(*) c FROM (
-                       SELECT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-                       FROM base, UNNEST(range(1, greatest(n - 2, 0) + 1)) AS u(i))
-                     GROUP BY doc_id, g) GROUP BY doc_id)
-            SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_tokens,
-                   round((b.n - b.nd) / b.n, 6) AS dup_token_frac,
-                   round(coalesce(g2.top2 / nullif(b.n2, 0), 0), 6) AS top_bigram_frac,
-                   round(coalesce(g3.top3 / nullif(b.n3, 0), 0), 6) AS top_trigram_frac,
-                   CAST(((b.n - b.nd) / b.n > 0.6
-                         OR (b.n2 >= 16 AND coalesce(g2.top2 / nullif(b.n2, 0), 0) > 0.2)
-                         OR (b.n3 >= 16 AND coalesce(g3.top3 / nullif(b.n3, 0), 0) > 0.18))
-                        AS INT) AS repetitive
-            FROM base b LEFT JOIN g2 USING (doc_id) LEFT JOIN g3 USING (doc_id)
-        """,
-        # a window is duplicated when its 10-token hash occurs >= 2 times
-        # corpus-wide (other doc OR other position of the same doc)
-        "dedup_exact_substring": rf"""
-            WITH toks AS (
-              SELECT doc_id, string_split_regex(trim(text), '\s+') t FROM documents),
-            w AS (SELECT doc_id, {_H("array_to_string(t[i:i+9], ' ')")} AS wh
-                  FROM toks, UNNEST(range(1, greatest(len(t) - 9, 0) + 1)) AS u(i)),
-            c AS (SELECT wh, count(*) AS n FROM w GROUP BY wh),
-            pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows,
-                          CAST(sum(CASE WHEN c.n >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-                              AS n_dup_windows
-                   FROM w JOIN c USING (wh) GROUP BY doc_id)
-            SELECT d.doc_id,
-                   coalesce(pd.n_windows, 0) AS n_windows,
-                   coalesce(pd.n_dup_windows, 0) AS n_dup_windows,
-                   round(coalesce(pd.n_dup_windows / nullif(pd.n_windows, 0), 0), 6)
-                       AS dup_window_frac,
-                   CAST(coalesce(pd.n_dup_windows, 0) > 0 AS INT) AS has_dup
-            FROM documents d LEFT JOIN pd USING (doc_id)
-        """,
-        # line-level curation: lines synthesized from the word salad (5
-        # tokens each) exactly as in the Spark wrappers; the C4 rule chain
-        # runs as list_filter lambdas, dedup as hash-agg + count join
-        "text_line_filter": rf"""
-            WITH toks AS (
-              SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-              FROM documents),
-            lined AS (
-              SELECT doc_id, list_transform(
-                       range(0, greatest(CAST(ceil(len(t) / 5.0) AS INT), 1)),
-                       i -> array_to_string(t[i*5+1:i*5+5], ' ')
-                            || CASE WHEN {_H("doc_id || ':' || i")} % 4 <> 0
-                                    THEN '.' ELSE '' END) AS ls
-              FROM toks),
-            inj AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 5 = 0 THEN ['{_BOILER_JS}']
-                          ELSE CAST([] AS VARCHAR[]) END
-                     || ls ||
-                     CASE WHEN doc_id % 7 = 0 THEN ['{_BOILER_SHORT}']
-                          ELSE CAST([] AS VARCHAR[]) END AS ls
-              FROM lined),
-            per AS (
-              SELECT doc_id, ls,
-                     list_filter(ls, x ->
-                       len(string_split_regex(trim(x), '\s+')) >= 5
-                       AND regexp_matches(x, '[.!?"]$')
-                       AND NOT contains(lower(x), 'javascript')
-                       AND NOT contains(lower(x), 'lorem ipsum')
-                       AND NOT contains(lower(x), 'cookie')
-                       AND NOT contains(lower(x), '{{')) AS kept
-              FROM inj)
-            SELECT doc_id,
-                   CAST(len(ls) AS BIGINT) AS n_lines,
-                   CAST(len(kept) AS BIGINT) AS n_kept,
-                   round(coalesce(len(kept) / nullif(len(ls), 0), 0), 6)
-                       AS kept_frac,
-                   CAST(len(kept) >= 3 AS INT) AS doc_kept,
-                   coalesce(array_to_string(kept, chr(10)), '') AS clean_text
-            FROM per
-        """,
-        "dedup_line_corpus": rf"""
-            WITH toks AS (
-              SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-              FROM documents),
-            lined AS (
-              SELECT doc_id, list_transform(
-                       range(0, greatest(CAST(ceil(len(t) / 5.0) AS INT), 1)),
-                       i -> array_to_string(t[i*5+1:i*5+5], ' ')) AS ls
-              FROM toks),
-            inj AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 3 = 0 THEN ['{_BOILER_NAV}']
-                          ELSE CAST([] AS VARCHAR[]) END
-                     || ls ||
-                     CASE WHEN doc_id % 4 = 0 THEN ['{_BOILER_FOOTER}']
-                          ELSE CAST([] AS VARCHAR[]) END AS ls
-              FROM lined),
-            occ AS (
-              SELECT doc_id, i - 1 AS idx, ls[i] AS line
-              FROM inj, UNNEST(range(1, len(ls) + 1)) AS u(i)),
-            keyed AS (
-              SELECT doc_id, idx, line, {_H("lower(trim(line))")} AS lh
-              FROM occ),
-            c AS (SELECT lh, count(*) AS cnt FROM keyed GROUP BY lh),
-            j AS (SELECT k.doc_id, k.idx, k.line, (c.cnt >= 10) AS dup
-                  FROM keyed k JOIN c USING (lh))
-            SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines,
-                   CAST(sum(CASE WHEN dup THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_removed,
-                   coalesce(array_to_string(
-                     list(line ORDER BY idx) FILTER (WHERE NOT dup), chr(10)),
-                     '') AS clean_text
-            FROM j GROUP BY doc_id
-        """,
-        "text_pii_redact": rf"""
-            WITH injected AS (
-              SELECT doc_id,
-                     text || CASE
-                       WHEN doc_id % 7 = 0 THEN ' contact user' || doc_id || '@example.com now'
-                       WHEN doc_id % 7 = 3 THEN ' call +1 (555) 010-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                       ELSE '' END AS text
-              FROM documents),
-            emailed AS (
-              SELECT doc_id,
-                     CAST(len(regexp_extract_all(text, '{EMAIL_RE_SQL}')) AS BIGINT) AS n_emails,
-                     regexp_replace(text, '{EMAIL_RE_SQL}', '<EMAIL>', 'g') AS t1
-              FROM injected)
-            SELECT doc_id, n_emails,
-                   CAST(len(regexp_extract_all(t1, '{PHONE_RE_SQL}')) AS BIGINT) AS n_phones,
-                   regexp_replace(t1, '{PHONE_RE_SQL}', '<PHONE>', 'g') AS redacted
-            FROM emailed
-        """,
-        # DSIR: every ln lands on the shared micro-unit grid (q6ln) before
-        # any per-doc sum, so corpus-order never matters; the totals' ln
-        # enters once per doc via exact integer multiply
-        "sample_dsir": rf"""
-            WITH toks AS (
-              SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-              FROM documents),
-            grams AS (
-              SELECT doc_id,
-                     CAST({_H("array_to_string(t[i:i+1], ' ')")} % 256 AS INT) AS b
-              FROM toks, UNNEST(range(1, greatest(len(t) - 1, 0) + 1)) AS u(i)),
-            t_occ AS (SELECT b FROM grams WHERE doc_id % 11 = 0),
-            c_occ AS (SELECT doc_id, b FROM grams WHERE doc_id % 11 <> 0),
-            buckets AS (SELECT unnest(range(0, 256)) AS b),
-            dist AS (
-              SELECT buckets.b,
-                     coalesce(tc, 0) + 1 AS tca,
-                     coalesce(cc, 0) + 1 AS cca
-              FROM buckets
-              LEFT JOIN (SELECT b, count(*) AS tc FROM t_occ GROUP BY b)
-                USING (b)
-              LEFT JOIN (SELECT b, count(*) AS cc FROM c_occ GROUP BY b)
-                USING (b)),
-            w AS (SELECT b,
-                         CAST(round(ln(tca) * 1e6) AS BIGINT)
-                         - CAST(round(ln(cca) * 1e6) AS BIGINT) AS w_rel
-                  FROM dist),
-            tots AS (SELECT CAST(round(ln(sum(tca)) * 1e6) AS BIGINT) AS lnT,
-                            CAST(round(ln(sum(cca)) * 1e6) AS BIGINT) AS lnC
-                     FROM dist),
-            pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-                          CAST(sum(w_rel) AS BIGINT) AS sum_w
-                   FROM c_occ JOIN w USING (b) GROUP BY doc_id),
-            scored AS (
-              SELECT doc_id, n_bigrams,
-                     CAST(sum_w - n_bigrams * (lnT - lnC) AS BIGINT)
-                         AS logw_micro
-              FROM pd, tots)
-            SELECT d.doc_id,
-                   coalesce(s.n_bigrams, 0) AS n_bigrams,
-                   coalesce(s.logw_micro, 0) AS logw_micro,
-                   round(coalesce(s.logw_micro / nullif(s.n_bigrams, 0), 0)
-                         / 1e6, 6) AS avg_logw,
-                   CAST(coalesce(s.logw_micro, 0) > 0 AS INT) AS selected
-            FROM (SELECT doc_id FROM documents WHERE doc_id % 11 <> 0) d
-            LEFT JOIN scored s USING (doc_id)
-        """,
-        "dedup_decontaminate": rf"""
-            WITH toks AS (
-              SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
-            grams AS (
-              SELECT DISTINCT doc_id,
-                     {_H("array_to_string(t[i:i+3], ' ')")} AS g
-              FROM toks, UNNEST(range(1, greatest(len(t) - 3, 0) + 1)) AS u(i)),
-            bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 11 = 0),
-            hits AS (
-              SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-              FROM grams c JOIN bench b USING (g)
-              WHERE c.doc_id % 11 <> 0 GROUP BY 1)
-            SELECT d.doc_id,
-                   coalesce(h.n_hits, 0) AS n_hits,
-                   CAST(coalesce(h.n_hits, 0) > 0 AS INT) AS contaminated
-            FROM (SELECT doc_id FROM documents WHERE doc_id % 11 <> 0) d
-            LEFT JOIN hits h USING (doc_id)
-        """,
-        "sample_stratified_split": f"""
-            SELECT doc_id, lang AS stratum,
-                   {_H("doc_id || ':split'")} % 1000 AS bucket,
-                   CASE WHEN {_H("doc_id || ':split'")} % 1000 < 800 THEN 'train'
-                        WHEN {_H("doc_id || ':split'")} % 1000 < 900 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM documents
-        """,
-        "sample_per_stratum": f"""
-            SELECT doc_id, stratum, rank FROM (
-              SELECT doc_id, lang AS stratum,
-                     CAST(row_number() OVER (
-                       PARTITION BY lang
-                       ORDER BY {_H("doc_id || ':sample'")} ASC, doc_id ASC
-                     ) AS BIGINT) AS rank
-              FROM documents)
-            WHERE rank <= 20
-        """,
-        "text_pack_sequences": rf"""
-            WITH base AS (
-              SELECT doc_id,
-                     {_H("doc_id || ':pack'")} AS h,
-                     CAST(len(regexp_extract_all(text, '{text_analysis.BPE_REGEX}')) AS BIGINT)
-                         AS n_tokens
-              FROM documents),
-            c AS (
-              SELECT doc_id, h % 8 AS shard, n_tokens,
-                     sum(n_tokens) OVER (
-                       PARTITION BY h % 8 ORDER BY h ASC, doc_id ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-              FROM base)
-            SELECT doc_id, shard,
-                   CAST(floor((cum - n_tokens) / 2048) AS BIGINT) * 8 + shard
-                       AS pack_id,
-                   n_tokens
-            FROM c
-        """,
-        "dedup_ngram_jaccard": f"""
-            WITH {_SHINGLES_CTE},
-            sdf AS (SELECT s, count(*) c FROM sh GROUP BY s),
-            shf AS MATERIALIZED (
-              SELECT sh.doc_id, sh.s FROM sh JOIN sdf USING (s)
-              WHERE sdf.c <= {dedup_docs.MAX_SHINGLE_DF}),
-            sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) n FROM shf GROUP BY doc_id),
-            p AS (SELECT a.doc_id doc_a, b.doc_id doc_b, CAST(count(*) AS BIGINT) common
-                  FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2)
-            SELECT doc_a, doc_b, common,
-                   round(common / (x.n + y.n - common), 6) AS jaccard
-            FROM p JOIN sz x ON x.doc_id = p.doc_a JOIN sz y ON y.doc_id = p.doc_b
-            WHERE round(common / (x.n + y.n - common), 6) >= 0.5
-        """,
-        "dedup_minhash_lsh": f"""
-            {_minhash_sig_sql()},
-            bands AS ({band_rows})
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   CAST(count(*) AS BIGINT) AS shared_bands
-            FROM bands a
-            JOIN bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-                        AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        """,
-        # the incremental index flags, unioned over increments, must equal
-        # the one-shot batch candidate set — same oracle by construction
-        "dedup_incremental_index": f"""
-            {_minhash_sig_sql()},
-            bands AS ({band_rows})
-            SELECT CAST(a.doc_id AS BIGINT) AS doc_a,
-                   CAST(b.doc_id AS BIGINT) AS doc_b,
-                   CAST(count(*) AS BIGINT) AS shared_bands
-            FROM bands a
-            JOIN bands b ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-                        AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        """,
-        # connected components of the SAME band-bucket pair graph: min
-        # reachable doc_id per node via a recursive CTE (transitive
-        # closure is fine at oracle scale; the Spark side is the O(log)
-        # label-propagation loop)
-        "dedup_minhash_clusters": f"""
-            {_minhash_sig_sql().replace("WITH ", "WITH RECURSIVE ", 1)},
-            bands AS ({band_rows}),
-            pairs AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM bands a
-                JOIN bands b ON a.band_idx = b.band_idx
-                            AND a.band_key = b.band_key
-                            AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-            edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-                      UNION SELECT doc_b, doc_a FROM pairs),
-            reach AS (
-                SELECT a AS node, b AS m FROM edges
-                UNION
-                SELECT r.node, e.b FROM reach r JOIN edges e ON r.m = e.a)
-            SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-                   CAST(LEAST(d.doc_id, COALESCE(mn.m, d.doc_id)) AS BIGINT)
-                       AS cluster_id
-            FROM documents d
-            LEFT JOIN (SELECT node, MIN(m) AS m FROM reach GROUP BY node) mn
-                   ON mn.node = d.doc_id
-        """,
-        "dedup_simhash": f"""
-            WITH {_SIMHASH_SIG_CTE}
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-            FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.simhash, b.simhash)) <= 1
-        """,
-        # oracle = ALL-PAIRS hamming ≤ 3: deliberately construction-
-        # independent, so it ASSERTS the block-permutation banding's
-        # exact-recall claim (banded candidates == every qualifying pair)
-        # rather than mirroring the banding
-        "dedup_simhash_banded": f"""
-            WITH {_SIMHASH_SIG_CTE}
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT)
-                       AS hamming
-            FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-        """,
-        # incremental simhash index: union-of-increments == one-shot
-        # banded pairs == all qualifying pairs — same oracle
-        "dedup_incremental_simhash": f"""
-            WITH {_SIMHASH_SIG_CTE}
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT)
-                       AS hamming
-            FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-        """,
         "cdc_conversation_assembly": """
             SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
                    string_agg(role || ': ' || txt, chr(10) ORDER BY turn_idx)
@@ -2894,223 +1793,6 @@ def oracle_sql() -> dict[str, str]:
                          CAST(CAST(floor(value) AS BIGINT) AS VARCHAR) AS txt
                   FROM events)
             GROUP BY conv_id
-        """,
-        "ann_ivf_assign": f"""
-            WITH cents AS (SELECT vec_id AS cell, embedding AS c FROM embeddings
-                           WHERE vec_id < 8),
-            s AS (SELECT e.vec_id, cents.cell,
-                         {_cos("cents.c", "e.embedding")} AS cos
-                  FROM embeddings e, cents),
-            r AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-                          ORDER BY cos DESC, cell ASC) rnk FROM s)
-            SELECT CAST(vec_id AS BIGINT) AS vec_id, cell, cos
-            FROM r WHERE rnk = 1
-        """,
-        "ann_ivf_search": f"""
-            WITH cents AS (SELECT vec_id AS cell, embedding AS c FROM embeddings
-                           WHERE vec_id < 8),
-            assigned AS (
-              SELECT vec_id AS neighbor_id, cell FROM (
-                SELECT e.vec_id, cents.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY {_cos("cents.c", "e.embedding")} DESC,
-                                  cents.cell ASC) rnk
-                FROM embeddings e, cents) WHERE rnk = 1),
-            q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-                  WHERE vec_id < 10),
-            probes AS (
-              SELECT query_id, qe, cell FROM (
-                SELECT q.query_id, q.qe, cents.cell,
-                       row_number() OVER (PARTITION BY q.query_id
-                         ORDER BY {_cos("q.qe", "cents.c")} DESC,
-                                  cents.cell ASC) prank
-                FROM q, cents) WHERE prank <= 2),
-            cand AS (
-              SELECT p.query_id, e.vec_id AS neighbor_id,
-                     {_cos("p.qe", "e.embedding")} AS cos
-              FROM probes p
-              JOIN assigned a USING (cell)
-              JOIN embeddings e ON e.vec_id = a.neighbor_id
-              WHERE e.vec_id <> p.query_id),
-            r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) rank FROM cand)
-            SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cos
-            FROM r WHERE rank <= 5
-        """,
-        # 2 unrolled Lloyd iterations: assignment = the rounded-cos rank,
-        # update = per-(cell, pos) mean cast to FLOAT32 on both engines
-        # (the float cast absorbs double-sum ordering differences), empty
-        # cells keep their previous centroid
-        "ann_ivf_train": f"""
-            WITH cents0 AS (SELECT vec_id AS cell, embedding AS c
-                            FROM embeddings WHERE vec_id < 8),
-            {"".join(_LLOYD_ITER(i) for i in (1, 2))}
-            final AS (
-              SELECT e.vec_id, c.cell,
-                     {_cos("c.c", "e.embedding")} AS cos,
-                     row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY {_cos("c.c", "e.embedding")} DESC,
-                                c.cell ASC) rnk
-              FROM embeddings e, cents2 c)
-            SELECT CAST(vec_id AS BIGINT) AS vec_id,
-                   CAST(cell AS BIGINT) AS cell, cos
-            FROM final WHERE rnk = 1
-        """,
-        # the persistent bucket-pruned IVF index must answer bit-equal
-        # to the one-shot ivf_search plan — same oracle by construction
-        "ann_incremental_ivf": f"""
-            WITH cents AS (SELECT vec_id AS cell, embedding AS c FROM embeddings
-                           WHERE vec_id < 8),
-            assigned AS (
-              SELECT vec_id AS neighbor_id, cell FROM (
-                SELECT e.vec_id, cents.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY {_cos("cents.c", "e.embedding")} DESC,
-                                  cents.cell ASC) rnk
-                FROM embeddings e, cents) WHERE rnk = 1),
-            q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-                  WHERE vec_id < 10),
-            probes AS (
-              SELECT query_id, qe, cell FROM (
-                SELECT q.query_id, q.qe, cents.cell,
-                       row_number() OVER (PARTITION BY q.query_id
-                         ORDER BY {_cos("q.qe", "cents.c")} DESC,
-                                  cents.cell ASC) prank
-                FROM q, cents) WHERE prank <= 2),
-            cand AS (
-              SELECT p.query_id, e.vec_id AS neighbor_id,
-                     {_cos("p.qe", "e.embedding")} AS cos
-              FROM probes p
-              JOIN assigned a USING (cell)
-              JOIN embeddings e ON e.vec_id = a.neighbor_id
-              WHERE e.vec_id <> p.query_id),
-            r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) rank FROM cand)
-            SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cos
-            FROM r WHERE rank <= 5
-        """,
-        "ann_cosine_topk": f"""
-            WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-                       WHERE vec_id < 10),
-            s AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-                         {_cos("q.qe", "e.embedding")} AS cos
-                  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-            r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) rank FROM s)
-            SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cos
-            FROM r WHERE rank <= 5
-        """,
-        "ann_ivf_label_blocked": f"""
-            WITH v AS (SELECT vec_id, label, embedding,
-                         CAST(floor((row_number() OVER (PARTITION BY label
-                                                        ORDER BY vec_id) - 1)
-                              / {emb_ops.DEFAULT_MAX_CELL_SIZE}.0) AS BIGINT)
-                             AS sub
-                  FROM embeddings)
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   CAST(a.label AS BIGINT) AS label,
-                   {_cos("a.embedding", "b.embedding")} AS cos
-            FROM v a JOIN v b
-              ON a.label = b.label AND a.sub = b.sub AND a.vec_id < b.vec_id
-            WHERE {_cos("a.embedding", "b.embedding")} >= 0.35
-        """,
-        # mirrors the default occupancy cap: rank chunks of <=48 rows per
-        # bucket (row_number over vec_id), candidates must share the chunk
-        "ann_lsh_signbucket": f"""
-            WITH raw AS (
-              SELECT vec_id, embedding,
-                     CAST({" + ".join(f"CASE WHEN embedding[{j + 1}] > 0 THEN {1 << j} ELSE 0 END" for j in range(8))}
-                          AS BIGINT) AS bucket
-              FROM embeddings
-            ),
-            v AS (
-              SELECT vec_id, embedding, bucket,
-                     CAST(floor((row_number() OVER (PARTITION BY bucket
-                          ORDER BY vec_id) - 1) / 48) AS BIGINT) AS sub
-              FROM raw
-            )
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.bucket,
-                   {_cos("a.embedding", "b.embedding")} AS cos
-            FROM v a JOIN v b ON a.bucket = b.bucket AND a.sub = b.sub
-                             AND a.vec_id < b.vec_id
-            WHERE {_cos("a.embedding", "b.embedding")} >= 0.3
-        """,
-        # incremental sign-LSH index: union-of-increments == one-shot
-        # bucketed near-dup — same oracle by construction
-        "ann_incremental_signlsh": f"""
-            WITH v AS (
-              SELECT vec_id, embedding,
-                     CAST({" + ".join(f"CASE WHEN embedding[{j + 1}] > 0 THEN {1 << j} ELSE 0 END" for j in range(8))}
-                          AS BIGINT) AS bucket
-              FROM embeddings
-            )
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.bucket,
-                   {_cos("a.embedding", "b.embedding")} AS cos
-            FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-            WHERE {_cos("a.embedding", "b.embedding")} >= 0.3
-        """,
-        # SemDeDup: same seeded-centroid assignment as ann_ivf_assign, the
-        # same <=48 rank-chunk occupancy cap as ann_ivf_label_blocked, then
-        # dup_of = smallest same-(cell,sub) id with cosine >= 0.4
-        "dedup_semantic": f"""
-            WITH cents AS (SELECT vec_id AS cell, embedding AS c FROM embeddings
-                           WHERE vec_id < 8),
-            assigned AS (
-              SELECT vec_id, cell, embedding FROM (
-                SELECT e.vec_id, cents.cell, e.embedding,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY {_cos("cents.c", "e.embedding")} DESC,
-                                  cents.cell ASC) rnk
-                FROM embeddings e, cents) WHERE rnk = 1),
-            v AS (SELECT vec_id, cell, embedding,
-                         CAST(floor((row_number() OVER (PARTITION BY cell
-                                                        ORDER BY vec_id) - 1)
-                              / {emb_ops.DEFAULT_MAX_CELL_SIZE}.0) AS BIGINT) AS sub
-                  FROM assigned),
-            d AS (SELECT a.vec_id, min(b.vec_id) AS dup_of
-                  FROM v a JOIN v b ON a.cell = b.cell AND a.sub = b.sub
-                                   AND b.vec_id < a.vec_id
-                  WHERE {_cos("a.embedding", "b.embedding")} >= 0.4
-                  GROUP BY a.vec_id)
-            SELECT CAST(v.vec_id AS BIGINT) AS vec_id,
-                   CAST(v.cell AS BIGINT) AS cell,
-                   CAST(d.dup_of AS BIGINT) AS dup_of,
-                   CAST(d.dup_of IS NULL AS INT) AS keep
-            FROM v LEFT JOIN d USING (vec_id)
-        """,
-        # acceptance rates in ppm from the per-domain token totals; the
-        # double arithmetic mirrors Spark's ((s*C)/T)*1e6 left-assoc order
-        # and every literal share is CAST to DOUBLE (DuckDB parses 0.5 as
-        # DECIMAL otherwise, which rounds differently)
-        "sample_domain_mixture": f"""
-            WITH base AS (
-              SELECT doc_id, lang AS domain,
-                     CAST(len(regexp_extract_all(text, '{text_analysis.BPE_REGEX}'))
-                          AS BIGINT) AS n_tokens
-              FROM documents),
-            tg AS (SELECT * FROM (VALUES ('de'), ('en'), ('fr')) AS t(domain)),
-            ct AS (SELECT domain, sum(n_tokens) AS Ts FROM base GROUP BY domain),
-            tot AS (SELECT coalesce(ct.domain, tg.domain) AS domain,
-                           CAST(coalesce(ct.Ts, 0) AS BIGINT) AS T,
-                           CASE coalesce(ct.domain, tg.domain)
-                                WHEN 'en' THEN CAST(0.5 AS DOUBLE)
-                                WHEN 'de' THEN CAST(0.3 AS DOUBLE)
-                                WHEN 'fr' THEN CAST(0.2 AS DOUBLE)
-                           END AS s
-                    FROM ct FULL OUTER JOIN tg ON ct.domain = tg.domain),
-            r AS (SELECT domain,
-                         CASE WHEN s IS NOT NULL AND T > 0
-                              THEN least(CAST(floor(s * (SELECT min(T / s) FROM tot
-                                                         WHERE s IS NOT NULL)
-                                               / T * 1000000) AS BIGINT),
-                                         1000000)
-                              ELSE 0 END AS rate_ppm
-                  FROM tot)
-            SELECT b.doc_id, b.domain, b.n_tokens,
-                   CAST(coalesce(r.rate_ppm, 0) AS BIGINT) AS rate_ppm,
-                   CAST(({_H("b.doc_id || ':mix'")} % 1000000)
-                        < coalesce(r.rate_ppm, 0) AS INT) AS sampled
-            FROM base b LEFT JOIN r USING (domain)
         """,
         # same events→turns mapping as cdc_conversation_assembly; the
         # adjacency counters come from lag() windows (the oracle need not
@@ -3145,122 +1827,5 @@ def oracle_sql() -> dict[str, str]:
                                     THEN 1 ELSE 0 END)) = 0 AS INT)
                        AS well_formed
             FROM a GROUP BY conv_id
-        """,
-        # per-token ln(count) quantized to bigint micro-units BEFORE the
-        # per-doc sum, so the sum is exact-integer and order-free; the
-        # final expression is one double division of exact ints
-        "text_unigram_logprob": r"""
-            WITH toks AS (
-              SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
-              FROM documents),
-            vocab AS (SELECT tok, count(*) AS c FROM toks GROUP BY tok),
-            nt AS (SELECT CAST(round(ln(sum(c)) * 1e6) AS BIGINT) AS lnN
-                   FROM vocab),
-            pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-                          CAST(sum(CAST(round(ln(v.c) * 1e6) AS BIGINT))
-                               AS BIGINT) AS sum_logc_micro
-                   FROM toks t JOIN vocab v USING (tok) GROUP BY doc_id)
-            SELECT doc_id, n_tokens, sum_logc_micro,
-                   round((sum_logc_micro / n_tokens - nt.lnN) / 1e6, 6)
-                       AS logprob
-            FROM pd, nt
-        """,
-        "multimodal_meta": """
-            SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-                   md5(text) AS content_md5, 'image' AS media_kind
-            FROM documents
-        """,
-        # every decoded feature is a closed-form function of doc_id (see
-        # airbyte_spark/ops/codecs.py synth_*): the oracle never touches the
-        # bytes, so agreement proves the en/decode round-trip is exact
-        "multimodal_decode": """
-            SELECT doc_id,
-                   CASE CAST(doc_id % 3 AS INT)
-                        WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                        ELSE 'video' END AS media_kind,
-                   CASE WHEN doc_id % 3 = 1 THEN NULL
-                        ELSE CAST(8 + doc_id % 9 AS BIGINT) END AS width,
-                   CASE WHEN doc_id % 3 = 1 THEN NULL
-                        ELSE CAST(6 + doc_id % 7 AS BIGINT) END AS height,
-                   CASE WHEN doc_id % 3 = 1
-                        THEN CAST(8000 * (1 + (doc_id // 3) % 3) AS BIGINT)
-                        ELSE NULL END AS sample_rate,
-                   CASE WHEN doc_id % 3 = 1
-                        THEN CAST(400 + (doc_id * 37) % 800 AS BIGINT)
-                        ELSE NULL END AS n_samples,
-                   CASE WHEN doc_id % 3 = 1
-                        THEN CAST(1 + doc_id % 2 AS BIGINT)
-                        ELSE NULL END AS channels,
-                   CASE WHEN doc_id % 3 = 2
-                        THEN CAST(2 + doc_id % 5 AS BIGINT)
-                        ELSE NULL END AS n_frames
-            FROM documents
-        """,
-        # sample-level audio verification: the synthetic PCM stream is
-        # s[t] = ((t*k) % 2048) - 1024 with k = 1 + doc_id%13 over the
-        # interleaved index t (codecs.synth_audio), so every integer
-        # aggregate of the DECODED samples has a generate_series twin
-        "multimodal_audio": """
-            WITH audio AS (
-                SELECT doc_id,
-                       8000 * (1 + (doc_id // 3) % 3) AS sample_rate,
-                       1 + doc_id % 2 AS channels,
-                       400 + (doc_id * 37) % 800 AS n_samples,
-                       1 + doc_id % 13 AS k
-                FROM documents WHERE doc_id % 3 = 1
-            ), s AS (
-                SELECT doc_id, sample_rate, channels, n_samples, t,
-                       ((t * k) % 2048) - 1024 AS v
-                FROM (
-                    SELECT *,
-                           unnest(generate_series(0, n_samples * channels - 1)) AS t
-                    FROM audio
-                )
-            ), lagged AS (
-                SELECT *, lag(v) OVER (PARTITION BY doc_id ORDER BY t) AS pv
-                FROM s
-            )
-            SELECT doc_id,
-                   CAST(any_value(sample_rate) AS BIGINT) AS sample_rate,
-                   CAST(any_value(channels) AS BIGINT) AS channels,
-                   CAST(any_value(n_samples) AS BIGINT) AS n_samples,
-                   CAST(sum(v * v) AS BIGINT) AS sum_sq,
-                   CAST(sum(abs(v)) AS BIGINT) AS sum_abs,
-                   CAST(max(abs(v)) AS BIGINT) AS peak_abs,
-                   CAST(count(*) FILTER (WHERE v * pv < 0) AS BIGINT)
-                       AS n_zero_cross
-            FROM lagged
-            GROUP BY doc_id
-        """,
-        # nearest-neighbor resize maps output (0,0) to input (0,0), so on
-        # the lossless formats the resized payload's first pixel is the
-        # synthetic gradient's closed-form (d%256, 3d%256, 5d%256);
-        # JPEG rows ((doc_id//3)%3 = 2) decode but are pixel-NULL (lossy)
-        "multimodal_resize": """
-            SELECT doc_id,
-                   CAST(4 AS BIGINT) AS out_h,
-                   CAST(5 AS BIGINT) AS out_w,
-                   CASE WHEN (doc_id // 3) % 3 = 2 THEN NULL
-                        ELSE CAST(doc_id % 256 AS BIGINT) END AS px_r,
-                   CASE WHEN (doc_id // 3) % 3 = 2 THEN NULL
-                        ELSE CAST((doc_id * 3) % 256 AS BIGINT) END AS px_g,
-                   CASE WHEN (doc_id // 3) % 3 = 2 THEN NULL
-                        ELSE CAST((doc_id * 5) % 256 AS BIGINT) END AS px_b
-            FROM documents WHERE doc_id % 3 = 0
-        """,
-        # frame k of video doc d is the synthetic image of doc d+k, so the
-        # 1-in-2 stride walk and every sampled frame's decoded dims are
-        # closed-form in (doc_id, frame_idx)
-        "multimodal_frames": """
-            SELECT doc_id,
-                   CAST(t AS BIGINT) AS frame_idx,
-                   CAST(8 + (doc_id + t) % 9 AS BIGINT) AS width,
-                   CAST(6 + (doc_id + t) % 7 AS BIGINT) AS height
-            FROM (
-                SELECT doc_id,
-                       unnest(generate_series(0, 2 + doc_id % 5 - 1)) AS t
-                FROM documents WHERE doc_id % 3 = 2
-            )
-            WHERE t % 2 = 0
         """,
     }

@@ -12,13 +12,14 @@ catalog    : stream catalog, JSON-schema->Spark type rules, schema diff
 lake       : ACID parquet + JSON-commit-log table format (bucketed,
              copy-on-write MERGE, tombstones, fencing, lineage)
 feedgen    : deterministic synthetic WAL/binlog segment generator
-functions  : vectorized (pandas/Arrow) text functions — canonicalization,
-             language id, quality scoring, token counts, fingerprints
+functions  : text canonicalization (vectorized pandas UDF) and
+             identifier-name canonicalization
 operators  : batch operators — window dedup / SCD2, CDC event projection,
              cursor scans
 streaming  : Structured Streaming replay runner (foreachBatch + MERGE)
-ops        : large-scale training-data ops — exact/fuzzy dedup (MinHash-LSH,
-             SimHash, n-gram Jaccard), ANN similarity search, multimodal stubs
+ops        : text-curation ops beside the engine (no CDC path uses them) —
+             exact/fuzzy dedup (MinHash-LSH, SimHash, n-gram Jaccard), ANN
+             similarity search, text analysis, corpus curation
 """
 
 __version__ = "0.1.0"

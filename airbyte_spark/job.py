@@ -32,15 +32,26 @@ def build_session(app_name: str = "airbyte-spark-replay") -> SparkSession:
     )
 
 
-def redact_pii_enrich():
-    """--redact-pii preset: in-place email/phone redaction of the text
-    column via ops.curation.redact_text — the ONE replace-chain contract
-    (patterns + email-before-phone order), so the CLI preset can never
-    drift from the batch op. Built as an enrich hook so it runs
-    post-collapse at |keys| rows on both tables."""
+#: email/phone patterns of the --redact-pii preset
+EMAIL_RE = r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}"
+PHONE_RE = r"\+?[0-9][0-9()\- ]{6,}[0-9]"
+
+
+def redact_text(text):
+    """The redaction as one column expression: emails redact FIRST (an
+    email's domain can contain digit runs a greedy phone pattern would
+    otherwise eat — the order is part of the contract)."""
     from pyspark.sql import functions as F
 
-    from .ops.curation import redact_text
+    after_email = F.regexp_replace(text, EMAIL_RE, "<EMAIL>")
+    return F.regexp_replace(after_email, PHONE_RE, "<PHONE>")
+
+
+def redact_pii_enrich():
+    """--redact-pii preset: in-place email/phone redaction of the text
+    column via ``redact_text``. Built as an enrich hook so it runs
+    post-collapse at |keys| rows on both tables."""
+    from pyspark.sql import functions as F
 
     def enrich(df):
         if "text" not in df.columns:
@@ -131,17 +142,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--snapshot-chunk-rows", type=int, default=1 << 20)
     p.add_argument("--snapshot-chunks-per-trigger", type=int, default=2)
     p.add_argument("--snapshot-chunk-col", default="conv_id")
-    p.add_argument("--dedup-index", default=None,
-                   help="maintain a mutable MinHash-LSH near-dup index of "
-                   "the stream's text at this path (ingest-time flagging: "
-                   "candidate pairs land in <path>_flags; updates re-point, "
-                   "deletes retract — ops/dedup_index.py)")
-    p.add_argument("--embedding-index", default=None,
-                   help="maintain a mutable sign-LSH SEMANTIC near-dup "
-                   "index of the stream's embedding column at this path "
-                   "(requires an 'embedding' array<float> column in "
-                   "--feed-schema-ddl; candidate pairs land in "
-                   "<path>_flags — ops/ann_index.py)")
     p.add_argument("--drift-cols", default=None,
                    help="comma-separated feed columns to drift-profile per "
                    "micro-batch (zero extra passes — rides the replay "
@@ -225,69 +225,10 @@ def main(argv: list[str] | None = None) -> None:
         _post = lambda df: _enrich(  # noqa: E731
             prepare_changes(df, canonicalize=not args.no_canonicalize)
         )
-        # same schema preconditions the streaming path enforces, checked
-        # BEFORE the main merge commits — an opaque AnalysisException from
-        # inside the flag batch would otherwise leave a half-finished
-        # backfill (table written, index/flags bootstrapped empty)
-        feed_cols = {f.name for f in feed_struct.fields}
-        if args.dedup_index and "text" not in feed_cols:
-            raise ValueError(
-                "dedup_index_path needs a 'text' column in the feed schema"
-            )
-        if args.embedding_index and "embedding" not in feed_cols:
-            raise ValueError(
-                "embedding_index_path needs an 'embedding' column in the "
-                "feed schema"
-            )
         merge_batch(
             table, raw, ORDER_COLS, app_id=args.app_id, batch_id=0,
             epoch=args.epoch, post_collapse=_post,
         )
-        if args.dedup_index:
-            # same ingest-time flagging as the streaming path, over the
-            # one backfill batch — a user combining --backfill with
-            # --dedup-index would otherwise silently get no index/flags
-            from .ops.dedup_index import (
-                bootstrap_dedup_index,
-                bootstrap_flags_table,
-            )
-            from .streaming.runner import dedup_flag_batch
-
-            dedup_flag_batch(
-                raw,
-                (
-                    bootstrap_dedup_index(
-                        spark, args.dedup_index, n_buckets=8, mutable=True
-                    ),
-                    bootstrap_flags_table(
-                        spark, args.dedup_index.rstrip("/") + "_flags"
-                    ),
-                ),
-                args.app_id,
-                0,
-                post=_post,
-            )
-        if args.embedding_index:
-            from .ops.ann_index import (
-                bootstrap_embedding_dedup_index,
-                bootstrap_embedding_flags_table,
-            )
-            from .streaming.runner import embedding_flag_batch
-
-            embedding_flag_batch(
-                raw,
-                (
-                    bootstrap_embedding_dedup_index(
-                        spark, args.embedding_index, n_buckets=8, mutable=True
-                    ),
-                    bootstrap_embedding_flags_table(
-                        spark, args.embedding_index.rstrip("/") + "_flags"
-                    ),
-                ),
-                args.app_id,
-                0,
-                post=_post,
-            )
     else:
         snapshot_plan_path = None
         if args.snapshot_source or args.snapshot_plan:
@@ -343,8 +284,6 @@ def main(argv: list[str] | None = None) -> None:
             snapshot_plan_path=snapshot_plan_path,
             snapshot_source_dir=args.snapshot_source,
             snapshot_chunks_per_trigger=args.snapshot_chunks_per_trigger,
-            dedup_index_path=args.dedup_index,
-            embedding_index_path=args.embedding_index,
             drift_cols=(
                 # tolerate "a, b" / trailing commas: strip each token and
                 # drop empties so the runner's membership check sees the

@@ -1,2 +1,3 @@
 """Training-data pipeline operators (dedup, similarity, text analysis,
-multimodal plumbing) — first-class components beside the CDC engine."""
+corpus curation) beside the CDC engine; no CDC path, streaming-runner
+option or driver query uses them."""

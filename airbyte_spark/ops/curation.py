@@ -35,14 +35,10 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..job import EMAIL_RE, PHONE_RE, redact_text
 from .hashing import h60
 from .text_analysis import tokens
 
-#: email / phone patterns shared verbatim with the DuckDB oracle — kept
-#: RE2-compatible (no lookarounds, no backrefs) so Java regex (Spark) and
-#: RE2 (DuckDB) agree on every match.
-EMAIL_RE = r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}"
-PHONE_RE = r"\+?[0-9][0-9()\- ]{6,}[0-9]"
 
 
 def ngram_hashes(toks: Column, n: int) -> Column:
@@ -118,18 +114,6 @@ def decontaminate(
     )
 
 
-def redact_text(text: Column) -> Column:
-    """THE redaction contract as one column expression: emails redact
-    FIRST (an email's domain can contain digit runs a greedy phone
-    pattern would otherwise eat — the order is part of the contract; the
-    oracle applies the same order). Every redaction surface
-    (``redact_pii``, the ingest-time ``--redact-pii`` enrich preset)
-    MUST build on this expression so patterns and order can never
-    diverge between the batch op and the CLI."""
-    after_email = F.regexp_replace(text, EMAIL_RE, "<EMAIL>")
-    return F.regexp_replace(after_email, PHONE_RE, "<PHONE>")
-
-
 def redact_pii(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -138,8 +122,8 @@ def redact_pii(
     """Redact emails/phone numbers to typed placeholder tokens and count
     what was redacted — scan -> project, no shuffle, no Python.
 
-    The replace chain itself is ``redact_text`` (shared with the
-    ingest-time enrich preset); this op adds the per-pattern counts.
+    The replace chain itself is ``job.redact_text`` (the ingest-time
+    ``--redact-pii`` preset); this op adds the per-pattern counts.
     """
     emails = F.regexp_count(F.col(text_col), F.lit(EMAIL_RE)).cast("long")
     after_email = F.regexp_replace(F.col(text_col), EMAIL_RE, "<EMAIL>")

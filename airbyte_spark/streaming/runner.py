@@ -116,8 +116,8 @@ class ReplayConfig:
     #: DataFrame -> DataFrame applied AFTER the per-key collapse and
     #: canonicalization — |keys| rows per trigger, not |events| — on BOTH
     #: the main-table merge and the SCD-history write, so the two tables
-    #: always agree on the enriched values. The standard ingest-side
-    #: curation hook: PII redaction, quality scoring, language tagging.
+    #: always agree on the enriched values (e.g. job.py's --redact-pii
+    #: preset).
     #: Columns it ADDS must already exist in the table schema (bootstrap
     #: with an extended struct or evolve first); in-place rewrites of
     #: existing columns need no schema change.
@@ -169,31 +169,6 @@ class ReplayConfig:
     #: unneeded when the plan was staged (stage_chunks)
     snapshot_source_dir: Optional[str] = None
     snapshot_chunks_per_trigger: int = 2
-    #: ingest-time near-dup flagging (ops/dedup_index.py): maintain a
-    #: MUTABLE MinHash-LSH band index of the stream's text at this path,
-    #: updated per trigger with each key's winning version (its CDC LSN is
-    #: the index version, so late stale events lose the resolution exactly
-    #: like on the main table; deletes retract the doc's entries), and
-    #: append candidate pairs to a fenced ``<path>_flags`` table (override
-    #: via dedup_flags_path) — the quarantine feed a curation pipeline
-    #: reviews downstream. doc_id = h60 of the pk (60-bit; collisions
-    #: vanishingly rare and only ever ADD a spurious candidate pair).
-    #: Cost per trigger: O(|keys| + matched buckets) — document-sized
-    #: streams only; OFF by default.
-    dedup_index_path: Optional[str] = None
-    dedup_flags_path: Optional[str] = None
-    dedup_text_col: str = "text"
-    #: ingest-time SEMANTIC near-dup flagging (ops/ann_index.py): the
-    #: sibling of dedup_index_path for an embedding column — maintain a
-    #: MUTABLE sign-LSH index of each key's winning vector (CDC LSN as
-    #: the version; updates re-point, deletes retract) and append
-    #: candidate pairs to a fenced ``<path>_flags`` table (override via
-    #: embedding_flags_path). The feed_struct must carry
-    #: ``embedding_col`` (array<float>) — e.g. vectors attached by an
-    #: upstream encoder or the ``enrich`` hook's sibling pipeline.
-    embedding_index_path: Optional[str] = None
-    embedding_flags_path: Optional[str] = None
-    embedding_col: str = "embedding"
     #: test hook: called as fault(batch_id) AFTER the merge commit — lets
     #: tests crash in the at-least-once window between sink commit and
     #: checkpoint commit
@@ -256,121 +231,9 @@ def bootstrap_mirror(spark: SparkSession, src: LakeTable, path: str) -> LakeTabl
     )
 
 
-def dedup_flag_batch(
-    batch_df: DataFrame,
-    dedup_ctx: tuple,
-    app_id: str,
-    batch_id: int,
-    *,
-    text_col: str = "text",
-    post: Optional[Callable[[DataFrame], DataFrame]] = None,
-) -> None:
-    """Ingest-time near-dup flagging for ONE change batch: collapse to the
-    per-key winners, mirror the index against them (upserts + retractions),
-    and append the candidate pairs to the flags table. Shared by the
-    streaming trigger (`_apply`) and the one-shot `--backfill` batch so
-    both paths keep the index in lockstep with the main table."""
-    from ..operators.dedup import latest_per_key
-    from ..ops.dedup_index import flag_and_ingest
-    from ..ops.hashing import h60
-
-    d_index, d_flags = dedup_ctx
-    top = latest_per_key(batch_df, PK, ORDER_COLS)
-    did = h60(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in PK]))
-    # the index must see the text the TABLE stores: same
-    # canonicalize+enrich as the merge's post-collapse
-    live = top.filter(F.col("_ab_cdc_deleted_at").isNull())
-    if post is not None:
-        live = post(live)
-    has_text = F.col(text_col).isNotNull()
-    docs = live.filter(has_text).select(
-        did.alias("doc_id"),
-        F.col(text_col).alias("text"),
-        F.col("_ab_cdc_lsn").cast("long").alias("_version"),
-    )
-    # deletes AND null-text winners both retract: a null text has
-    # no shingles — every such doc would otherwise collapse onto
-    # one degenerate band key and cross-flag all of them, and an
-    # update-to-null must stop the doc's OLD text from matching
-    retract = [
-        did.alias("doc_id"),
-        F.col("_ab_cdc_lsn").cast("long").alias("_version"),
-    ]
-    dels = (
-        top.filter(F.col("_ab_cdc_deleted_at").isNotNull())
-        .select(*retract)
-        .unionByName(live.filter(~has_text).select(*retract))
-    )
-    # flag_and_ingest commits the fenced flags append BEFORE its
-    # index merge: a crash in any window replays the trigger with
-    # either an unchanged index (identical recompute, flags fence
-    # skips) or both commits fenced — stale flags can never land
-    flag_and_ingest(
-        d_index,
-        docs,
-        app_id=app_id,
-        batch_id=batch_id,
-        version_col="_version",
-        deletes=dels,
-        flags_table=d_flags,
-    )
-
-
-def embedding_flag_batch(
-    batch_df: DataFrame,
-    emb_ctx: tuple,
-    app_id: str,
-    batch_id: int,
-    *,
-    emb_col: str = "embedding",
-    post: Optional[Callable[[DataFrame], DataFrame]] = None,
-) -> None:
-    """Semantic sibling of ``dedup_flag_batch``: mirror the mutable
-    sign-LSH embedding index against one change batch's per-key winners
-    (upserts re-point the vector's bucket row, deletes and null-embedding
-    winners retract) and append candidate pairs to the flags table —
-    flags committed before the index merge, same crash-window ordering."""
-    from ..operators.dedup import latest_per_key
-    from ..ops.ann_index import embedding_flag_and_ingest
-    from ..ops.hashing import h60
-
-    e_index, e_flags = emb_ctx
-    top = latest_per_key(batch_df, PK, ORDER_COLS)
-    vid = h60(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in PK]))
-    live = top.filter(F.col("_ab_cdc_deleted_at").isNull())
-    if post is not None:
-        live = post(live)
-    has_emb = F.col(emb_col).isNotNull()
-    vecs = live.filter(has_emb).select(
-        vid.alias("vec_id"),
-        F.col(emb_col).cast("array<float>").alias("embedding"),
-        F.col("_ab_cdc_lsn").cast("long").alias("_version"),
-    )
-    retract = [
-        vid.alias("vec_id"),
-        F.col("_ab_cdc_lsn").cast("long").alias("_version"),
-    ]
-    dels = (
-        top.filter(F.col("_ab_cdc_deleted_at").isNotNull())
-        .select(*retract)
-        .unionByName(live.filter(~has_emb).select(*retract))
-    )
-    embedding_flag_and_ingest(
-        e_index,
-        vecs,
-        app_id=app_id,
-        batch_id=batch_id,
-        version_col="_version",
-        deletes=dels,
-        flags_table=e_flags,
-    )
-
-
 def _snapshot_secondaries(
     scd_table: Optional[LakeTable],
     children: Optional[tuple[dict, list]],
-    dedup_ctx: Optional[tuple],
-    emb_ctx: Optional[tuple] = None,
 ) -> list[LakeTable]:
     """Every table (besides the main one) that ``_apply`` commits a chunk
     into — the set whose fences bound the snapshot resume point."""
@@ -379,10 +242,6 @@ def _snapshot_secondaries(
         secs.append(scd_table)
     if children is not None:
         secs.extend(children[0].values())
-    if dedup_ctx is not None:
-        secs.extend(dedup_ctx)
-    if emb_ctx is not None:
-        secs.extend(emb_ctx)
     return secs
 
 
@@ -393,8 +252,6 @@ def _process_batch(
     children: Optional[tuple[dict, list]] = None,
     tail_dst: Optional[LakeTable] = None,
     snapshot_ctx: Optional[tuple] = None,
-    dedup_ctx: Optional[tuple] = None,
-    emb_ctx: Optional[tuple] = None,
 ):
     # a feed without some of the ordering columns (e.g. no
     # _airbyte_emitted_at) orders by the ones it has
@@ -469,16 +326,6 @@ def _process_batch(
                 batch_id=batch_id,
                 strategy=cfg.strategy,
             )
-        if dedup_ctx is not None:
-            dedup_flag_batch(
-                batch_df, dedup_ctx, app_id, batch_id,
-                text_col=cfg.dedup_text_col, post=_post,
-            )
-        if emb_ctx is not None:
-            embedding_flag_batch(
-                batch_df, emb_ctx, app_id, batch_id,
-                emb_col=cfg.embedding_col, post=_post,
-            )
         return stats
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -496,13 +343,11 @@ def _process_batch(
             plan, snap_source = snapshot_ctx
             # resume from the MIN fence across every table _apply writes:
             # the per-table chunk commits are not atomic as a group, so a
-            # crash between the main merge and the SCD/children/dedup
-            # commits must re-run the chunk (each sub-merge fence-skips)
+            # crash between the main merge and the SCD/children commits
+            # must re-run the chunk (each sub-merge fence-skips)
             pend = pending_chunks(
                 table, plan,
-                secondary=_snapshot_secondaries(
-                    scd_table, children, dedup_ctx, emb_ctx
-                ),
+                secondary=_snapshot_secondaries(scd_table, children),
             )
             for i in pend[: max(0, cfg.snapshot_chunks_per_trigger)]:
                 chunk = stamp_chunk(
@@ -635,50 +480,6 @@ def run_replay_stream(
         )
         if child_specs:
             children = (child_tables, child_specs)
-    dedup_ctx = None
-    if cfg.dedup_index_path:
-        from ..ops.dedup_index import bootstrap_dedup_index, bootstrap_flags_table
-
-        feed_cols = {f.name for f in cfg.feed_struct.fields}
-        if cfg.dedup_text_col not in feed_cols:
-            raise ValueError(
-                f"dedup_index_path needs a {cfg.dedup_text_col!r} column in "
-                "feed_struct (set dedup_text_col to the document column)"
-            )
-        dedup_ctx = (
-            bootstrap_dedup_index(
-                spark, cfg.dedup_index_path, n_buckets=8, mutable=True
-            ),
-            bootstrap_flags_table(
-                spark,
-                cfg.dedup_flags_path
-                or cfg.dedup_index_path.rstrip("/") + "_flags",
-            ),
-        )
-    emb_ctx = None
-    if cfg.embedding_index_path:
-        from ..ops.ann_index import (
-            bootstrap_embedding_dedup_index,
-            bootstrap_embedding_flags_table,
-        )
-
-        feed_cols = {f.name for f in cfg.feed_struct.fields}
-        if cfg.embedding_col not in feed_cols:
-            raise ValueError(
-                f"embedding_index_path needs a {cfg.embedding_col!r} "
-                "column in feed_struct (set embedding_col to the vector "
-                "column)"
-            )
-        emb_ctx = (
-            bootstrap_embedding_dedup_index(
-                spark, cfg.embedding_index_path, n_buckets=8, mutable=True
-            ),
-            bootstrap_embedding_flags_table(
-                spark,
-                cfg.embedding_flags_path
-                or cfg.embedding_index_path.rstrip("/") + "_flags",
-            ),
-        )
     snapshot_ctx = None
     if cfg.snapshot_plan_path:
         from ..sources.snapshot import SnapshotPlan
@@ -724,8 +525,7 @@ def run_replay_stream(
     writer = (
         stream.writeStream.foreachBatch(
             _process_batch(
-                table, cfg, scd_table, children, tail_dst, snapshot_ctx,
-                dedup_ctx, emb_ctx,
+                table, cfg, scd_table, children, tail_dst, snapshot_ctx
             )
         )
         .option("checkpointLocation", cfg.checkpoint_dir)
@@ -747,16 +547,11 @@ def run_replay_stream(
                 )
 
                 plan, snap_source = snapshot_ctx
-                proc = _process_batch(
-                    table, cfg, scd_table, children, dedup_ctx=dedup_ctx,
-                    emb_ctx=emb_ctx,
-                )
+                proc = _process_batch(table, cfg, scd_table, children)
                 drained = 0
                 for i in pending_chunks(
                     table, plan,
-                    secondary=_snapshot_secondaries(
-                        scd_table, children, dedup_ctx, emb_ctx
-                    ),
+                    secondary=_snapshot_secondaries(scd_table, children),
                 ):
                     chunk = stamp_chunk(
                         read_chunk(spark, snap_source, plan, i),

@@ -53,14 +53,6 @@ HEADLINE_QUERIES = [
     "cdc_replay_final_state",
     "cdc_scd2_history",
     "cdc_surrogate_hash",
-    "text_token_count",
-    "dedup_minhash_lsh",
-    # dedup_simhash (all-pairs) is the labeled small-corpus VERIFIER tier,
-    # deliberately O(n²) — only the banded scale path belongs in the
-    # headline; the verifier stays oracle-checked in CORRECTNESS
-    "dedup_simhash_banded",
-    "ann_cosine_topk",
-    "multimodal_meta",
 ]
 
 
@@ -398,8 +390,8 @@ def run_compute_probe(spark, feed_dir: str, runs: int = 2) -> float:
 
 
 def run_stream_replay(spark, feed_dir: str) -> float:
-    """Exactly-once Structured-Streaming replay (watermarked dedup ->
-    fenced merge-on-read ingest) of the same feed — the north_rule metric's
+    """Exactly-once Structured-Streaming replay (per-batch latest-per-key
+    collapse -> fenced merge-on-read ingest) of the same feed — the north_rule metric's
     streaming path. Fresh table+checkpoint each call."""
     from airbyte_spark.streaming import ReplayConfig, run_replay_stream
 

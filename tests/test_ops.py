@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from airbyte_spark.ops import dedup_docs, embeddings as emb_ops, text_analysis
 from airbyte_spark.ops.hashing import h60
-from airbyte_spark.ops.multimodal import attach_fake_payload, decode_image, extract_media_meta
 
 DOCS = [
     (1, "the cat sat on the mat"),
@@ -262,20 +261,6 @@ def test_sign_lsh_bucketing(emb):
     assert b[0] == 0b001 and b[2] == 0b010 and b[4] == 0
     out = emb_ops.sign_lsh_near_dup(emb, n_bits=3, threshold=0.5).collect()
     assert [(r.vec_a, r.vec_b) for r in out] == [(0, 1)]
-
-
-def test_multimodal_plumbing(docs):
-    meta = {r.doc_id: r for r in extract_media_meta(attach_fake_payload(docs)).collect()}
-    assert meta[1].n_bytes == 22
-    assert meta[1].content_md5 == hashlib.md5(b"the cat sat on the mat").hexdigest()
-    assert meta[1].media_kind == "image"
-    # JPEG now decodes for real (ops.jpeg): a junk payload with a JPEG
-    # signature is a corrupt-input ValueError, while formats with no
-    # native decoder stay behind NotImplementedError
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0" + b"\x00" * 16)
-    with pytest.raises(NotImplementedError):
-        decode_image(b"RIFF0000WEBPVP8 " + b"\x00" * 16)
 
 
 def test_connected_components_chain_and_isolates(spark):

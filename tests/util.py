@@ -13,24 +13,3 @@ def assert_same(spark_df, oracle_pdf: pd.DataFrame, keys=("conv_id", "turn_idx")
     want = normalize(oracle_pdf[got.columns.tolist()], keys)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
-
-def mutate_payload(base: bytes, rng, mode: int) -> bytes:
-    """One seeded corruption of a codec payload — the shared mutation
-    vocabulary of every decoder fuzz test (truncate / bit flip /
-    chop+garbage-tail / multi-flip). A new mutation mode added here
-    fuzzes every decoder family at once."""
-    b = bytearray(base)
-    mode %= 4
-    if mode == 0:  # truncate
-        return bytes(b[: rng.randrange(2, len(b))])
-    if mode == 1:  # single byte flip
-        i = rng.randrange(len(b))
-        b[i] ^= rng.randrange(1, 256)
-        return bytes(b)
-    if mode == 2:  # chop + garbage tail
-        i = rng.randrange(2, len(b))
-        return bytes(b[:i]) + bytes(rng.randrange(256) for _ in range(8))
-    for _ in range(5):  # multi flip
-        i = rng.randrange(len(b))
-        b[i] ^= rng.randrange(1, 256)
-    return bytes(b)
