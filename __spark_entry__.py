@@ -36,7 +36,7 @@ from airbyte_spark.sources.declarative import (
     sliced_read,
     substream_sliced_read,
 )
-from airbyte_spark.functions.text import canonicalize_udf
+from airbyte_spark.functions.text import canonicalize
 from airbyte_spark.functions.names import canonicalize_identifier_udf, resolve_collisions
 
 # ---------------------------------------------------------------------------
@@ -984,13 +984,14 @@ def q_cdc_event_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite training-data curation pass in ONE DataFrame expression:
-    canonicalize (pandas UDF) -> length filter -> exact-dedup keep-list.
-    The whole chain fuses into scan -> ArrowEvalPython -> filter -> hash
-    aggregate; no intermediate materialization."""
+    canonicalize -> length filter -> exact-dedup keep-list. The whole chain
+    fuses into scan -> project/filter (the canonicalizer is one Catalyst
+    expression) -> hash aggregate; no Python, no intermediate
+    materialization."""
     d = _t(spark, sf_dir, "documents")
     base = d.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        canonicalize_udf(F.col("text")).alias("canon"),
+        canonicalize("text").alias("canon"),
     ).withColumn(
         "n_tokens", F.size(F.split(F.trim("canon"), r"\s+")).cast("long")
     )
@@ -1187,12 +1188,12 @@ def q_cdc_name_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_text_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6: vectorized pandas-UDF text canonicalization (the engine's only
-    Python data path; Arrow-batched, never per-row)."""
+    """P6: text canonicalization as one Catalyst expression (the engine's
+    canonicalizer; byte-equal to the pandas oracle, no Python in the plan)."""
     d = _t(spark, sf_dir, "documents")
     return d.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        canonicalize_udf(F.col("text")).alias("canon_text"),
+        canonicalize("text").alias("canon_text"),
     )
 
 

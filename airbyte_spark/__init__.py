@@ -12,8 +12,8 @@ catalog    : stream catalog, JSON-schema->Spark type rules, schema diff
 lake       : ACID parquet + JSON-commit-log table format (bucketed,
              copy-on-write MERGE, tombstones, fencing, lineage)
 feedgen    : deterministic synthetic WAL/binlog segment generator
-functions  : text canonicalization (vectorized pandas UDF) and
-             identifier-name canonicalization
+functions  : text canonicalization (one Catalyst expression, with a
+             pandas oracle) and identifier-name canonicalization
 operators  : batch operators — window dedup / SCD2, CDC event projection,
              cursor scans
 streaming  : Structured Streaming replay runner (foreachBatch + MERGE)

@@ -1,2 +1,2 @@
-from .text import canonicalize_pandas, canonicalize_udf  # noqa: F401
+from .text import canonicalize, canonicalize_pandas, canonicalize_udf  # noqa: F401
 from .names import canonicalize_identifier, NameRegistry, resolve_collisions  # noqa: F401

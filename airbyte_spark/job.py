@@ -218,7 +218,6 @@ def main(argv: list[str] | None = None) -> None:
             feed_struct=feed_struct,
         )
         raw = spark.read.schema(feed_struct).parquet(f"{args.feed_dir}/*.parquet")
-        from .functions.text import canonicalize_udf  # noqa: F401 (worker warmup)
         from .plans.replay import prepare_changes
 
         _enrich = redact_pii_enrich() if args.redact_pii else (lambda df: df)

@@ -107,8 +107,8 @@ def merge_batch(
     pk = snap.primary_key
 
     # 1. collapse the (at-least-once, possibly duplicated) batch to the
-    #    winning event per key — D1-D3 in one hash aggregate. Expensive
-    #    per-row transforms (pandas-UDF canonicalization) run AFTER the
+    #    winning event per key — D1-D3 in one aggregate. Per-row
+    #    transforms (text canonicalization, enrichment) run AFTER the
     #    collapse via post_collapse: |keys| rows instead of |events|.
     src = latest_per_key(batch, pk, order_cols)
     if post_collapse is not None:

@@ -139,8 +139,8 @@ def scd_merge_batch(
 ) -> ScdMergeStats:
     """Apply one micro-batch to the SCD history table (fenced).
 
-    ``post_dedup`` runs expensive per-row transforms (pandas-UDF
-    canonicalization) AFTER the version collapse — |versions| rows, not
+    ``post_dedup`` runs per-row transforms (text canonicalization,
+    enrichment) AFTER the version collapse — |versions| rows, not
     |events| — and only on NEW rows (existing history was canonicalized
     when first written). ``bounded=True`` swaps the window for
     ``scd2_bounded`` (range-bucketed sorts) when single keys accumulate

@@ -13,11 +13,12 @@ Reference semantics being re-expressed (not translated):
 
 Scale notes (100 TB design point):
 * ``latest_per_key`` deliberately uses ``max_by`` aggregation instead of a
-  row_number window: hash aggregation gets a map-side partial combine, so the
+  row_number window: the aggregation gets a map-side partial combine, so the
   shuffle carries at most one row per (key, mapper) instead of every change
   event — on a 10^10-event feed with heavy update skew this is the difference
   between shuffling 10^10 rows and ~10^8. A window would sort entire hot
-  partitions.
+  partitions. Spark plans it as a ``SortAggregate`` on both sides of the
+  shuffle, not a hash aggregate: the ``max_by`` buffers hold strings.
 * ``scd2`` keeps the window form because history (lag/end_at) genuinely needs
   per-key ordering; it is only used for SCD2 outputs, never on the hot
   upsert path.
@@ -68,9 +69,9 @@ def latest_per_key(
 ) -> DataFrame:
     """Keep the single highest-(order_cols) row per pk.
 
-    Implemented as ``max_by(struct(payload), struct(order))`` groupBy — a hash
-    aggregate with map-side partial combine (see module docstring), NOT a
-    window sort. Ties beyond order_cols are impossible in a WAL (LSN is
+    Implemented as ``max_by(struct(payload), struct(order))`` groupBy — an
+    aggregate with map-side partial combine (see module docstring; it runs
+    as a ``SortAggregate``, as its buffers hold strings), NOT a window sort. Ties beyond order_cols are impossible in a WAL (LSN is
     unique); exact duplicate (pk, lsn) rows are identical, so max_by is
     deterministic for them.
     """

@@ -111,6 +111,6 @@ def salted_scd2_input(
 
 def salted_repartition(df: DataFrame, keys: Sequence[str], n_salt: int, n_partitions: int) -> DataFrame:
     """Repartition by (keys, salt) — spreads a hot key over n_salt tasks for
-    map-heavy follow-up work (e.g. the pandas-UDF canonicalizer)."""
+    map-heavy follow-up work (e.g. a costly per-row UDF)."""
     salted = with_salt(df, n_salt)
     return salted.repartition(n_partitions, *keys, "_salt").drop("_salt")

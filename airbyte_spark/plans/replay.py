@@ -6,10 +6,12 @@ into a single Catalyst plan, used (a) as the single-shot oracle path against
 which streaming replay is verified and (b) as the bulk-backfill entry point
 (initial CDC snapshot, S4).
 
-At 100 TB this is one scan + one hash aggregation: the ``latest_per_key``
+At 100 TB this is one scan + one aggregation: the ``latest_per_key``
 map-side combine means the shuffle carries ~|keys| rows, not |events| rows,
 and the parquet scan prunes to the selected columns (check with
-``.explain``: PushedFilters/ReadSchema).
+``.explain``: PushedFilters/ReadSchema). The aggregation runs as a
+``SortAggregate`` on both sides of the shuffle, because its ``max_by``
+buffers hold strings. No Python runs in the plan.
 """
 
 from __future__ import annotations
@@ -19,16 +21,19 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import canonicalize_udf
+from ..functions.text import canonicalize as canonicalize_text
+# Not called here. perfbench/tracing.py patches this module attribute under
+# ``--trace 1``; the import keeps that patch working (it is inert now).
+from ..functions.text import canonicalize_udf  # noqa: F401
 from ..operators.dedup import latest_per_key
 from ..schemas import CHANGE_STRUCT, ORDER_COLS, PK
 
 
 def prepare_changes(df: DataFrame, canonicalize: bool = True) -> DataFrame:
     """P4/P5/P6 for the change feed: typed columns are already parquet-typed;
-    canonicalize the text payload (vectorized pandas UDF — the only Python)."""
+    canonicalize the text payload (one Catalyst expression, no Python)."""
     if canonicalize and "text" in df.columns:
-        df = df.withColumn("text", canonicalize_udf(F.col("text")))
+        df = df.withColumn("text", canonicalize_text("text"))
     return df
 
 
@@ -50,10 +55,9 @@ def replay_df(
     canonicalize: bool = True,
 ) -> DataFrame:
     # Dedup FIRST, canonicalize the winners only: the winner per key depends
-    # solely on (lsn, updated_at, emitted_at), so running the pandas UDF
-    # after the collapse is semantically identical but touches |keys| rows
-    # instead of |events| — at 10^10 events with ~10^8 keys that removes
-    # ~99% of the Python-side work.
+    # solely on (lsn, updated_at, emitted_at), so canonicalizing after the
+    # collapse is semantically identical but touches |keys| rows instead of
+    # |events| — at 10^10 events with ~10^8 keys, ~1% of the text work.
     top = latest_per_key(raw, PK, ORDER_COLS)
     alive = top.filter(F.col("_ab_cdc_deleted_at").isNull())
     alive = prepare_changes(alive, canonicalize=canonicalize)

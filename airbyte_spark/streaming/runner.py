@@ -7,7 +7,7 @@ micro-batch into a LakeTable via the fenced MERGE:
     readStream(feed)
       -> foreachBatch:
            collapse to the latest event per key (pk, LSN order)
-           canonicalize text (pandas UDF)
+           canonicalize text (one Catalyst expression)
            conform to current table schema (cast / null-pad — star_intersect)
            merge_batch(...)  # fenced, atomic
 
@@ -267,7 +267,7 @@ def _process_batch(
         same treatment (audit gate included) as a tailed one."""
 
         def _post(df: DataFrame) -> DataFrame:
-            # canonicalization (pandas UDF) + optional enrichment run after
+            # canonicalization + optional enrichment run after
             # the per-key collapse inside the merge — |keys| rows, not
             # |events|
             out = prepare_changes(df, canonicalize=cfg.canonicalize)

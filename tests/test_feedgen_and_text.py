@@ -1,7 +1,17 @@
+import random
+import unicodedata
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from airbyte_spark.feedgen import FeedSpec, generate_feed, oracle_final_state
-from airbyte_spark.functions.text import canonicalize_pandas, canonicalize_udf
+from airbyte_spark.functions.text import (
+    canonicalize,
+    canonicalize_pandas,
+    canonicalize_udf,
+)
 
 
 def test_feed_deterministic(tmp_path):
@@ -84,6 +94,92 @@ def test_canonicalize_udf_matches_pandas(spark):
     ]
     want = list(canonicalize_pandas(pd.Series(vals, dtype=object)))
     assert got == [None if w is None else w for w in want]
+
+
+def _assert_matches_oracle(spark, tmp_path, vals):
+    """canonicalize() equals canonicalize_pandas on every value; the
+    comparison runs in Spark, only mismatches come back."""
+    want = canonicalize_pandas(pd.Series(vals, dtype=object))
+    path = tmp_path / "cases"
+    path.mkdir()
+    n_files = 4  # one task per file: the cases run in parallel
+    for k in range(n_files):
+        pq.write_table(
+            pa.table({
+                "i": pa.array(range(k, len(vals), n_files), pa.int64()),
+                "s": pa.array(vals[k::n_files], pa.string()),
+                "want": pa.array(list(want)[k::n_files], pa.string()),
+            }),
+            str(path / f"part-{k}.parquet"),
+        )
+    df = spark.read.parquet(str(path)).withColumn("got", canonicalize("s"))
+    bad = df.filter(~F.col("got").eqNullSafe(F.col("want"))).limit(10).collect()
+    assert bad == [], [
+        ([hex(ord(ch)) for ch in r["s"]], r["want"], r["got"]) for r in bad
+    ]
+
+
+def test_canonicalize_matches_oracle_on_every_code_point(spark, tmp_path):
+    """Every code point U+0000..U+10FFFF (surrogates excluded) as a
+    one-character string: the Catalyst canonicalizer's fold tables,
+    sentinel routing and per-character path agree with the oracle on all
+    of them, including code points unassigned in the oracle's Unicode
+    version."""
+    vals = [chr(cp) for cp in range(0x110000) if not 0xD800 <= cp <= 0xDFFF]
+    _assert_matches_oracle(spark, tmp_path, vals)
+
+
+def _fuzz_strings(n: int, seed: int) -> list:
+    """Seeded strings mixing every kind of code point the canonicalizer
+    treats differently."""
+    one, multi, marks = [], [], []
+    for cp in range(0x30000):
+        if 0xD800 <= cp <= 0xDFFF:
+            continue
+        c = chr(cp)
+        if unicodedata.combining(c):
+            marks.append(c)
+        d = "".join(
+            ch for ch in unicodedata.normalize("NFKD", c) if not unicodedata.combining(ch)
+        )
+        if d != c and len(d) == 1:
+            one.append(c)
+        elif len(d) > 1:
+            multi.append(c)
+    pools = {
+        "ascii": [chr(c) for c in range(0x20, 0x7F)] * 3,
+        "c0": [chr(c) for c in range(0x20)] + ["\x7f"],
+        "marks": marks,
+        "space": [chr(c) for c in range(0x110000) if chr(c).isspace()],
+        "one": one,
+        "multi": multi + ["…", "™", "ﬁ", "½", "\ufdfa"],
+        "hangul": [chr(c) for c in range(0xAC00, 0xD7A4)],
+        # assigned after Unicode 14.0: decomposing / marks in later versions
+        "later": [chr(c) for c in (*range(0x1E030, 0x1E06E), *range(0x1CCD6, 0x1CCFA))],
+        "any": None,
+        "edge": ["\uffff", "\x01", "\U0010ffff", "\u00a0", "\u3000"],
+    }
+    kinds = list(pools)
+    weights = [30, 6, 10, 8, 10, 6, 6, 6, 4, 2]
+    rng = random.Random(seed)
+    out = [None, "", " ", "\x00", "  spéçiäl  ", "a\tb\n\nc", "Ĉaŭ  mondo "]
+    while len(out) < n:
+        chars = []
+        for kind in rng.choices(kinds, weights, k=rng.randint(0, 24)):
+            if kind == "any":
+                cp = rng.randint(0, 0x10FFFF)
+                chars.append(chr(cp if not 0xD800 <= cp <= 0xDFFF else 0x41))
+            else:
+                chars.append(rng.choice(pools[kind]))
+        out.append("".join(chars))
+    return out
+
+
+def test_canonicalize_matches_oracle_on_mixed_fuzz(spark, tmp_path):
+    """20,000 seeded strings mixing ASCII, C0 controls, combining marks,
+    Unicode whitespace, one- and multi-character folds (…, ™, ﬁ, Hangul)
+    and code points assigned after Unicode 14.0."""
+    _assert_matches_oracle(spark, tmp_path, _fuzz_strings(20_000, seed=11))
 
 
 def test_debezium_projection_prefers_source_transaction_time(spark):

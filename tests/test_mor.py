@@ -399,3 +399,44 @@ def test_mor_merge_is_one_action_with_exact_bucket_lineage(
     assert stats.version is None
     assert set(os.listdir(data_dir)) == subdirs
     assert table.snapshot().fences["default"] == 1
+
+
+def test_replay_and_mor_trigger_plans_run_no_python(
+    spark, tmp_path, tmp_path_factory, monkeypatch
+):
+    """The canonicalizer runs in the JVM: neither a batch replay's plan nor
+    a streaming MOR trigger's merge-write plan has a Python evaluation node
+    (ArrowEvalPython for a pandas UDF, BatchEvalPython for a row UDF), yet
+    both canonicalize — their plans carry the fold table's translate."""
+    from airbyte_spark.plans.replay import batch_replay
+
+    feed = tmp_path_factory.mktemp("morfeed_nopy")
+    ev = generate_feed(str(feed), SPEC)
+
+    def physical(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    plans = {"replay": [physical(batch_replay(spark, str(feed)))]}
+    plans["mor"] = []
+    orig = LakeTable.write_data_files
+
+    def spy(self, snap, df, *a, **kw):
+        plans["mor"].append(physical(df))
+        return orig(self, snap, df, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "write_data_files", spy)
+    cfg = ReplayConfig(
+        feed_dir=str(feed),
+        table_path=str(tmp_path / "tbl"),
+        checkpoint_dir=str(tmp_path / "ck"),
+        max_files_per_trigger=SPEC.n_segments,
+        strategy="mor",
+    )
+    run_replay_stream(spark, cfg)
+    assert len(plans["mor"]) == 1  # one trigger, one merge write
+    for kind, texts in plans.items():
+        for text in texts:
+            assert "EvalPython" not in text, (kind, text)
+            assert "translate(" in text, (kind, text)
+    table = LakeTable(spark, cfg.table_path)
+    assert_same(table.read(), oracle_final_state(ev, canonicalize=canonicalize_pandas))

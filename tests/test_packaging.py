@@ -1,12 +1,15 @@
 """spark-submit --py-files artifact: the zip must be importable on its own
 (the executor-side condition) and carry every engine module."""
 
+import os
 import subprocess
 import sys
 
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+
 
 def test_pyfiles_zip_imports_standalone(tmp_path):
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from package import build_zip
 
     out = str(tmp_path / "airbyte_spark.zip")
