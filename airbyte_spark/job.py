@@ -18,6 +18,7 @@ master/executor config); local runs default to local[*] with AQE on.
 from __future__ import annotations
 
 import argparse
+import dataclasses
 
 from pyspark.sql import SparkSession
 
@@ -81,9 +82,10 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--compact-every", type=int, default=None,
                    help="with --strategy mor: fold deltas every N micro-batches")
     p.add_argument("--maintain-max-buckets", type=int, default=None,
-                   help="budget each --compact-every cycle: rewrite at most "
-                        "this many (worst-first) buckets per cycle instead "
-                        "of every fragmented bucket")
+                   help="budget each --compact-every and --compact cycle: "
+                        "rewrite at most this many (worst-first) buckets "
+                        "per cycle instead of every fragmented bucket "
+                        "(--compact repeats cycles until clean)")
     p.add_argument("--maintain-max-mb", type=int, default=None,
                    help="byte budget per maintenance cycle (MiB)")
     p.add_argument("--scd-table", default=None,
@@ -351,7 +353,7 @@ def main(argv: list[str] | None = None) -> None:
             f"applied={st.applied} resyncs={st.resyncs}"
         )
     if args.compact and not args.continuous:
-        from .lake import LakeTable
+        from .lake import FOLD_ALL, LakeTable, maintain_until_clean
 
         # fold EVERY table the sync maintains (main + SCD history + child
         # streams) — the SCD table through the re-windowing fold, never a
@@ -370,19 +372,13 @@ def main(argv: list[str] | None = None) -> None:
                 p = _os.path.join(args.child_tables, name)
                 if LakeTable.exists(p):
                     targets.append((LakeTable(spark, p), False))
+        # unbudgeted, the sync's own commits are over: reclaim every
+        # dereferenced file (no vacuum grace)
+        policy = maintenance_policy or dataclasses.replace(
+            FOLD_ALL, vacuum_grace_commits=0
+        )
         for t, is_scd in targets:
-            if maintenance_policy is not None:
-                from .lake import maintain_until_clean
-
-                maintain_until_clean(t, maintenance_policy, scd=is_scd)
-            elif is_scd:
-                from .lake import scd_compact
-
-                scd_compact(t)
-                t.vacuum()
-            else:
-                t.compact()
-                t.vacuum()
+            maintain_until_clean(t, policy, scd=is_scd)
     if args.schema_tests and not args.continuous:
         import json as _json
         import sys as _sys

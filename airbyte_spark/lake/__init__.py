@@ -22,6 +22,7 @@ from .pipeline import (  # noqa: F401
     tail_scd_into,
 )
 from .maintenance import (  # noqa: F401
+    FOLD_ALL,
     MaintenancePolicy,
     MaintenanceReport,
     maintain,

@@ -1,17 +1,24 @@
-"""Budgeted, prioritized table maintenance — bounded-cost compaction cycles.
+"""Table maintenance — the one compaction path for every table.
 
-The blunt ``LakeTable.compact()`` rewrites EVERY fragmented bucket in one
-commit. Fine at test scale; at 10^10 events a single cycle can rewrite the
-whole table and stall the ingest loop for minutes while every bucket's
-gigabytes round-trip through the cluster. The public lakehouse answer is a
-*budgeted, prioritized* rewrite — Iceberg's ``rewrite_data_files`` with
-``max-file-group-size-bytes`` / ``partial-progress.enabled``, Delta's
-``OPTIMIZE`` with file-size targets: each maintenance cycle rewrites only
-the worst N buckets under a byte budget, and repeated cycles converge.
-(The reference itself delegates table hygiene to the destination warehouse
-— e.g. normalization emits incremental dbt models and leaves clustering to
-BigQuery/Snowflake — so this module is the lake-side capability a
-self-hosted sink needs instead.)
+Every fold goes through ``maintain()``: the streaming cadence
+(``ReplayConfig.compact_every_batches``) and ``job.py --compact`` call it
+for the main table, the SCD history table and each child table. A
+``MaintenancePolicy`` sets how much one cycle may rewrite. ``FOLD_ALL``,
+the runner's default, has no budget: it folds every bucket that holds a
+delta or two or more files, in one commit, then vacuums with a 2-commit
+grace.
+
+A budgeted policy bounds each cycle's cost. At 10^10 events an unbudgeted
+cycle can rewrite the whole table and stall the ingest loop for minutes
+while every bucket's gigabytes round-trip through the cluster. The public
+lakehouse answer is a *budgeted, prioritized* rewrite — Iceberg's
+``rewrite_data_files`` with ``max-file-group-size-bytes`` /
+``partial-progress.enabled``, Delta's ``OPTIMIZE`` with file-size
+targets: each cycle rewrites only the worst N buckets under a byte
+budget, and repeated cycles converge. (The reference itself delegates
+table hygiene to the destination warehouse — e.g. normalization emits
+incremental dbt models and leaves clustering to BigQuery/Snowflake — so
+this module is the lake-side capability a self-hosted sink needs instead.)
 
 ``maintain()`` plans from SNAPSHOT METADATA ONLY (per-bucket file counts,
 delta flags, byte sizes recorded at write time) — no directory walks, no
@@ -39,7 +46,7 @@ from typing import Optional, Sequence
 from .table import LakeTable, Snapshot
 
 
-@dataclass
+@dataclass(frozen=True)
 class MaintenancePolicy:
     #: a bucket is "fragmented" at >= this many files (deltas always count)
     min_files: int = 4
@@ -49,11 +56,17 @@ class MaintenancePolicy:
     #: (None = unbounded). The FIRST bucket is always admitted so one
     #: oversized bucket cannot deadlock maintenance.
     max_bytes_per_cycle: Optional[int] = 512 << 20
-    #: reclaim rewritten files afterward (commit-scoped, O(Δcommits))
-    vacuum: bool = True
     #: protect files dereferenced in the last N commits from vacuum so
     #: concurrent readers on recent snapshots can finish their scans
     vacuum_grace_commits: int = 2
+
+
+#: no budget: fold every bucket holding a delta or >= 2 files in one
+#: commit, then vacuum with a 2-commit grace — the streaming cadence's
+#: default when ``ReplayConfig.maintenance_policy`` is unset
+FOLD_ALL = MaintenancePolicy(
+    min_files=2, max_buckets_per_cycle=None, max_bytes_per_cycle=None
+)
 
 
 @dataclass
@@ -164,11 +177,13 @@ def maintain(
     scd: bool = False,
     bounded: bool = False,
 ) -> MaintenanceReport:
-    """One budgeted maintenance cycle; call on the streaming compaction
-    cadence (single-writer contract: from the owning writer, between
-    merges). ``scd=True`` folds with the re-windowing ``scd_compact``
-    (history tables must never be plain-compacted — the NULL derived
-    columns would be materialized as-is, see lake/scd.py)."""
+    """One maintenance cycle under ``policy``: fold the planned buckets,
+    then vacuum; call on the streaming compaction cadence (single-writer
+    contract: from the owning writer, between merges). ``scd=True`` folds
+    with the re-windowing ``scd_compact`` (history tables must never be
+    plain-compacted — the NULL derived columns would be materialized
+    as-is, see lake/scd.py); a COW history table has nothing to fold, so
+    the cycle only vacuums it."""
     policy = policy or MaintenancePolicy()
     snap = table.snapshot()
     chosen, deferred, stats = plan_maintenance(table, policy, snap)
@@ -201,10 +216,9 @@ def maintain(
                 _resolve_bytes(table, stats[b]) for b in chosen
             )
             report.files_rewritten = sum(stats[b]["files"] for b in chosen)
-    if policy.vacuum:
-        report.vacuumed_files = len(
-            table.vacuum(grace_commits=policy.vacuum_grace_commits)
-        )
+    report.vacuumed_files = len(
+        table.vacuum(grace_commits=policy.vacuum_grace_commits)
+    )
     return report
 
 

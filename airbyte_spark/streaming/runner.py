@@ -41,13 +41,13 @@ from __future__ import annotations
 import logging
 import os
 from dataclasses import dataclass, field
-from typing import Callable, Optional
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..lake import LakeTable, merge_batch
+from ..lake import FOLD_ALL, LakeTable, MaintenancePolicy, maintain, merge_batch
 from ..plans.replay import prepare_changes
 from ..schemas import CHANGE_META_COLS, CHANGE_STRUCT, ORDER_COLS, PK, TRANSCRIPT_STRUCT
 from ..catalog import TableSchema
@@ -75,18 +75,21 @@ class ReplayConfig:
     watermark: str = "2 hours"
     #: "cow" rewrites touched buckets per batch (read-optimized);
     #: "mor" appends delta files resolved at scan (write-optimized — the
-    #: 10^10-event streaming path; compact() folds deltas periodically)
+    #: 10^10-event streaming path; maintenance folds deltas on the
+    #: compact_every_batches cadence)
     strategy: str = "cow"
-    #: with strategy="mor": fold deltas into base (+vacuum) every N
-    #: micro-batches — bounds scan-time resolution fan-in while keeping
-    #: the per-batch write cost O(batch) between folds
+    #: run one lake.maintenance.maintain cycle (fold deltas into base,
+    #: then vacuum) on the main, SCD history and child tables after
+    #: batch ids N-1, 2N-1, ... (not after a fenced re-delivery) — bounds
+    #: scan-time resolution fan-in while keeping the per-batch write cost
+    #: O(batch) between folds
     compact_every_batches: Optional[int] = None
-    #: bound each maintenance cycle's rewrite cost (lake.maintenance): the
-    #: cadence then rewrites only the worst buckets under the policy's
-    #: bucket-count/byte budgets instead of every fragmented bucket — at
-    #: 10^10 events a blunt compact() can rewrite the whole table inside
-    #: the ingest loop. None keeps the unbudgeted fold (test scale).
-    maintenance_policy: Optional[object] = None
+    #: the policy of those cycles. None = FOLD_ALL: every fragmented or
+    #: delta-holding bucket in one commit (test scale). A budgeted policy
+    #: rewrites only the worst buckets under its bucket-count/byte budgets
+    #: and defers the rest — at 10^10 events an unbudgeted cycle can
+    #: rewrite the whole table inside the ingest loop.
+    maintenance_policy: Optional[MaintenancePolicy] = None
     #: maintain a <stream>_scd Type-2 history table at this path alongside
     #: the SCD1 latest-state table (reference's incremental SCD contract,
     #: stream_processor.py:892-942); each table carries its own fence
@@ -380,43 +383,17 @@ def _process_batch(
         ):
             # single-writer window between merges: safe to fold; the grace
             # window keeps files referenced by the last few snapshots so a
-            # concurrent reader mid-scan never loses its files
-            if cfg.maintenance_policy is not None:
-                from ..lake.maintenance import maintain
-
-                maintain(table, cfg.maintenance_policy)
-                if scd_table is not None:
-                    if cfg.scd_strategy == "mor":
-                        maintain(scd_table, cfg.maintenance_policy, scd=True)
-                    else:
-                        # COW history: every scd_merge rewrote its touched
-                        # buckets — without a vacuum the dereferenced
-                        # files accumulate one bucket-rewrite per batch
-                        scd_table.vacuum(
-                            grace_commits=cfg.maintenance_policy.vacuum_grace_commits
-                        )
-                if children is not None:
-                    for ct in children[0].values():
-                        maintain(ct, cfg.maintenance_policy)
-            else:
-                table.compact()
-                table.vacuum(grace_commits=2)
-                if scd_table is not None:
-                    if cfg.scd_strategy == "mor":
-                        from ..lake.scd import scd_compact
-
-                        # re-windowing fold (NOT plain compact: the derived
-                        # SCD columns must be materialized from the
-                        # next-version lag)
-                        scd_compact(scd_table)
-                    # COW rewrites dereference whole buckets per batch —
-                    # both strategies need the reclaim
-                    scd_table.vacuum(grace_commits=2)
-                if children is not None:
-                    # child tables use plain LSN resolution — ordinary fold
-                    for ct in children[0].values():
-                        ct.compact()
-                        ct.vacuum(grace_commits=2)
+            # concurrent reader mid-scan never loses its files. The history
+            # table folds through the re-windowing scd_compact; a COW
+            # history table has no deltas and one file per bucket, so it
+            # only vacuums the buckets each scd_merge rewrote.
+            policy = cfg.maintenance_policy or FOLD_ALL
+            maintain(table, policy)
+            if scd_table is not None:
+                maintain(scd_table, policy, scd=True)
+            if children is not None:
+                for ct in children[0].values():
+                    maintain(ct, policy)
         if cfg.fault is not None:
             cfg.fault(batch_id)
 

@@ -791,3 +791,270 @@ def test_plan_maintenance_lazy_legacy_byte_stats(spark, tmp_path, monkeypatch):
     )
     assert chosen == [0, 1]
     assert len(calls) == 10  # only the two admitted buckets' files
+
+
+# ---------------------------------------------------------------- one path
+#
+# The streaming cadence and ``job.py --compact`` fold every table through
+# ``maintain``; with no policy they use FOLD_ALL (``--compact`` with no
+# vacuum grace). The twin-table tests
+# below check that FOLD_ALL does exactly what a plain ``compact()`` /
+# ``scd_compact()`` plus ``vacuum(grace_commits=2)`` does: each pair of
+# tables starts as byte copies of one table (same file names), then one
+# twin is maintained and the other folded by hand.
+
+
+def _twin(spark, table, path):
+    import shutil
+
+    shutil.copytree(table.path, str(path))
+    return LakeTable(spark, str(path))
+
+
+def _commit_entry(table, version):
+    import json
+
+    with open(table._log_path(version)) as f:
+        return json.load(f)
+
+
+def _disk_listing(table):
+    out = []
+    for root, _dirs, names in os.walk(os.path.join(table.path, "data")):
+        out += [
+            os.path.relpath(os.path.join(root, nm), table.path)
+            for nm in names if nm.endswith(".parquet")
+        ]
+    return out
+
+
+def _disk_files(table, before):
+    """Parquet files on disk: names in ``before`` as-is, files written
+    since as (bucket dir, "new") — rewrites get fresh uuid names, so twins
+    compare by how many new files each bucket holds."""
+    import collections
+
+    return collections.Counter(
+        rel if rel in before else (os.path.basename(os.path.dirname(rel)), "new")
+        for rel in _disk_listing(table)
+    )
+
+
+def _files_per_bucket(snap):
+    per_bucket = {}
+    for p, m in snap.files.items():
+        per_bucket.setdefault(m["bucket"], []).append(p)
+    return per_bucket
+
+
+def test_fold_all_matches_compact_and_vacuum_on_mor_table(
+    spark, tmp_path, tmp_path_factory
+):
+    """maintain(t, FOLD_ALL) on a fragmented MOR table == t.compact();
+    t.vacuum(grace_commits=2): the same buckets rewritten by one compact
+    commit, one file per bucket, the same resolved rows and the same files
+    left on disk. Buckets holding deltas and delta-free buckets holding two
+    base files are folded; healthy buckets (one base file) are left
+    alone."""
+    from airbyte_spark.lake import FOLD_ALL, maintain
+
+    feed = tmp_path_factory.mktemp("fafeed")
+    ev = generate_feed(
+        str(feed),
+        FeedSpec(n_convs=24, turns_per_conv=4, n_updates=100, n_deletes=10,
+                 dup_rate=0.05, late_rate=0.05, n_segments=4, seed=61),
+    )
+    cols = [f.name for f in CHANGE_STRUCT.fields]
+    table = _mk_table(spark, tmp_path / "a", n_buckets=8)
+
+    def mor(pdf, batch_id):
+        merge_batch(
+            table, spark.createDataFrame(pdf[cols], schema=CHANGE_STRUCT),
+            ORDER_COLS, batch_id=batch_id, strategy="mor",
+        )
+
+    half = len(ev) // 2
+    mor(ev.iloc[:half], 0)
+    table.compact()  # every bucket now one base file
+    # later batches touch only a few conversations: some buckets gain
+    # deltas, the rest stay healthy
+    rest = ev.iloc[half:]
+    convs = sorted(rest["conv_id"].unique())
+    mor(rest[rest["conv_id"].isin(convs[:2])], 1)
+    mor(rest[rest["conv_id"].isin(convs[2:3])], 2)
+    mor(rest[rest["conv_id"].isin(convs[:1])], 3)
+    delta_buckets = {
+        m["bucket"] for m in table.snapshot().files.values()
+        if m["kind"] == "delta"
+    }
+    # and one delta-free bucket gets a second base file: an appended new
+    # conversation that hashes outside the delta buckets
+    cands = pd.DataFrame({"conv_id": [f"fresh-{i}" for i in range(32)]})
+    fresh_id = next(
+        r["conv_id"]
+        for r in spark.createDataFrame(cands)
+        .select("conv_id", table.bucket_expr(table.snapshot()).alias("b"))
+        .collect()
+        if r["b"] not in delta_buckets
+    )
+    fresh = ev[ev["_ab_cdc_deleted_at"].isna()].iloc[:1].copy()
+    fresh["conv_id"] = fresh_id
+    fresh["_ab_cdc_lsn"] = int(ev["_ab_cdc_lsn"].max()) + 1
+    table.append(
+        spark.createDataFrame(fresh[cols], schema=CHANGE_STRUCT),
+        lsn_col="_ab_cdc_lsn",
+    )
+    applied = pd.concat([
+        ev.iloc[:half], rest[rest["conv_id"].isin(convs[:3])], fresh
+    ])
+
+    twin = _twin(spark, table, tmp_path / "b")
+    snap0 = table.snapshot()
+    before = set(_disk_listing(table))
+    per_bucket0 = _files_per_bucket(snap0)
+    base_fragmented = {
+        b for b, v in per_bucket0.items()
+        if len(v) >= 2 and b not in delta_buckets
+    }
+    assert delta_buckets and base_fragmented
+    assert len(per_bucket0) > len(delta_buckets | base_fragmented)
+
+    report = maintain(table, FOLD_ALL)
+    v_twin = twin.compact()
+    removed_twin = twin.vacuum(grace_commits=2)
+
+    assert report.version == v_twin == snap0.version + 1
+    ea, eb = _commit_entry(table, report.version), _commit_entry(twin, v_twin)
+    assert ea["op"] == eb["op"] == "compact"
+    assert sorted(ea["removes"]) == sorted(eb["removes"])
+    rewritten = sorted({snap0.files[p]["bucket"] for p in eb["removes"]})
+    assert report.compacted == rewritten
+    assert set(rewritten) == delta_buckets | base_fragmented
+    assert report.files_rewritten == len(eb["removes"])
+    assert report.vacuumed_files == len(removed_twin) > 0
+
+    snap_a, snap_b = table.snapshot(), twin.snapshot()
+    assert all(len(v) == 1 for v in _files_per_bucket(snap_a).values())
+    assert {b: len(v) for b, v in _files_per_bucket(snap_a).items()} == {
+        b: len(v) for b, v in _files_per_bucket(snap_b).items()
+    }
+    assert {m["kind"] for m in snap_a.files.values()} == {"base"}
+    keys = ("conv_id", "turn_idx", "text")
+    assert_same(table.read(), twin.read().toPandas(), keys=keys)
+    assert_same(table.read(), oracle_final_state(applied), keys=keys)
+    assert _disk_files(table, before) == _disk_files(twin, before)
+
+
+def _scd_twins(spark, tmp_path, tmp_path_factory, strategy, n_batches):
+    import numpy as np
+    from airbyte_spark.lake.scd import bootstrap_scd_table, scd_merge_batch
+    from airbyte_spark.plans.replay import prepare_changes
+
+    feed = tmp_path_factory.mktemp(f"fs{strategy}feed")
+    ev = generate_feed(
+        str(feed),
+        FeedSpec(n_convs=16, turns_per_conv=3, n_updates=80, n_deletes=10,
+                 dup_rate=0.05, late_rate=0.05, n_segments=4, seed=67),
+    )
+    cols = [f.name for f in CHANGE_STRUCT.fields]
+    hist = bootstrap_scd_table(
+        spark, str(tmp_path / "a"), CHANGE_STRUCT, PK,
+        bucket_cols=["conv_id"], n_buckets=4,
+    )
+    for i, idx in enumerate(np.array_split(np.arange(len(ev)), n_batches)):
+        scd_merge_batch(
+            hist, spark.createDataFrame(ev.iloc[idx][cols], schema=CHANGE_STRUCT),
+            PK, app_id="fa", batch_id=i, post_dedup=prepare_changes,
+            strategy=strategy,
+        )
+    return hist, _twin(spark, hist, tmp_path / "b")
+
+
+def test_fold_all_matches_scd_compact_on_mor_history(
+    spark, tmp_path, tmp_path_factory
+):
+    """maintain(h, FOLD_ALL, scd=True) on a MOR history table ==
+    scd_compact(h); h.vacuum(grace_commits=2): the same read_scd, no
+    deltas left, and only the re-windowing fold commits (never a plain
+    compact, which would materialize NULL derived columns)."""
+    from airbyte_spark.lake import FOLD_ALL, maintain, read_scd, scd_compact
+
+    hist, twin = _scd_twins(spark, tmp_path, tmp_path_factory, "mor", 3)
+    v0 = hist.snapshot().version
+    before = set(_disk_listing(hist))
+
+    report = maintain(hist, FOLD_ALL, scd=True)
+    v_twin = scd_compact(twin)
+    removed_twin = twin.vacuum(grace_commits=2)
+
+    assert report.version == v_twin
+    assert [op for _v, op in hist.commit_ops(v0)] == ["scd_compact"]
+    assert [op for _v, op in twin.commit_ops(v0)] == ["scd_compact"]
+    assert sorted(_commit_entry(hist, report.version)["removes"]) == sorted(
+        _commit_entry(twin, v_twin)["removes"]
+    )
+    assert report.vacuumed_files == len(removed_twin)
+    for t in (hist, twin):
+        assert {m["kind"] for m in t.snapshot().files.values()} == {"base"}
+    keys = ("conv_id", "turn_idx", "_airbyte_start_at")
+    assert_same(read_scd(hist), read_scd(twin).toPandas(), keys=keys)
+    assert _disk_files(hist, before) == _disk_files(twin, before)
+
+
+def test_fold_all_only_vacuums_cow_history(spark, tmp_path, tmp_path_factory):
+    """A COW history table has no deltas and one file per bucket, so
+    maintain(h, FOLD_ALL, scd=True) commits nothing: it only reclaims the
+    files the per-batch bucket rewrites dereferenced, as
+    h.vacuum(grace_commits=2) does."""
+    from airbyte_spark.lake import FOLD_ALL, maintain
+
+    hist, twin = _scd_twins(spark, tmp_path, tmp_path_factory, "cow", 4)
+    snap0 = hist.snapshot()
+    before = set(_disk_listing(hist))
+    assert {m["kind"] for m in snap0.files.values()} == {"base"}
+    assert all(len(v) == 1 for v in _files_per_bucket(snap0).values())
+
+    report = maintain(hist, FOLD_ALL, scd=True)
+    removed_twin = twin.vacuum(grace_commits=2)
+
+    assert report.compacted == [] and report.version == snap0.version
+    assert hist.snapshot().version == snap0.version  # no commit
+    assert report.vacuumed_files == len(removed_twin) > 0
+    assert _disk_files(hist, before) == _disk_files(twin, before)
+
+
+def test_replay_config_type_hints_resolve():
+    """Every ReplayConfig annotation names something the runner module
+    imports (a missing import only shows when the hints are resolved)."""
+    import typing
+
+    from airbyte_spark.lake import MaintenancePolicy
+    from airbyte_spark.streaming import ReplayConfig
+
+    hints = typing.get_type_hints(ReplayConfig)
+    assert hints["maintenance_policy"] == typing.Optional[MaintenancePolicy]
+    assert hints["drift_cols"] == typing.Optional[typing.Sequence[str]]
+
+
+def test_runner_and_cli_maintain_only_through_maintain():
+    """The streaming runner and job.py have one maintenance path: neither
+    calls compact, scd_compact or vacuum itself; every fold and reclaim
+    goes through lake.maintenance.maintain / maintain_until_clean."""
+    import ast
+
+    import airbyte_spark.job as job_mod
+    import airbyte_spark.streaming.runner as runner_mod
+
+    banned = {"compact", "scd_compact", "vacuum"}
+    for mod in (runner_mod, job_mod):
+        with open(mod.__file__) as f:
+            tree = ast.parse(f.read())
+        calls = []
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name in banned:
+                calls.append(f"{mod.__name__}:{node.lineno} {name}()")
+        assert not calls, f"maintenance outside maintain(): {calls}"
