@@ -75,12 +75,15 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--continuous", action="store_true",
                    help="keep tailing instead of Trigger.AvailableNow")
     p.add_argument("--strategy", choices=["cow", "mor"], default="cow",
-                   help="copy-on-write (read-optimized) or merge-on-read "
-                        "(write-optimized streaming ingest)")
+                   help="every table (main, history, children): cow folds "
+                        "each batch's touched buckets in its commit "
+                        "(read-optimized); mor leaves the deltas for reads "
+                        "and maintenance (write-optimized streaming ingest)")
     p.add_argument("--compact", action="store_true",
                    help="fold deltas / compact + vacuum after the bounded run")
     p.add_argument("--compact-every", type=int, default=None,
-                   help="with --strategy mor: fold deltas every N micro-batches")
+                   help="fold deltas / compact + vacuum every table every "
+                        "N micro-batches")
     p.add_argument("--maintain-max-buckets", type=int, default=None,
                    help="budget each --compact-every and --compact cycle: "
                         "rewrite at most this many (worst-first) buckets "
@@ -91,11 +94,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--scd-table", default=None,
                    help="also maintain a Type-2 <stream>_scd history table "
                         "at this path (incremental per micro-batch)")
-    p.add_argument("--scd-strategy", choices=["cow", "mor"], default="cow",
-                   help="history-table write strategy: cow re-windows the "
-                        "touched buckets per batch; mor appends immutable "
-                        "version deltas (O(batch)/trigger, folded by "
-                        "--compact / --compact-every)")
     p.add_argument("--child-tables", default=None,
                    help="persist nested child streams (one fenced LakeTable "
                         "per array column of the feed, any depth) under "
@@ -276,7 +274,6 @@ def main(argv: list[str] | None = None) -> None:
             strategy=args.strategy,
             compact_every_batches=args.compact_every,
             scd_table_path=args.scd_table,
-            scd_strategy=args.scd_strategy,
             child_tables_path=args.child_tables,
             stream_name=args.stream_name,
             feed_struct=feed_struct,

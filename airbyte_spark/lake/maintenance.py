@@ -24,10 +24,11 @@ this module is the lake-side capability a self-hosted sink needs instead.)
 delta flags, byte sizes recorded at write time) — no directory walks, no
 footer reads — then:
 
-1. folds/compacts the chosen buckets (``scd_compact`` for history tables —
-   plain compaction would materialize NULL derived columns — and
-   ``LakeTable.compact`` otherwise); per-bucket folding is exact because a
-   key's rows never span buckets, so partial progress converges;
+1. folds/compacts the chosen buckets of the snapshot it planned on
+   (``scd_compact`` for history tables — plain compaction would
+   materialize NULL derived columns — and ``LakeTable.compact``
+   otherwise); per-bucket folding is exact because a key's rows never span
+   buckets, so partial progress converges;
 2. commit-scoped ``vacuum`` to reclaim the rewritten files.
 
 Priority order (why): buckets carrying MOR delta files first — every delta
@@ -183,32 +184,25 @@ def maintain(
     with the re-windowing ``scd_compact`` (history tables must never be
     plain-compacted — the NULL derived columns would be materialized
     as-is, see lake/scd.py); a COW history table has nothing to fold, so
-    the cycle only vacuums it."""
+    the cycle only vacuums it. The plan and the fold read one snapshot."""
     policy = policy or MaintenancePolicy()
     snap = table.snapshot()
     chosen, deferred, stats = plan_maintenance(table, policy, snap)
     report = MaintenanceReport(version=snap.version, deferred=deferred)
     if chosen:
+        # fold the version just planned on: one snapshot per cycle
         if scd:
             from .scd import scd_compact
 
-            # delta buckets need the re-windowing fold; delta-FREE
-            # fragmented buckets hold only fully-resolved base files
-            # ((pk, cursor) unique, derived columns materialized), so the
-            # plain small-file rewrite is an identity on their rows
-            delta_chosen = [b for b in chosen if stats[b]["deltas"] > 0]
-            clean_chosen = [b for b in chosen if stats[b]["deltas"] == 0]
-            v = snap.version
-            if delta_chosen:
-                v = scd_compact(table, bounded=bounded, buckets=delta_chosen)
-            if clean_chosen:
-                v = table.compact(
-                    min_files=max(2, policy.min_files), buckets=clean_chosen
-                )
-            report.version = v
+            # scd_compact re-windows each chosen bucket holding a delta or
+            # two or more files (an identity on a delta-free bucket's
+            # resolved rows) — the same buckets compact() would pick
+            report.version = scd_compact(
+                table, bounded=bounded, buckets=chosen, snap=snap
+            )
         else:
             report.version = table.compact(
-                min_files=max(2, policy.min_files), buckets=chosen
+                min_files=max(2, policy.min_files), buckets=chosen, snap=snap
             )
         if report.version != snap.version:
             report.compacted = sorted(chosen)

@@ -1,4 +1,5 @@
-"""Copy-on-write MERGE with LSN conflict resolution and commit fencing.
+"""MERGE with LSN conflict resolution and commit fencing — one delta write,
+folded in the same commit under copy-on-write.
 
 The Spark-first replacement for the reference's incremental SCD chain
 (stream_processor.py:892-942 union of new data with re-opened active rows,
@@ -16,22 +17,23 @@ the row, so late lower-LSN events cannot resurrect the key across batches.
 Scale shape (the part that must survive 100 TB):
 1. The batch is first collapsed to ONE row per key via ``latest_per_key``
    (hash agg with map-side combine — no window sort).
-2. Touched buckets are computed from the batch keys (≤ n_buckets values);
-   only those buckets' files are read and rewritten. A micro-batch touching
-   B of N buckets costs O(B/N) of the table, not O(table).
-3. The join runs target-LEFT-OUTER-batch? No — full outer on pk, but only
-   over touched buckets; AQE turns it into a broadcast join whenever the
-   deduped batch is small (the common CDC case). Skewed conv_ids are immune
-   here because the join/agg key is the full (conv_id, turn_idx) pk, and
-   AQE skew-join handles residual imbalance.
-4. Fence + adds/removes + lineage land in ONE atomic commit; a replayed
-   batch_id is a no-op BEFORE any compute happens.
-5. A merge-on-read batch is ONE Spark action, its write: collapse,
+2. One write for both strategies: the collapsed batch is appended as
+   per-bucket DELTA files in ONE Spark action, its write. Collapse,
    canonicalize, conform and bucket all run inside it, and the per-bucket
    lineage (rows, LSN high-watermark, deletes) comes from the written
    files' footers plus an Observation on the same write — no persist, no
-   stats job. Only the COW path runs a stats job first: it must know the
-   touched buckets before it reads the target.
+   stats job.
+3. One resolution rule: the merge-on-read scan's latest-per-key by
+   (``__lsn``, −commit) — a strictly newer LSN wins, and on a tie the older
+   commit keeps its row. strategy="mor" commits the deltas and leaves them
+   to reads and compaction; strategy="cow" folds them at once: compaction's
+   rewrite (``LakeTable.fold_buckets``) over the touched buckets of the
+   table-plus-deltas view, committed in place of those buckets' old files.
+   Only the touched buckets (≤ n_buckets, known from the delta write) are
+   read and rewritten, so a batch touching B of N buckets costs O(B/N) of
+   the table. The deltas are never committed and are deleted afterwards.
+4. Fence + adds/removes + lineage land in ONE atomic commit; a replayed
+   batch_id is a no-op BEFORE any compute happens.
 
 Lineage ``rows_in`` counts the batch's rows after the per-key collapse.
 Nothing upstream drops cross-batch re-deliveries (the sink is idempotent
@@ -41,14 +43,14 @@ event delivered again in a later batch is counted again there.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.dedup import latest_per_key
-from .table import LakeTable, META_DELETED, META_LSN, Snapshot
+from .table import LakeTable, META_DELETED, META_LSN, Snapshot, overlay
 
 
 @dataclass
@@ -83,15 +85,16 @@ def merge_batch(
     commit_empty: bool = True,
 ) -> MergeStats:
     """strategy:
-    * "cow" (copy-on-write) — read + full-outer-resolve + rewrite the
-      touched buckets. Read-optimized: scans never pay resolution. Cost
-      per batch is O(touched fraction of table) — right when batches are
-      large relative to the table or reads dominate.
-    * "mor" (merge-on-read) — append the collapsed batch as per-bucket
+    * "mor" (merge-on-read) — commit the collapsed batch as per-bucket
       DELTA files; the scan resolves latest-per-key by LSN; compaction
       folds deltas into base. Cost per batch is O(batch) — the LSM-style
       write path that keeps 10^10-event streaming ingest from rewriting
       the table every trigger (Iceberg MOR / Paimon equivalent).
+    * "cow" (copy-on-write) — the same delta write, then fold the touched
+      buckets in the same commit, so the table never carries deltas and
+      scans never pay resolution. Cost per batch is O(touched fraction of
+      table) — right when batches are large relative to the table or
+      reads dominate (Hudi inline compaction).
     Both are fenced identically; a replayed batch_id is a no-op either way.
 
     ``stage=True`` STAGES the commit instead of publishing it (write-
@@ -105,6 +108,7 @@ def merge_batch(
         return MergeStats(skipped=True)  # fenced: already committed
 
     pk = snap.primary_key
+    cow = strategy != "mor"
 
     # 1. collapse the (at-least-once, possibly duplicated) batch to the
     #    winning event per key — D1-D3 in one aggregate. Per-row
@@ -113,23 +117,12 @@ def merge_batch(
     src = latest_per_key(batch, pk, order_cols)
     if post_collapse is not None:
         src = post_collapse(src)
-    # conform to the table schema ONCE for both strategies: a just-evolved
-    # table's feed may not carry the new column yet — the COW path below
-    # references s.<col> for every schema field and would otherwise die
-    # with UNRESOLVED_COLUMN (the MOR conform also casts, kept as-is)
-    missing = [fs for fs in snap.schema.fields if fs.name not in src.columns]
-    if missing:
-        src = src.select(
-            "*", *[F.lit(None).cast(fs.dtype).alias(fs.name) for fs in missing]
-        )
     src = src.withColumn(META_LSN, F.col(cursor).cast("long")).withColumn(
         "_src_deleted", F.col(deleted_col).isNotNull()
     )
     src = src.withColumn("_b", table.bucket_expr(snap))
-    if strategy == "mor":
-        written = _write_mor(table, snap, src)
-    else:
-        written = _write_cow(table, snap, src)
+    # the fold rewrites COW deltas right away: no point-lookup bloom for them
+    written = _write_mor(table, replace(snap, bloom_bits=0) if cow else snap, src)
 
     if written is None:
         if not commit_empty:
@@ -140,39 +133,54 @@ def merge_batch(
             return MergeStats(skipped=False, version=None, rows_in=0, buckets=[])
         # commit_empty=True (default): per-batch lineage accounting is
         # itself a feature (O2) and bounded-sync tests rely on it
-        adds, removes, per_bucket, rows_in = [], [], {}, 0
-        lineage = _lineage(app_id, batch_id, 0, 0, 0, None, epoch, rows_invalid)
-    else:
-        adds, removes, per_bucket, rows_upserted = written
-        rows_in = sum(v["rows"] for v in per_bucket.values())
-        # rows with a null/uncastable cursor (snapshot / full-refresh
-        # records without CDC metadata) yield max_lsn=None for their
-        # bucket — they must not crash the merge, and the high-watermark
-        # ignores them
-        _lsns = [v["max_lsn"] for v in per_bucket.values() if v["max_lsn"] is not None]
-        lineage = _lineage(
-            app_id, batch_id, rows_in, rows_upserted,
-            sum(v["deletes"] for v in per_bucket.values()),
-            max(_lsns) if _lsns else None, epoch, rows_invalid,
-        )
+        written = [], {}, 0
+    deltas, per_bucket, rows_upserted = written
+    rows_in = sum(v["rows"] for v in per_bucket.values())
+    # rows with a null/uncastable cursor (snapshot / full-refresh records
+    # without CDC metadata) yield max_lsn=None for their bucket — they
+    # must not crash the merge, and the high-watermark ignores them
+    _lsns = [v["max_lsn"] for v in per_bucket.values() if v["max_lsn"] is not None]
+    lineage = _lineage(
+        app_id, batch_id, rows_in, rows_upserted,
+        sum(v["deletes"] for v in per_bucket.values()),
+        max(_lsns) if _lsns else None, epoch, rows_invalid,
+    )
+    if per_bucket:
         lineage["partitions"] = per_bucket
     buckets = sorted(per_bucket)
-    if stage:
-        sid = table.stage_commit(
+    adds, removes = deltas, []
+    try:
+        if cow and deltas:
+            # 2. fold the touched buckets of table + deltas into base
+            #    files, committed in place of the buckets' old files
+            adds, lineage["rows_upserted"] = table.fold_buckets(
+                overlay(snap, deltas), buckets
+            )
+            removes = [
+                p for p, m in snap.files.items() if m["bucket"] in per_bucket
+            ]
+        if stage:
+            sid = table.stage_commit(
+                snap, adds, removes, fence=(app_id, batch_id), lineage=lineage,
+                op="merge",
+            )
+            return MergeStats(
+                skipped=False, rows_in=rows_in, touched_buckets=len(buckets),
+                staged_id=sid, buckets=buckets,
+            )
+        version = table.commit(
             snap, adds, removes, fence=(app_id, batch_id), lineage=lineage,
             op="merge",
+            # a COW rewrite resolved against the buckets it read: it may
+            # not be rebased onto a concurrent commit; appends (MOR,
+            # empty) may
+            retry_conflicts=0 if cow and deltas else 2,
         )
-        return MergeStats(
-            skipped=False, rows_in=rows_in, touched_buckets=len(buckets),
-            staged_id=sid, buckets=buckets,
-        )
-    version = table.commit(
-        snap, adds, removes, fence=(app_id, batch_id), lineage=lineage,
-        op="merge",
-        # a COW rewrite resolved against the buckets it read: it may not be
-        # rebased onto a concurrent commit; appends (MOR, empty) may
-        retry_conflicts=2 if strategy == "mor" or written is None else 0,
-    )
+    finally:
+        if cow:
+            # the COW deltas were only the fold's input: no commit
+            # references them, whether or not the commit landed
+            table.discard_write(deltas)
     return MergeStats(
         skipped=False, version=version, rows_in=rows_in,
         touched_buckets=len(buckets), buckets=buckets,
@@ -216,7 +224,7 @@ def _write_mor(table: LakeTable, snap: Snapshot, src: DataFrame):
     per_bucket = bucket_lineage(adds)
     for b in deleted.get["b"]:
         per_bucket[int(b)]["deletes"] += 1
-    return adds, [], per_bucket, total
+    return adds, per_bucket, total
 
 
 def bucket_lineage(adds: list[dict]) -> dict[int, dict]:
@@ -232,79 +240,6 @@ def bucket_lineage(adds: list[dict]) -> dict[int, dict]:
         ):
             v["max_lsn"] = ad["max_lsn"]
     return out
-
-
-def _write_cow(table: LakeTable, snap: Snapshot, src: DataFrame):
-    """Read + full-outer-resolve + rewrite the touched buckets. The
-    touched buckets must be known BEFORE the target read, so the collapsed
-    batch is persisted and one stats job yields them."""
-    pk = snap.primary_key
-    src = src.persist()
-    try:
-        # ONE stats job materializes the persist AND yields rows_in, the
-        # touched-bucket list, the LSN high-watermark, and delete counts —
-        # per bucket (the per-partition lineage the engine persists).
-        stats_rows = (
-            src.groupBy("_b")
-            .agg(
-                F.count("*").alias("n"),
-                F.max(META_LSN).alias("mx"),
-                F.sum(F.col("_src_deleted").cast("long")).alias("nd"),
-            )
-            .collect()
-        )
-        if not stats_rows:
-            return None
-        per_bucket = {
-            int(r["_b"]): {"rows": r["n"], "max_lsn": r["mx"], "deletes": r["nd"]}
-            for r in stats_rows
-        }
-
-        # 2. bucket pruning
-        touched = list(per_bucket)
-        touched_set = set(touched)
-        old_files = [
-            p for p, m in snap.files.items() if m["bucket"] in touched_set
-        ]
-        target = table.read(
-            buckets=touched, include_meta=True, include_deleted=True, snap=snap
-        ).withColumn("_b", table.bucket_expr(snap))
-
-        # 3. resolve: full outer on pk, source wins iff strictly newer LSN
-        payload = [f.name for f in snap.schema.fields if f.name not in pk]
-        t = target.alias("t")
-        s = src.alias("s")
-        joined = t.join(s, on=pk, how="full_outer")
-        use_src = F.col(f"t.{META_LSN}").isNull() | (
-            F.col(f"s.{META_LSN}").isNotNull()
-            & (F.col(f"s.{META_LSN}") > F.col(f"t.{META_LSN}"))
-        )
-        out_cols = [F.col(c) for c in pk]
-        for c in payload:
-            out_cols.append(
-                F.when(use_src, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-            )
-        out_cols.append(
-            F.when(use_src, F.col(f"s.{META_LSN}"))
-            .otherwise(F.col(f"t.{META_LSN}"))
-            .alias(META_LSN)
-        )
-        out_cols.append(
-            F.when(use_src, F.col("s._src_deleted"))
-            .otherwise(F.col(f"t.{META_DELETED}"))
-            .alias(META_DELETED)
-        )
-        out_cols.append(F.coalesce(F.col("t._b"), F.col("s._b")).alias("_b"))
-        result = joined.select(*out_cols)
-
-        # 4. rewrite touched buckets + atomic fenced commit (per-file row
-        # counts from the footers the write already reads)
-        adds, total = table.write_data_files(
-            snap, result, touched_buckets=len(touched)
-        )
-        return adds, old_files, per_bucket, total
-    finally:
-        src.unpersist()
 
 
 def _lineage(

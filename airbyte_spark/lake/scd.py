@@ -6,36 +6,34 @@ new data with the re-opened rows of affected keys and re-runs the dedup/
 window CTE over that union (stream_processor.py:892-942), so history rows
 get their ``_airbyte_end_at`` closed and ``_airbyte_active_row`` moved
 without rewriting unaffected keys. This module is the Spark-first
-equivalent, with TWO write strategies mirroring the main table's:
+equivalent, with ONE write path under both strategies:
 
-**strategy="cow"** per micro-batch (fenced, same contract as
-``merge_batch``):
-1. collapse the at-least-once batch to distinct (pk, cursor) versions
-   (``salted_scd2_input`` — hash agg, map-side combine);
-2. compute the touched buckets from the batch keys (≤ n_buckets);
-3. read ONLY those buckets' existing history rows, union with the new
-   versions, drop cross-batch duplicate versions;
-4. re-run the SCD2 window over the union (bounded to touched buckets)
-   and rewrite those buckets in one fenced commit.
-Right when batches are large relative to history, but history only
-GROWS: at 10^10 events a touched bucket holds ~10^8 version rows,
-rewritten by every batch that grazes it — write amplification.
+Version rows are IMMUTABLE — only the derived columns
+(``_airbyte_end_at``, ``_airbyte_active_row``) of a key's previous head
+change when a new version arrives, and both are pure functions of the
+key's version set (the next-version lag). So each micro-batch (fenced,
+same contract as ``merge_batch``) collapses the at-least-once batch to
+distinct (pk, cursor) versions (``salted_scd2_input`` — hash agg,
+map-side combine) and writes them as per-bucket delta files with the
+derived columns left NULL: O(batch), no history read, one Spark action —
+the write, its per-bucket lineage read from the written footers. One
+resolution rule then re-derives the derived columns, ``_resolved_history``
+(collapse cross-batch duplicate versions, re-run the SCD2 window), per
+bucket — exact, because all of a key's versions hash to its bucket:
 
-**strategy="mor"** (the 10^10-event streaming path): version rows are
-IMMUTABLE — only the derived columns (``_airbyte_end_at``,
-``_airbyte_active_row``) of a key's previous head change when a new
-version arrives, and both are pure functions of the key's version set
-(the next-version lag). So the batch's collapsed versions are APPENDED
-as per-bucket delta files (O(batch) per trigger, no history read at
-all, one Spark action: the write, its per-bucket lineage read from the
-written footers) with the derived columns left NULL; ``read_scd``
-re-derives them from the lag at scan time, and ``scd_compact``
+**strategy="mor"** (the 10^10-event streaming path) commits the deltas;
+``read_scd`` resolves the delta buckets at scan time and ``scd_compact``
 materializes them back into base files (exactly the LSM treatment
 ``LakeTable`` gives the SCD1 table: merge.py strategy="mor" +
-table.compact). NOTE: an SCD table
-carrying deltas must be folded with ``scd_compact`` (which re-windows),
-never plain ``LakeTable.compact`` (which would materialize the NULL
-derived columns as-is).
+table.compact). NOTE: an SCD table carrying deltas must be folded with
+``scd_compact`` (which re-windows), never plain ``LakeTable.compact``
+(which would materialize the NULL derived columns as-is).
+
+**strategy="cow"** folds the touched buckets of history + deltas with
+``scd_compact``'s rewrite in the same commit, so the table never carries
+deltas. Right when batches are large relative to history, but history
+only GROWS: at 10^10 events a touched bucket holds ~10^8 version rows,
+rewritten by every batch that grazes it — write amplification.
 
 Either way the result is byte-equal to running batch ``scd2()`` over the
 whole feed (tests assert exceptAll == 0 both ways, including the
@@ -67,7 +65,7 @@ from ..catalog import TableSchema
 from ..operators.dedup import scd2, scd2_bounded, surrogate_key_expr
 from ..operators.skew import salted_scd2_input
 from .merge import bucket_lineage
-from .table import LakeTable, META_DELETED, META_LSN, Snapshot
+from .table import LakeTable, META_DELETED, META_LSN, Snapshot, overlay
 
 #: columns computed by the SCD window — everything else is carried state
 SCD_OUT_COLS = [
@@ -144,10 +142,11 @@ def scd_merge_batch(
     |events| — and only on NEW rows (existing history was canonicalized
     when first written). ``bounded=True`` swaps the window for
     ``scd2_bounded`` (range-bucketed sorts) when single keys accumulate
-    unbounded version counts. ``strategy="mor"`` appends the collapsed
-    versions as delta files with NULL derived columns — O(batch) per
-    trigger, no history read; resolve with ``read_scd`` / fold with
-    ``scd_compact`` (see module docstring)."""
+    unbounded version counts. The collapsed versions are written as delta
+    files with NULL derived columns; ``strategy="mor"`` commits them
+    (resolve with ``read_scd`` / fold with ``scd_compact``), and
+    ``strategy="cow"`` folds the touched buckets in the same commit (see
+    module docstring)."""
     snap = table.snapshot()
     last = snap.fences.get(app_id)
     if last is not None and batch_id <= last:
@@ -157,79 +156,35 @@ def scd_merge_batch(
     if post_dedup is not None:
         new = post_dedup(new)
     new = new.withColumn("_b", table.bucket_expr(snap))
-    if strategy == "mor":
-        return _scd_append_mor(
-            table, snap, new, pk, cursor, app_id, batch_id, epoch, commit_empty
-        )
-    new = new.persist()
+    deltas = _scd_append_mor(table, snap, new, pk, cursor)
+    if not deltas:
+        return _scd_commit_empty(table, snap, app_id, batch_id, epoch, commit_empty)
+    cow = strategy != "mor"
+    lineage = _scd_lineage(app_id, batch_id, bucket_lineage(deltas), epoch)
+    touched = sorted(lineage["partitions"])
+    adds, removes = deltas, []
     try:
-        stats_rows = (
-            new.groupBy("_b")
-            .agg(F.count("*").alias("n"), F.max(F.col(cursor).cast("long")).alias("mx"))
-            .collect()
-        )
-        if not stats_rows:
-            return _scd_commit_empty(table, snap, app_id, batch_id, epoch, commit_empty)
-        per_bucket = {
-            int(r["_b"]): {"rows": r["n"], "max_lsn": r["mx"], "deletes": 0}
-            for r in stats_rows
-        }
-        touched = list(per_bucket)
-        lineage = _scd_lineage(app_id, batch_id, per_bucket, epoch)
-
-        old_files = [p for p, m in snap.files.items() if m["bucket"] in set(touched)]
-
-        # carried state for touched buckets only: strip the SCD columns,
-        # they are recomputed over the union
-        existing = table.read(
-            buckets=touched, include_meta=False, include_deleted=True, snap=snap
-        ).drop(*SCD_OUT_COLS)
-        core_cols = existing.columns
-        dtypes = {f.name: f.dtype for f in snap.schema.fields}
-        # null-pad schema columns the batch lacks (a just-evolved table's
-        # feed may not carry the new column yet) — same conform the MOR
-        # branch and merge_batch apply; a bare select would raise
-        batch_sel = [
-            (F.col(c) if c in new.columns else F.lit(None))
-            .cast(dtypes[c]).alias(c)
-            for c in core_cols
-        ]
-        # cross-batch re-delivery of an already-written version collapses
-        # with the SAME deterministic winner rule as the intra-batch
-        # collapse, so streaming and batch builds stay byte-equal even when
-        # duplicate copies differ in delivery metadata
-        unioned = salted_scd2_input(
-            existing.unionByName(new.select(*batch_sel)), pk, cursor
-        )
-        window = scd2_bounded if bounded else scd2
-        hist = window(unioned, pk, cursor)
-
-        schema_cols = []
-        for fs in snap.schema.fields:
-            if fs.name in hist.columns:
-                schema_cols.append(F.col(fs.name).cast(fs.dtype).alias(fs.name))
-            else:
-                schema_cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
-        rows = hist.select(
-            *schema_cols,
-            F.col(cursor).cast("long").alias(META_LSN),
-            F.lit(False).alias(META_DELETED),
-        ).withColumn("_b", table.bucket_expr(snap))
-
-        adds, total = table.write_data_files(
-            snap, rows, touched_buckets=len(touched)
-        )
-        lineage["rows_upserted"] = total
+        if cow:
+            # re-window the touched buckets of history + deltas into base
+            # files, committed in place of the buckets' old files
+            adds, lineage["rows_upserted"] = _scd_fold(
+                table, overlay(snap, deltas), touched, bounded
+            )
+            removes = [
+                p for p, m in snap.files.items()
+                if m["bucket"] in lineage["partitions"]
+            ]
         version = table.commit(
-            snap, adds, old_files, fence=(app_id, batch_id), lineage=lineage,
-            op="scd_merge",
-        )
-        return ScdMergeStats(
-            skipped=False, version=version, rows_in=lineage["rows_in"],
-            touched_buckets=len(touched),
+            snap, adds, removes, fence=(app_id, batch_id), lineage=lineage,
+            op="scd_merge", retry_conflicts=0 if cow else 2,
         )
     finally:
-        new.unpersist()
+        if cow:
+            table.discard_write(deltas)
+    return ScdMergeStats(
+        skipped=False, version=version, rows_in=lineage["rows_in"],
+        touched_buckets=len(touched),
+    )
 
 
 def _scd_append_mor(
@@ -238,16 +193,13 @@ def _scd_append_mor(
     new: DataFrame,
     pk: Sequence[str],
     cursor: str,
-    app_id: str,
-    batch_id: int,
-    epoch: Optional[int],
-    commit_empty: bool,
-) -> ScdMergeStats:
+) -> list[dict]:
     """LSM write path, ONE Spark action: append the immutable version rows
-    as delta files; the two derived columns stay NULL until read/compaction
-    re-derives them from the next-version lag. Per-bucket rows and cursor
-    high-watermarks come from the written files' footers (``__lsn`` is the
-    cursor); history rows are never deletes."""
+    as delta files and return their add-entries; the two derived columns
+    stay NULL until read/compaction re-derives them from the next-version
+    lag. Per-bucket rows and cursor high-watermarks come from the written
+    files' footers (``__lsn`` is the cursor); history rows are never
+    deletes."""
     uk = surrogate_key_expr(pk)
     schema_cols = []
     for fs in snap.schema.fields:
@@ -267,20 +219,10 @@ def _scd_append_mor(
         F.lit(False).alias(META_DELETED),
         F.col("_b"),
     )
-    adds, total = table.write_data_files(
+    adds, _ = table.write_data_files(
         snap, rows, touched_buckets=snap.n_buckets, kind="delta"
     )
-    if total == 0:
-        return _scd_commit_empty(table, snap, app_id, batch_id, epoch, commit_empty)
-    lineage = _scd_lineage(app_id, batch_id, bucket_lineage(adds), epoch)
-    version = table.commit(
-        snap, adds, [], fence=(app_id, batch_id), lineage=lineage,
-        op="scd_merge", retry_conflicts=2,
-    )
-    return ScdMergeStats(
-        skipped=False, version=version, rows_in=total,
-        touched_buckets=len(lineage["partitions"]),
-    )
+    return adds
 
 
 def _scd_commit_empty(
@@ -425,40 +367,55 @@ def scd_compact(
     table: LakeTable,
     bounded: bool = False,
     buckets: Optional[Sequence[int]] = None,
+    snap: Optional[Snapshot] = None,
 ) -> int:
     """Fold SCD delta files back into fully-resolved base files.
 
-    Only buckets holding delta files are rewritten (all versions of a key
-    share its bucket, so per-bucket re-windowing is exact); other buckets'
-    materialized history is untouched. After this, ``read_scd`` is a plain
-    scan again (over the folded buckets). This is the periodic fold the
-    streaming loop runs between merges — the amortized cost that replaces
-    per-batch full-bucket rewrite amplification. ``buckets`` restricts the
-    fold to a subset (the budgeted-maintenance path): per-bucket folding is
-    exact, so folding a prefix now and the rest next cycle converges to the
-    same state."""
-    snap = table.snapshot()
+    Only buckets holding delta files or two or more files are rewritten
+    (all versions of a key share its bucket, so per-bucket re-windowing is
+    exact, and an identity on a bucket of resolved base files); other
+    buckets' materialized history is untouched. After this, ``read_scd``
+    is a plain scan again (over the folded buckets). This is the periodic
+    fold the streaming loop runs between merges — the amortized cost that
+    replaces per-batch full-bucket rewrite amplification. ``buckets``
+    restricts the fold to a subset (the budgeted-maintenance path):
+    per-bucket folding is exact, so folding a prefix now and the rest next
+    cycle converges to the same state. ``snap`` is the version to fold
+    (default: the current one); maintenance passes the snapshot it planned
+    on."""
+    snap = snap or table.snapshot()
     per_bucket: dict[int, list[str]] = {}
     delta_buckets: set[int] = set()
     for path, meta in snap.files.items():
         per_bucket.setdefault(meta["bucket"], []).append(path)
         if meta.get("kind", "base") == "delta":
             delta_buckets.add(meta["bucket"])
-    if buckets is not None:
-        delta_buckets &= set(buckets)
-    if not delta_buckets:
+    targets = sorted(
+        b for b, paths in per_bucket.items()
+        if (b in delta_buckets or len(paths) >= 2)
+        and (buckets is None or b in buckets)
+    )
+    if not targets:
         return snap.version
-    targets = sorted(delta_buckets)
-    raw = table.read(buckets=targets, snap=snap, resolve=False)
+    adds, _ = _scd_fold(table, snap, targets, bounded)
+    removes = [p for b in targets for p in per_bucket[b]]
+    return table.commit(snap, adds, removes, op="scd_compact")
+
+
+def _scd_fold(
+    table: LakeTable, snap: Snapshot, buckets: Sequence[int], bounded: bool
+) -> tuple[list[dict], int]:
+    """The rewrite under ``scd_compact``, committing nothing: re-window
+    ``buckets`` of ``snap`` (``_resolved_history``) and write them back as
+    one base file per bucket; return (add-entries, rows written)."""
+    raw = table.read(buckets=buckets, snap=snap, resolve=False)
     hist = _resolved_history(snap, raw, bounded)
     rows = hist.select(
         "*",
         F.col(snap.primary_key[-1]).cast("long").alias(META_LSN),
         F.lit(False).alias(META_DELETED),
     ).withColumn("_b", table.bucket_expr(snap))
-    adds, _ = table.write_data_files(snap, rows, touched_buckets=len(targets))
-    removes = [p for b in targets for p in per_bucket[b]]
-    return table.commit(snap, adds, removes, op="scd_compact")
+    return table.write_data_files(snap, rows, touched_buckets=len(buckets))
 
 
 def _scd_lineage(app_id, batch_id, per_bucket: dict, epoch):

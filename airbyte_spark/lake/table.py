@@ -115,6 +115,55 @@ class Snapshot:
         return self.schemas[self.current_schema_id]
 
 
+def _file_entry(ad: dict, v: int) -> dict:
+    """A snapshot's record of one add-entry committed at version ``v``."""
+    return {
+        "bucket": ad["bucket"],
+        "schema_id": ad["schema_id"],
+        "rows": ad.get("rows"),
+        "kind": ad.get("kind", "base"),
+        # per-file cursor bounds (data skipping); absent/None in
+        # pre-stats commits ⇒ the file is never pruned
+        "min_lsn": ad.get("min_lsn"),
+        "max_lsn": ad.get("max_lsn"),
+        # on-disk size recorded at write time — the budgeted-maintenance
+        # planner's unit; None ⇒ getsize fallback
+        "bytes": ad.get("bytes"),
+        # per-file (min, max) of the table's stats_cols — generic range
+        # skipping (event-time etc.)
+        "stats": ad.get("stats") or {},
+        # per-bucket-per-commit pk bloom ({"m","k","words"}); absent ⇒
+        # the file is conservatively point-scanned
+        "bloom": ad.get("bloom"),
+        # commit that added the file — the MOR tiebreaker; rollback
+        # re-adds preserve their ORIGINAL commit so tie resolution is
+        # stable across restore
+        "v": ad.get("v", v),
+    }
+
+
+def overlay(
+    snap: Snapshot,
+    adds: list[dict],
+    removes: Sequence[str] = (),
+    fence: Optional[tuple[str, int]] = None,
+) -> Snapshot:
+    """``snap`` as if one more commit carrying ``adds``/``removes``/
+    ``fence`` had landed: its adds take the would-be next version
+    ``snap.version + 1``, so a resolving read ranks them newest on an LSN
+    tie. Nothing is written — the staged-commit audit view and the
+    copy-on-write merge's fold read through it."""
+    files = dict(snap.files)
+    for rm in removes:
+        files.pop(rm, None)
+    for ad in adds:
+        files[ad["path"]] = _file_entry(ad, snap.version + 1)
+    fences = dict(snap.fences)
+    if fence is not None:
+        fences[fence[0]] = fence[1]
+    return replace(snap, files=files, fences=fences)
+
+
 #: parquet timestamp encoding pinned around every data-file write
 _TS_KEY = "spark.sql.parquet.outputTimestampType"
 #: paths above this count are listed by a distributed Spark job; raised
@@ -359,28 +408,12 @@ class LakeTable:
         read. Pass to ``read(snap=...)``; cost is the same pruned scan a
         published commit would serve (MOR staged adds resolve normally:
         their tiebreak version is the would-be next version)."""
-        snap = self.snapshot()
         e = self._load_staged(staged_id)
-        files = dict(snap.files)
-        for rm in e.get("removes", []):
-            files.pop(rm, None)
-        v_next = snap.version + 1
-        for ad in e.get("adds", []):
-            files[ad["path"]] = {
-                "bucket": ad["bucket"],
-                "schema_id": ad["schema_id"],
-                "rows": ad.get("rows"),
-                "kind": ad.get("kind", "base"),
-                "min_lsn": ad.get("min_lsn"),
-                "max_lsn": ad.get("max_lsn"),
-                "stats": ad.get("stats") or {},
-                "bloom": ad.get("bloom"),
-                "v": ad.get("v", v_next),
-            }
-        fences = dict(snap.fences)
-        if "fence" in e:
-            fences[e["fence"]["app_id"]] = e["fence"]["batch_id"]
-        return replace(snap, files=files, fences=fences)
+        f = e.get("fence")
+        return overlay(
+            self.snapshot(), e.get("adds", []), e.get("removes", []),
+            fence=(f["app_id"], f["batch_id"]) if f is not None else None,
+        )
 
     def publish_staged(self, staged_id: str, retry_conflicts: int = 2) -> Optional[int]:
         """WAP step 3: make a staged commit visible with one ordinary
@@ -539,29 +572,7 @@ class LakeTable:
             for rm in e.get("removes", []):
                 files.pop(rm, None)
             for ad in e.get("adds", []):
-                files[ad["path"]] = {
-                    "bucket": ad["bucket"],
-                    "schema_id": ad["schema_id"],
-                    "rows": ad.get("rows"),
-                    "kind": ad.get("kind", "base"),
-                    # per-file cursor bounds (data skipping); absent/None
-                    # in pre-stats commits ⇒ the file is never pruned
-                    "min_lsn": ad.get("min_lsn"),
-                    "max_lsn": ad.get("max_lsn"),
-                    # on-disk size recorded at write time — the budgeted-
-                    # maintenance planner's unit; None ⇒ getsize fallback
-                    "bytes": ad.get("bytes"),
-                    # per-file (min, max) of the table's stats_cols —
-                    # generic range skipping (event-time etc.)
-                    "stats": ad.get("stats") or {},
-                    # per-bucket-per-commit pk bloom ({"m","k","words"});
-                    # absent ⇒ the file is conservatively point-scanned
-                    "bloom": ad.get("bloom"),
-                    # commit that added the file — the MOR tiebreaker;
-                    # rollback re-adds preserve their ORIGINAL commit so
-                    # tie resolution is stable across restore
-                    "v": ad.get("v", v),
-                }
+                files[ad["path"]] = _file_entry(ad, v)
             if "fence" in e:
                 fences[e["fence"]["app_id"]] = e["fence"]["batch_id"]
             if "fences_reset" in e:
@@ -908,6 +919,13 @@ class LakeTable:
                 adds.append(ad)
         return adds, total
 
+    def discard_write(self, adds: list[dict]) -> None:
+        """Delete the write subdirectories holding ``adds`` (one uuid
+        subdir per ``write_data_files`` call) — for files no commit will
+        reference, such as a copy-on-write merge's transient deltas."""
+        for sub in {os.path.dirname(os.path.dirname(ad["path"])) for ad in adds}:
+            shutil.rmtree(os.path.join(self.path, sub), ignore_errors=True)
+
     def _bucket_blooms(self, out_dir: str, snap: Snapshot) -> dict[int, dict]:
         """{bucket: {"m", "k", "words": {word_idx: int64}}} over the fresh
         commit subdir — the write-time half of the point-lookup index."""
@@ -1105,11 +1123,11 @@ class LakeTable:
         merges), the scan resolves latest-per-key by ``__lsn`` across
         base+delta rows (tombstones win when newest), exactly like
         Iceberg MOR / Paimon LSM reads. LSN ties resolve to the EARLIEST
-        commit (per-file ``v``, joined in via ``_metadata.file_path``) —
-        the same "target keeps on tie / source wins only if strictly
-        newer" rule the COW merge applies, so repeated MOR reads are
-        deterministic and byte-equal to the COW result on tie-prone
-        cursors. ``resolve=False`` returns raw rows (used by
+        commit (per-file ``v``, looked up from ``_metadata.file_path``):
+        "target keeps on tie / source wins only if strictly newer", the
+        one resolution rule — the COW merge's fold applies it too — so
+        repeated reads are deterministic on tie-prone cursors (NULL LSNs
+        included). ``resolve=False`` returns raw rows (used by
         compaction-era internals and bronze append tables, which never
         carry deltas).
 
@@ -1158,21 +1176,24 @@ class LakeTable:
                 os.path.join(self.path, path)
             )
         need_commit_col = has_delta and resolve
+        if need_commit_col:
+            # each row's commit version, keyed by its file's write subdir
+            # (path component -3: one write_data_files call is one uuid
+            # subdir, committed by one commit): a literal map over the
+            # selected files' commits — no manifest join, no Spark job
+            versions = {p.split("/")[-3]: m.get("v", 0) for p, m in selected}
+            commit_v = F.create_map(*[
+                c
+                for sub, v in sorted(versions.items())
+                for c in (F.lit(sub), F.lit(v).cast("long"))
+            ])
+            sub_col = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -3)
         parts: list[DataFrame] = []
         for sid, paths in sorted(groups.items()):
             raw, cols = self._file_group_scan(snap, sid, paths, cur)
             if need_commit_col:
-                # key = last 3 path components "<commit-subdir>/_b=<k>/<file>":
-                # the subdir is a per-commit uuid and basenames are unique
-                # within one _b= dir, so the key is globally unique even when
-                # one write job emits identical part-NNNNN basenames into
-                # several _b= dirs. Broadcast-joined below against the
-                # |files|-row manifest.
                 cols.append(
-                    F.array_join(
-                        F.slice(F.split(F.col("_metadata.file_path"), "/"), -3, 3),
-                        "/",
-                    ).alias("_fname")
+                    (-F.coalesce(commit_v[sub_col], F.lit(0))).alias("_neg_commit")
                 )
             parts.append(raw.select(*cols))
         if not parts:
@@ -1191,19 +1212,11 @@ class LakeTable:
                 df = df.filter(F.col(c) >= F.lit(lo))
             if hi is not None:
                 df = df.filter(F.col(c) <= F.lit(hi))
-        if need_commit_col and "_fname" in df.columns:
+        if need_commit_col:
             from ..operators.dedup import latest_per_key
 
-            manifest = self.spark.createDataFrame(
-                [("/".join(p.split("/")[-3:]), m.get("v", 0)) for p, m in selected],
-                "_fname string, _commit_v long",
-            )
-            df = df.join(F.broadcast(manifest), "_fname", "left").drop("_fname")
             # max_by on (lsn, -commit): highest LSN wins; on an LSN tie the
             # OLDEST commit wins (COW target-keeps-on-tie)
-            df = df.withColumn(
-                "_neg_commit", -F.coalesce(F.col("_commit_v"), F.lit(0))
-            ).drop("_commit_v")
             df = latest_per_key(
                 df, snap.primary_key, [META_LSN, "_neg_commit"]
             ).drop("_neg_commit")
@@ -1645,17 +1658,22 @@ class LakeTable:
 
     # -------------------------------------------------------- maintenance
 
-    def compact(self, min_files: int = 2, buckets: Optional[Sequence[int]] = None) -> int:
+    def compact(
+        self,
+        min_files: int = 2,
+        buckets: Optional[Sequence[int]] = None,
+        snap: Optional[Snapshot] = None,
+    ) -> int:
         """Rewrite fragmented buckets into one file each (small-file
-        compaction) AND fold merge-on-read delta files into base: the read
-        below resolves latest-per-key across base+deltas, so the rewrite
-        materializes the resolved state — the equivalent of Iceberg's
-        rewrite_data_files / Paimon's LSM compaction.
+        compaction) AND fold merge-on-read delta files into base
+        (``fold_buckets``) in one commit — the equivalent of Iceberg's
+        rewrite_data_files / Paimon's LSM compaction. ``snap`` is the
+        version to fold (default: the current one); maintenance passes the
+        snapshot it planned on.
 
-        Tombstones are preserved (they carry delete semantics). Single-writer
-        contract: run from the owning writer between merges.
+        Single-writer contract: run from the owning writer between merges.
         """
-        snap = self.snapshot()
+        snap = snap or self.snapshot()
         per_bucket: dict[int, list[str]] = {}
         delta_buckets: set[int] = set()
         for path, meta in snap.files.items():
@@ -1670,15 +1688,27 @@ class LakeTable:
         ]
         if not targets:
             return snap.version
-        df = self.read(
-            buckets=targets, include_meta=True, include_deleted=True, snap=snap
-        ).withColumn("_b", self.bucket_expr(snap))
-        adds, _ = self.write_data_files(
-            snap, df, touched_buckets=len(targets),
-            sort_within=self._rewrite_sort(snap),
-        )
+        adds, _ = self.fold_buckets(snap, targets)
         removes = [p for b in targets for p in per_bucket[b]]
         return self.commit(snap, adds, removes, op="compact")
+
+    def fold_buckets(
+        self, snap: Snapshot, buckets: Sequence[int]
+    ) -> tuple[list[dict], int]:
+        """The rewrite under compaction, committing nothing: read
+        ``buckets`` of ``snap`` resolved latest-per-key across base and
+        delta files, and write them back as one base file per bucket in the
+        table's rewrite order; return ``write_data_files``' (add-entries,
+        rows written). Tombstones are kept (they carry delete semantics).
+        The caller commits the adds against the removal of the buckets'
+        old files."""
+        df = self.read(
+            buckets=buckets, include_meta=True, include_deleted=True, snap=snap
+        ).withColumn("_b", self.bucket_expr(snap))
+        return self.write_data_files(
+            snap, df, touched_buckets=len(buckets),
+            sort_within=self._rewrite_sort(snap),
+        )
 
     def _rewrite_sort(self, snap: Snapshot):
         """Rewrite-time ordering: the z-curve key when zorder_cols is set

@@ -73,9 +73,11 @@ class ReplayConfig:
     #: accepted so existing callers keep working; they select nothing.
     watermark_dedup: bool = True
     watermark: str = "2 hours"
-    #: "cow" rewrites touched buckets per batch (read-optimized);
-    #: "mor" appends delta files resolved at scan (write-optimized — the
-    #: 10^10-event streaming path; maintenance folds deltas on the
+    #: every table's write (main, SCD history, children): each batch is
+    #: written as delta files, and "cow" folds its touched buckets in the
+    #: same commit (read-optimized: no deltas between triggers) while
+    #: "mor" commits the deltas for scans to resolve (write-optimized —
+    #: the 10^10-event streaming path; maintenance folds them on the
     #: compact_every_batches cadence)
     strategy: str = "cow"
     #: run one lake.maintenance.maintain cycle (fold deltas into base,
@@ -94,11 +96,6 @@ class ReplayConfig:
     #: the SCD1 latest-state table (reference's incremental SCD contract,
     #: stream_processor.py:892-942); each table carries its own fence
     scd_table_path: Optional[str] = None
-    #: "cow" re-windows + rewrites the touched history buckets per batch;
-    #: "mor" appends immutable version rows as deltas (O(batch)/trigger —
-    #: the 10^10-event path) re-derived at read (lake.scd.read_scd) and
-    #: folded by scd_compact on the compact_every_batches cadence
-    scd_strategy: str = "cow"
     #: persist nested child streams (P8 in the sync path): one LakeTable
     #: per array column of feed_struct at any depth, under this directory,
     #: each fenced independently — the reference's per-child-stream final
@@ -309,7 +306,7 @@ def _process_batch(
                 batch_id=batch_id,
                 epoch=cfg.epoch,
                 post_dedup=_post,
-                strategy=cfg.scd_strategy,
+                strategy=cfg.strategy,
                 commit_empty=commit_empty,
             )
         if children is not None:

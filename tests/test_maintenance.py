@@ -736,7 +736,7 @@ def test_job_cli_compact_folds_all_tables(spark, tmp_path, tmp_path_factory):
         "--table", str(tmp_path / "tbl"),
         "--checkpoint", str(tmp_path / "ck"),
         "--scd-table", str(tmp_path / "scd"),
-        "--n-buckets", "4", "--strategy", "mor", "--scd-strategy", "mor",
+        "--n-buckets", "4", "--strategy", "mor",
         "--max-files-per-trigger", "1",
         "--compact",
     ])
@@ -1021,6 +1021,53 @@ def test_fold_all_only_vacuums_cow_history(spark, tmp_path, tmp_path_factory):
     assert hist.snapshot().version == snap0.version  # no commit
     assert report.vacuumed_files == len(removed_twin) > 0
     assert _disk_files(hist, before) == _disk_files(twin, before)
+
+
+def test_maintain_plans_and_folds_one_snapshot(
+    spark, tmp_path, tmp_path_factory, monkeypatch
+):
+    """One maintenance cycle takes ONE snapshot to plan and fold on (the
+    vacuum that follows reads the version the fold committed), for a main
+    table and a history table alike."""
+    import numpy as np
+    from airbyte_spark.lake import FOLD_ALL, maintain
+    from airbyte_spark.lake.scd import bootstrap_scd_table, scd_merge_batch
+
+    feed = tmp_path_factory.mktemp("ossfeed")
+    ev = generate_feed(
+        str(feed),
+        FeedSpec(n_convs=12, turns_per_conv=3, n_updates=40, n_deletes=5,
+                 dup_rate=0.05, late_rate=0.05, n_segments=2, seed=71),
+    )
+    cols = [f.name for f in CHANGE_STRUCT.fields]
+    table = _mk_table(spark, tmp_path / "t")
+    hist = bootstrap_scd_table(
+        spark, str(tmp_path / "h"), CHANGE_STRUCT, PK, bucket_cols=["conv_id"],
+        n_buckets=4,
+    )
+    for i, idx in enumerate(np.array_split(np.arange(len(ev)), 2)):
+        batch = spark.createDataFrame(ev.iloc[idx][cols], schema=CHANGE_STRUCT)
+        merge_batch(table, batch, ORDER_COLS, batch_id=i, strategy="mor")
+        scd_merge_batch(hist, batch, PK, batch_id=i, strategy="mor")
+
+    events = []
+    orig_snapshot, orig_vacuum = LakeTable.snapshot, LakeTable.vacuum
+
+    def snapshot(self, *a, **kw):
+        events.append("snapshot")
+        return orig_snapshot(self, *a, **kw)
+
+    def vacuum(self, *a, **kw):
+        events.append("vacuum")
+        return orig_vacuum(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "snapshot", snapshot)
+    monkeypatch.setattr(LakeTable, "vacuum", vacuum)
+    for t, scd in ((table, False), (hist, True)):
+        events.clear()
+        report = maintain(t, FOLD_ALL, scd=scd)
+        assert report.compacted
+        assert events[: events.index("vacuum")] == ["snapshot"]
 
 
 def test_replay_config_type_hints_resolve():

@@ -2,6 +2,7 @@
 compaction fold — equivalence with copy-on-write and the pandas oracle."""
 
 import numpy as np
+import pytest
 
 from airbyte_spark.catalog import TableSchema
 from airbyte_spark.feedgen import FeedSpec, generate_feed, oracle_final_state
@@ -137,9 +138,10 @@ def test_mor_streaming_autocompact(spark, tmp_path, tmp_path_factory):
 
 def test_mor_lsn_tie_is_deterministic_and_matches_cow(spark, tmp_path):
     """Two commits carrying the SAME (pk, __lsn) — a tie-prone cursor such as
-    a second-granularity timestamp cast to long. COW resolves 'target keeps
-    on tie'; the MOR scan must resolve identically (earliest commit wins)
-    and return the same row on every read."""
+    a second-granularity timestamp cast to long, or two snapshot records
+    without CDC metadata (NULL LSN). COW resolves 'target keeps on tie';
+    the MOR scan must resolve identically (earliest commit wins) and return
+    the same row on every read."""
     import pandas as pd
 
     def batch(text, lsn):
@@ -154,18 +156,22 @@ def test_mor_lsn_tie_is_deterministic_and_matches_cow(spark, tmp_path):
             }
         )
 
-    results = {}
-    for strategy in ("mor", "cow"):
-        table = _mk_table(spark, tmp_path / strategy)
-        for i, text in enumerate(["first", "second"]):
-            merge_batch(
-                table, spark.createDataFrame(batch(text, 10), schema=CHANGE_STRUCT),
-                ORDER_COLS, batch_id=i, strategy=strategy,
-            )
-        reads = {table.read().collect()[0]["text"] for _ in range(3)}
-        assert len(reads) == 1, f"{strategy} read nondeterministic: {reads}"
-        results[strategy] = reads.pop()
-    assert results["mor"] == results["cow"] == "first"
+    for lsn in (10, None):
+        results = {}
+        for strategy in ("mor", "cow"):
+            table = _mk_table(spark, tmp_path / f"{strategy}-{lsn}")
+            for i, text in enumerate(["first", "second"]):
+                merge_batch(
+                    table,
+                    spark.createDataFrame(
+                        batch(text, lsn), schema=T_NULLABLE_CHANGE
+                    ),
+                    ORDER_COLS, batch_id=i, strategy=strategy,
+                )
+            reads = {table.read().collect()[0]["text"] for _ in range(3)}
+            assert len(reads) == 1, f"{strategy} read nondeterministic: {reads}"
+            results[strategy] = reads.pop()
+        assert results["mor"] == results["cow"] == "first", (lsn, results)
 
 
 def test_merge_tolerates_null_cursor_rows(spark, tmp_path):
@@ -308,12 +314,15 @@ def test_mor_write_one_file_per_bucket_in_core_sized_tasks(
     assert resolved() == before
 
 
+@pytest.mark.parametrize("strategy", ["mor", "cow"])
 def test_mor_merge_is_one_action_with_exact_bucket_lineage(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, strategy
 ):
     """With AQE off (so every job is one action, not an AQE query stage), a
     MOR merge launches exactly ONE Spark job — its write — and persists
-    nothing. Its lineage ``partitions`` (rows, max_lsn, deletes per bucket)
+    nothing. A COW merge is that write plus the fold of the touched
+    buckets: TWO jobs, the two writes, and it persists nothing either.
+    Either way the lineage ``partitions`` (rows, max_lsn, deletes per bucket)
     equal a groupBy("_b") over the collapsed batch, and an empty batch
     leaves no data subdirectory behind."""
     import datetime as dt
@@ -358,14 +367,17 @@ def test_mor_merge_is_one_action_with_exact_bucket_lineage(
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup(group, "one MOR merge")
     try:
-        stats = merge_batch(table, batch, ORDER_COLS, batch_id=0, strategy="mor")
+        stats = merge_batch(table, batch, ORDER_COLS, batch_id=0, strategy=strategy)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs == (1 if strategy == "mor" else 2)
     assert persisted == []
 
     snap = table.snapshot()
+    kind = "delta" if strategy == "mor" else "base"
+    assert {m["kind"] for m in snap.files.values()} == {kind}
     want = {
         r["_b"]: {"rows": r["n"], "max_lsn": r["mx"], "deletes": r["nd"]}
         for r in latest_per_key(batch, PK, ORDER_COLS)
@@ -389,16 +401,99 @@ def test_mor_merge_is_one_action_with_exact_bucket_lineage(
     data_dir = os.path.join(table.path, "data")
     subdirs = set(os.listdir(data_dir))
     empty = spark.createDataFrame([], schema=CHANGE_STRUCT)
-    stats = merge_batch(table, empty, ORDER_COLS, batch_id=1, strategy="mor")
+    stats = merge_batch(table, empty, ORDER_COLS, batch_id=1, strategy=strategy)
     assert stats.rows_in == 0 and stats.version is not None
     assert set(os.listdir(data_dir)) == subdirs
     assert table.snapshot().fences["default"] == 1
     stats = merge_batch(
-        table, empty, ORDER_COLS, batch_id=2, strategy="mor", commit_empty=False
+        table, empty, ORDER_COLS, batch_id=2, strategy=strategy,
+        commit_empty=False,
     )
     assert stats.version is None
     assert set(os.listdir(data_dir)) == subdirs
     assert table.snapshot().fences["default"] == 1
+
+
+def test_cow_merge_leaves_no_transient_deltas(spark, tmp_path, tmp_path_factory):
+    """A COW merge writes its batch as delta files only as the fold's
+    input and deletes them once the commit lands: after COW merges into
+    the main and the history table and a commit-scoped vacuum, a deep
+    vacuum finds no file that no commit references."""
+    from airbyte_spark.lake.scd import bootstrap_scd_table, read_scd, scd_merge_batch
+
+    feed = tmp_path_factory.mktemp("morfeed6")
+    ev = generate_feed(str(feed), SPEC)
+    table = _mk_table(spark, tmp_path / "t")
+    _merge_chunks(spark, table, ev, 3, "cow")
+    hist = bootstrap_scd_table(
+        spark, str(tmp_path / "h"), CHANGE_STRUCT, PK, bucket_cols=["conv_id"],
+        n_buckets=4,
+    )
+    cols = [f.name for f in CHANGE_STRUCT.fields]
+    for i, idx in enumerate(np.array_split(np.arange(len(ev)), 2)):
+        scd_merge_batch(
+            hist, spark.createDataFrame(ev.iloc[idx][cols], schema=CHANGE_STRUCT),
+            PK, batch_id=i, strategy="cow",
+        )
+    for t in (table, hist):
+        assert {m["kind"] for m in t.snapshot().files.values()} == {"base"}
+        t.vacuum()
+        assert t.vacuum(deep=True) == []
+    assert_same(table.read(), oracle_final_state(ev))
+    assert read_scd(hist).count() == hist.read().count() > 0
+
+
+def test_cow_fault_before_commit_leaves_only_fold_files(
+    spark, tmp_path, tmp_path_factory, monkeypatch
+):
+    """A fault between the COW fold's write and its commit (here a lost
+    commit race): the table reads as before the merge, the batch's
+    transient deltas are already gone, a deep vacuum reclaims exactly the
+    fold's unreferenced files, and the re-delivered batch then applies."""
+    import os
+
+    from airbyte_spark.lake.table import CommitConflict
+
+    feed = tmp_path_factory.mktemp("morfeed7")
+    ev = generate_feed(str(feed), SPEC)
+    cols = [f.name for f in CHANGE_STRUCT.fields]
+    halves = [
+        spark.createDataFrame(ev.iloc[idx][cols], schema=CHANGE_STRUCT)
+        for idx in np.array_split(np.arange(len(ev)), 2)
+    ]
+    table = _mk_table(spark, tmp_path / "t")
+    merge_batch(table, halves[0], ORDER_COLS, batch_id=0, strategy="cow")
+    v0 = table.snapshot().version
+    before = sorted(tuple(r) for r in table.read().collect())
+
+    writes = []
+    orig_write = LakeTable.write_data_files
+
+    def spy_write(self, *a, **kw):
+        out = orig_write(self, *a, **kw)
+        writes.append(out[0])
+        return out
+
+    def lose_race(self, *a, **kw):
+        raise CommitConflict("injected: a concurrent writer won this version")
+
+    monkeypatch.setattr(LakeTable, "write_data_files", spy_write)
+    monkeypatch.setattr(LakeTable, "commit", lose_race)
+    with pytest.raises(CommitConflict):
+        merge_batch(table, halves[1], ORDER_COLS, batch_id=1, strategy="cow")
+    monkeypatch.undo()
+
+    deltas, fold = writes
+    assert {a["kind"] for a in deltas} == {"delta"}
+    assert {a["kind"] for a in fold} == {"base"}
+    assert not any(os.path.exists(os.path.join(table.path, a["path"])) for a in deltas)
+    assert table.snapshot().version == v0
+    assert sorted(tuple(r) for r in table.read().collect()) == before
+    assert sorted(table.vacuum(deep=True)) == sorted(a["path"] for a in fold)
+
+    merge_batch(table, halves[1], ORDER_COLS, batch_id=1, strategy="cow")
+    assert table.snapshot().version == v0 + 1
+    assert_same(table.read(), oracle_final_state(ev))
 
 
 def test_replay_and_mor_trigger_plans_run_no_python(

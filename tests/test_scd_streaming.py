@@ -135,7 +135,6 @@ def test_streaming_scd_equals_batch_scd2(spark, tmp_path, tmp_path_factory):
         checkpoint_dir=str(tmp_path / "ck"),
         scd_table_path=str(tmp_path / "tbl_scd"),
         max_files_per_trigger=1,  # 5 micro-batches
-        strategy="mor",
     )
     run_replay_stream(spark, cfg)
     scd_table = LakeTable(spark, cfg.scd_table_path)
@@ -366,7 +365,6 @@ def test_streaming_scd_mor_equals_batch_scd2(spark, tmp_path, tmp_path_factory):
         scd_table_path=str(tmp_path / "tbl_scd"),
         max_files_per_trigger=1,  # 5 micro-batches
         strategy="mor",
-        scd_strategy="mor",
         compact_every_batches=3,  # one fold mid-stream
     )
     run_replay_stream(spark, cfg)
@@ -384,7 +382,7 @@ def test_streaming_scd_mor_equals_batch_scd2(spark, tmp_path, tmp_path_factory):
     cfg2 = ReplayConfig(
         feed_dir=str(feed), table_path=cfg.table_path,
         checkpoint_dir=cfg.checkpoint_dir, scd_table_path=cfg.scd_table_path,
-        max_files_per_trigger=1, strategy="mor", scd_strategy="mor",
+        max_files_per_trigger=1, strategy="mor",
     )
     run_replay_stream(spark, cfg2)
     _assert_df_equal(read_scd(scd_table), expected)
@@ -529,7 +527,7 @@ def test_streaming_cow_scd_is_vacuumed(spark, tmp_path, tmp_path_factory):
         table_path=str(tmp_path / "tbl"),
         checkpoint_dir=str(tmp_path / "ck"),
         scd_table_path=str(tmp_path / "scd"),
-        scd_strategy="cow",
+        strategy="cow",
         max_files_per_trigger=1,
         compact_every_batches=2,
     )
@@ -594,7 +592,6 @@ def test_streaming_cross_batch_redelivery_matches_oracles(
         scd_table_path=str(tmp_path / "tbl_scd"),
         max_files_per_trigger=1,
         strategy=strategy,
-        scd_strategy=strategy,
         compact_every_batches=3,
     )
     run_replay_stream(spark, cfg)

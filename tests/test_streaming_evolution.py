@@ -110,13 +110,13 @@ def test_stream_schema_evolution_resume(spark, tmp_path):
     assert (lin["epoch"] == 2).any()
 
 
-@pytest.mark.parametrize("scd_strategy", ["cow", "mor"])
-def test_scd_history_evolves_with_main(spark, tmp_path, scd_strategy):
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_scd_history_evolves_with_main(spark, tmp_path, strategy):
     """The <stream>_scd table takes the SAME catalog diff as the main table
     (metadata-only); after an epoch-2 resume the new version row carries
     the new column, epoch-1 history rows are null-padded, and the window
     state (end_at/active flags) moves correctly across the evolution —
-    under BOTH history strategies (mor re-derives the flags at read across
+    under BOTH strategies (mor re-derives the flags at read across
     schema eras: uid projection null-pads, then the window re-runs)."""
     feed = tmp_path / "feed"
     feed.mkdir()
@@ -127,7 +127,7 @@ def test_scd_history_evolves_with_main(spark, tmp_path, scd_strategy):
         checkpoint_dir=str(tmp_path / "ckpt"),
         scd_table_path=str(tmp_path / "tbl_scd"),
         max_files_per_trigger=2,
-        scd_strategy=scd_strategy,
+        strategy=strategy,
     )
     run_replay_stream(spark, cfg)
     main = LakeTable(spark, cfg.table_path)
@@ -163,7 +163,7 @@ def test_scd_history_evolves_with_main(spark, tmp_path, scd_strategy):
         feed_dir=str(feed), table_path=cfg.table_path,
         checkpoint_dir=cfg.checkpoint_dir, scd_table_path=cfg.scd_table_path,
         max_files_per_trigger=2, feed_struct=CHANGE_STRUCT_V2, epoch=2,
-        scd_strategy=scd_strategy,
+        strategy=strategy,
     )
     run_replay_stream(spark, cfg2)
 

@@ -258,7 +258,7 @@ def test_stream_enrich_hook_applies_to_both_tables(spark, tmp_path, feed_dir):
         table_path=str(tmp_path / "table_enrich"),
         checkpoint_dir=str(tmp_path / "ckpt_enrich"),
         scd_table_path=str(tmp_path / "scd_enrich"),
-        scd_strategy="mor",
+        strategy="mor",
         max_files_per_trigger=2,
         enrich=lambda df: df.withColumn("text", F.upper("text")),
     )

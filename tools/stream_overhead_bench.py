@@ -83,12 +83,11 @@ def main():
         checkpoint_dir=os.path.join(work, "out", "ck"),
         app_id="stream-overhead",
         max_files_per_trigger=1,   # one segment per micro-batch
+        # every table, the --scd history table included, appends MOR deltas
         strategy="mor",
         compact_every_batches=64,
-        # --scd: maintain the Type-2 history table per batch too, with the
-        # append-only MOR strategy (the round-3 write-amplification fix)
+        # --scd: maintain the Type-2 history table per batch too
         scd_table_path=os.path.join(work, "out", "tbl_scd") if with_scd else None,
-        scd_strategy="mor",
     )
     t0 = time.time()
     run_replay_stream(spark, cfg)
