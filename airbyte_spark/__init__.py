@@ -18,8 +18,8 @@ operators  : batch operators — window dedup / SCD2, CDC event projection,
              cursor scans
 streaming  : Structured Streaming replay runner (foreachBatch + MERGE)
 ops        : text-curation ops beside the engine (no CDC path uses them) —
-             exact/fuzzy dedup (MinHash-LSH, SimHash, n-gram Jaccard), ANN
-             similarity search, text analysis, corpus curation
+             exact/fuzzy dedup (MinHash-LSH, SimHash, n-gram Jaccard), text
+             analysis, corpus curation
 """
 
 __version__ = "0.1.0"

@@ -48,9 +48,9 @@ import threading
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
-from typing import Optional, Sequence
+from typing import Iterable, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -162,6 +162,21 @@ def overlay(
     if fence is not None:
         fences[fence[0]] = fence[1]
     return replace(snap, files=files, fences=fences)
+
+
+def _commit_version(files: Iterable[tuple[str, int]]) -> Column:
+    """Each scanned row's commit version, from ``(path, version)`` pairs of
+    the files in the scan. Keyed by the file's write subdir (path component
+    -3: one ``write_data_files`` call is one uuid subdir, committed by one
+    commit), so it is a literal map in the plan: no manifest relation, no
+    join and no Spark job. NULL for a file not in ``files``."""
+    versions = {p.split("/")[-3]: v for p, v in files}
+    commit_v = F.create_map(*[
+        c
+        for sub, v in sorted(versions.items())
+        for c in (F.lit(sub), F.lit(v).cast("long"))
+    ])
+    return commit_v[F.element_at(F.split(F.col("_metadata.file_path"), "/"), -3)]
 
 
 #: parquet timestamp encoding pinned around every data-file write
@@ -1177,24 +1192,12 @@ class LakeTable:
             )
         need_commit_col = has_delta and resolve
         if need_commit_col:
-            # each row's commit version, keyed by its file's write subdir
-            # (path component -3: one write_data_files call is one uuid
-            # subdir, committed by one commit): a literal map over the
-            # selected files' commits — no manifest join, no Spark job
-            versions = {p.split("/")[-3]: m.get("v", 0) for p, m in selected}
-            commit_v = F.create_map(*[
-                c
-                for sub, v in sorted(versions.items())
-                for c in (F.lit(sub), F.lit(v).cast("long"))
-            ])
-            sub_col = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -3)
+            commit_v = _commit_version((p, m.get("v", 0)) for p, m in selected)
         parts: list[DataFrame] = []
         for sid, paths in sorted(groups.items()):
             raw, cols = self._file_group_scan(snap, sid, paths, cur)
             if need_commit_col:
-                cols.append(
-                    (-F.coalesce(commit_v[sub_col], F.lit(0))).alias("_neg_commit")
-                )
+                cols.append((-F.coalesce(commit_v, F.lit(0))).alias("_neg_commit"))
             parts.append(raw.select(*cols))
         if not parts:
             struct = cur.to_struct().add(META_LSN, "long").add(META_DELETED, "boolean")
@@ -1511,10 +1514,10 @@ class LakeTable:
         and ``_change_type`` (``upsert`` / ``delete`` / ``truncate``).
         Downstream incremental consumers tail the table with this instead
         of re-diffing snapshots. Append/MOR commits in the range are
-        COALESCED into one scan per schema era with a broadcast per-file
-        version manifest (``_scan_change_commits``) — the plan stays
-        O(schema eras + rewrite commits), not O(commits), however long the
-        tailed range is.
+        COALESCED into one scan per schema era, each row's version looked
+        up by its file's write subdir (``_scan_change_commits``) — the plan
+        stays O(schema eras + rewrite commits) scans, not O(commits),
+        however long the tailed range is.
 
         Exact for MOR merges and appends, whose data files ARE the
         per-commit change sets — those scan only the commit's own files.
@@ -1625,30 +1628,23 @@ class LakeTable:
     ) -> DataFrame:
         """One coalesced scan over every append/MOR commit's change files in
         the range: group by schema era (ONE multi-file parquet scan each),
-        then attach ``_change_version`` per file via a broadcast manifest
-        join on the ``_metadata.file_path`` key — the same |files|-row
-        manifest mechanism the MOR tie-break read uses. Plan size is
-        O(schema eras), not O(commits): tailing 1,000 commits costs the
-        same plan as tailing one."""
+        then attach ``_change_version`` per row from its file's write
+        subdir — the literal map the MOR tie-break read uses
+        (``_commit_version``), so no join and no Spark job. Scan count is
+        O(schema eras), not O(commits): tailing 1,000 commits scans as
+        many groups as tailing one."""
         groups: dict[int, list[str]] = {}
-        manifest_rows = []
-        for rel, sid, v in change_files:
+        for rel, sid, _ in change_files:
             groups.setdefault(sid, []).append(os.path.join(self.path, rel))
-            manifest_rows.append(("/".join(rel.split("/")[-3:]), v))
-        fname = F.array_join(
-            F.slice(F.split(F.col("_metadata.file_path"), "/"), -3, 3), "/"
-        ).alias("_fname")
+        version = _commit_version((rel, v) for rel, _, v in change_files)
         parts = []
         for sid, paths in sorted(groups.items()):
             raw, cols = self._file_group_scan(snap, sid, paths, cur)
-            parts.append(raw.select(*cols, fname))
+            parts.append(raw.select(*cols, version.alias("_change_version")))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-        manifest = self.spark.createDataFrame(
-            manifest_rows, "_fname string, _change_version long"
-        )
-        return df.join(F.broadcast(manifest), "_fname").drop("_fname")
+        return df
 
     def _truncate_boundary_row(self, cur, v: int) -> DataFrame:
         """The non-row-attributable-commit marker: one all-null row typed

@@ -1,3 +1,3 @@
-"""Training-data pipeline operators (dedup, similarity, text analysis,
-corpus curation) beside the CDC engine; no CDC path, streaming-runner
-option or driver query uses them."""
+"""Training-data pipeline operators (dedup, text analysis, corpus
+curation) beside the CDC engine; no CDC path, streaming-runner option or
+driver query uses them."""

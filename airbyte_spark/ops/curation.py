@@ -1,5 +1,5 @@
 """Corpus-curation operators a large-scale training-data pipeline needs on
-top of dedup/ANN: benchmark decontamination, PII redaction, and
+top of dedup: benchmark decontamination, PII redaction, and
 deterministic dataset splits/samples.
 
 Reference parity note: these go BEYOND phiture/airbyte's operator set —

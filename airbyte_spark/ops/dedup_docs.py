@@ -171,10 +171,9 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
 def minhash_band_table(
     docs: DataFrame, k: int = MINHASH_K, band_width: int = MINHASH_BAND_WIDTH
 ) -> DataFrame:
-    """(doc_id, band_idx, band_key) LSH band entries — the unit both the
-    batch candidate join (``minhash_lsh_candidates``) and the persistent
-    incremental index (``dedup_index.py``) operate on. Map-only on top of
-    the map-only signatures: one posexplode-free array explode per doc."""
+    """(doc_id, band_idx, band_key) LSH band entries — the unit the batch
+    candidate join (``minhash_lsh_candidates``) operates on. Map-only on top
+    of the map-only signatures: one posexplode-free array explode per doc."""
     if k % band_width != 0:
         raise ValueError(
             f"k={k} must be divisible by band_width={band_width}: trailing "
@@ -360,10 +359,9 @@ def simhash_band_table(
     n_blocks: int = SIMHASH_BLOCKS,
 ) -> DataFrame:
     """(doc_id, simhash, band_idx, band_val) block-permutation band
-    entries — shared by the batch candidate join (``simhash_banded_pairs``)
-    and the persistent incremental index (``dedup_index.py``). The full
-    simhash rides along because the hamming filter needs both pair
-    members' signatures at join time."""
+    entries — the unit the batch candidate join (``simhash_banded_pairs``)
+    operates on. The full simhash rides along because the hamming filter
+    needs both pair members' signatures at join time."""
     return simhash_bands_from_sigs(
         simhash_signatures(docs, bits), bits, max_hamming, n_blocks
     )

@@ -1,6 +1,5 @@
 """Tests for the round-5 curation additions: Gopher repetition filters,
-exact-substring (window-hash) dedup, SemDeDup semantic dedup, and
-target-domain-mixture sampling.
+exact-substring (window-hash) dedup and target-domain-mixture sampling.
 
 Hand-checkable fixtures; every op must be a pure deterministic function
 of its input (the DuckDB oracle re-derives each from SQL)."""
@@ -12,7 +11,6 @@ from pyspark.sql import functions as F
 
 from airbyte_spark.ops.curation import domain_mixture_sample
 from airbyte_spark.ops.dedup_docs import exact_substring_dups, window_hash_table
-from airbyte_spark.ops.embeddings import semantic_dedup
 from airbyte_spark.ops.text_analysis import repetition_scores
 
 
@@ -125,56 +123,6 @@ def test_exact_substring_intra_doc_repeat_detected(spark):
     docs = spark.createDataFrame([(1, para + " " + para)], ["doc_id", "text"])
     row = exact_substring_dups(docs, window=10).collect()[0]
     assert row["has_dup"] == 1
-
-
-# ---------------------------------------------------------------------------
-# semantic_dedup
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    # two tight clusters on opposite axes + one outlier; ids chosen so the
-    # seeded centroids (first n_cells vectors) split the clusters
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.0, 1.0, 0.0]),
-        (2, [0.99, 0.01, 0.0]),   # near 0
-        (3, [0.98, 0.02, 0.0]),   # near 0
-        (4, [0.0, 0.99, 0.01]),   # near 1
-        (5, [0.0, 0.0, 1.0]),     # outlier
-    ]
-    return spark.createDataFrame(rows, ["vec_id", "embedding"]).select(
-        "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
-    )
-
-
-def test_semantic_dedup_drops_near_twins(spark, emb):
-    out = {r["vec_id"]: r for r in
-           semantic_dedup(emb, n_cells=2, threshold=0.95).collect()}
-    # 2 and 3 are semantic twins of 0 (same cell, cos > 0.95)
-    assert out[2]["keep"] == 0 and out[2]["dup_of"] == 0
-    assert out[3]["keep"] == 0 and out[3]["dup_of"] == 0
-    # 4 duplicates 1
-    assert out[4]["keep"] == 0 and out[4]["dup_of"] == 1
-    # representatives and the outlier survive
-    assert out[0]["keep"] == 1 and out[1]["keep"] == 1 and out[5]["keep"] == 1
-
-
-def test_semantic_dedup_cap_bounds_join_groups(spark, emb):
-    # with a cap of 2, cell members chunk into rank-pairs: a vector can
-    # only dup against its own chunk, so every join group is <= cap rows
-    out = semantic_dedup(emb, n_cells=1, threshold=-1.0, max_cell_size=2)
-    dup_of = {r["vec_id"]: r["dup_of"] for r in out.collect()}
-    # threshold -1 makes EVERY same-chunk smaller id a dup: chunk (0,1),
-    # (2,3), (4,5) by vec_id rank -> 1->0, 3->2, 5->4, chunk-heads keep
-    assert dup_of[1] == 0 and dup_of[3] == 2 and dup_of[5] == 4
-    assert dup_of[0] is None and dup_of[2] is None and dup_of[4] is None
-
-
-def test_semantic_dedup_every_vector_reported(spark, emb):
-    out = semantic_dedup(emb, n_cells=2, threshold=0.95)
-    assert out.count() == emb.count()
 
 
 # ---------------------------------------------------------------------------

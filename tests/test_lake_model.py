@@ -268,7 +268,9 @@ def test_scoped_conf_stress_keeps_value_and_restores_prior():
 def test_read_planning_starts_no_spark_job(spark, tmp_path, monkeypatch):
     """read() builds its scan from the snapshot's file list: planning a
     scan of more than 32 files (Spark's parallel-listing threshold) starts
-    no Spark job, and read_incremental plans off ONE snapshot likewise."""
+    no Spark job, and read_incremental plans off ONE snapshot likewise.
+    changes_between over the MOR commits takes each row's version from a
+    literal map in the plan: no manifest relation, no join, no job."""
     import uuid
 
     table = _mk_plain_table(spark, tmp_path / "t", n_buckets=16)
@@ -292,6 +294,8 @@ def test_read_planning_starts_no_spark_job(spark, tmp_path, monkeypatch):
     sc.setJobGroup(group, "plan lake reads")
     try:
         df = table.read()
+        feed = table.changes_between(0)
+        feed_plan = feed._jdf.queryExecution().executedPlan().toString()
         snapshots.clear()
         changes = table.read_incremental(since_lsn=10)
     finally:
@@ -300,3 +304,5 @@ def test_read_planning_starts_no_spark_job(spark, tmp_path, monkeypatch):
     assert len(snapshots) == 1
     assert sorted(r.text for r in df.select("text").collect()) == ["v2"] * 40
     assert changes.count() == 80  # the last two batches' rows
+    assert "Join" not in feed_plan and "ExistingRDD" not in feed_plan, feed_plan
+    assert feed.count() == 120  # one change row per key per MOR commit

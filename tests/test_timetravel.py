@@ -232,10 +232,10 @@ def test_time_travel_expiry_raises(spark, tmp_path):
 
 def test_changelog_plan_coalesces_commit_scans(spark, tmp_path, tmp_path_factory):
     """Tailing a LONG range of append/MOR commits must plan one coalesced
-    scan per schema era (+ a broadcast per-file version manifest), never
-    one scan branch per commit — at production commit cadence a consumer
-    tails thousands of commits and an O(commits) plan would dwarf the
-    data it reads."""
+    scan per schema era (each row's version from a literal map keyed by
+    its file's write subdir, no join), never one scan branch per commit —
+    at production commit cadence a consumer tails thousands of commits and
+    an O(commits) plan would dwarf the data it reads."""
     feed = tmp_path_factory.mktemp("cdfplanfeed")
     ev = generate_feed(str(feed), SPEC)
     table = LakeTable.create(
@@ -272,4 +272,4 @@ def test_changelog_plan_coalesces_commit_scans(spark, tmp_path, tmp_path_factory
     )
     assert n_scans == 1, f"expected 1 coalesced commit scan, got {n_scans}"
     plan = cdf._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # the |files|-row version manifest
+    assert "Join" not in plan  # no version manifest to join

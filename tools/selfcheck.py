@@ -20,7 +20,7 @@ import __spark_entry__ as entry_mod
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "lineitem", "events", "documents",
 ]
 
 
