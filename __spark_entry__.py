@@ -710,7 +710,10 @@ def q_cdc_materialized_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = LakeTable.create(
         spark, f"{base}/src",
         TableSchema.from_struct(e.drop("deleted_at").schema),
-        primary_key=["event_id"], bucket_cols=["user_id"], n_buckets=8,
+        # an event's user never changes, so (user_id, event_id) keys the
+        # same rows as event_id and keeps the bucket column in the key
+        primary_key=["user_id", "event_id"], bucket_cols=["user_id"],
+        n_buckets=8,
     )
     AGGS = {
         "n_events": F.count(F.lit(1)).cast("long"),

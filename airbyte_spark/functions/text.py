@@ -45,6 +45,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from .plan_cache import expr_cache
+
 _CTRL = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]")
 _WS = re.compile(r"\s+")
 
@@ -180,13 +182,13 @@ def _expand(c: Column) -> Column:
     )
 
 
-@functools.lru_cache(maxsize=None)
+@expr_cache
 def canonicalize(name: str) -> Column:
     """The canonicalizer as one Catalyst expression over the string column
     ``name``; equal to ``canonicalize_pandas`` on every string.
 
     The expression takes a few hundred py4j calls to build, so it is built
-    once per process and column name, and every plan reuses it."""
+    once per column name (and JVM gateway), and every plan reuses it."""
     c = F.col(name)
     tb = _tables()
     # ASCII: the fold is the identity and the control chars are gone before

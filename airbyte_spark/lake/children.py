@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import TableSchema
+from ..functions.plan_cache import expr_cache
 from ..operators.dedup import latest_per_key, surrogate_hash_id, surrogate_key_expr
 from ..operators.unnest import unnest_children_with_specs
 from .merge import MergeStats, merge_batch
@@ -173,11 +174,8 @@ def merge_children_batch(
                 F.max(META_LSN).alias("_wm")
             )
             joined = parents.join(wm, hashid_col, "left")
-            new_cur = F.coalesce(F.col("_new_lsn"), F.lit(-(2**62) + 1))
-            old_wm = F.coalesce(F.col("_wm"), F.lit(-(2**62)))
-            adv = joined.filter(new_cur > old_wm).select(
-                hashid_col, "_new_lsn"
-            )
+            advances, ties = _fence_conds()
+            adv = joined.filter(advances).select(hashid_col, "_new_lsn")
             # crash-replay repair set: a level already committed for this
             # batch has wm == _new_lsn, so the strict filter goes empty and
             # would propagate NOTHING to the next level — losing the
@@ -185,9 +183,7 @@ def merge_children_batch(
             # empty commit). `prop` keeps cursor-TIES so a replayed level
             # still names its touched links; the next level's own watermark
             # (strict) makes re-propagation a no-op once it has applied.
-            prop = joined.filter(new_cur >= old_wm).select(
-                hashid_col, "_new_lsn"
-            )
+            prop = joined.filter(ties).select(hashid_col, "_new_lsn")
             new_prop = new_rows.join(
                 F.broadcast(prop.select(hashid_col)), hashid_col
             )
@@ -207,21 +203,14 @@ def merge_children_batch(
             stale = stale_prop.join(
                 F.broadcast(adv.select(hashid_col)), hashid_col
             ).select(*new_rows.columns, "_new_lsn")
-            tombstones = stale.select(
-                *_at_new_lsn(new_rows, cursor),
-                F.to_timestamp(F.lit("1970-01-01")).alias(deleted_col),
-            )
-            sentinels = adv.select(
-                *[
-                    _sentinel_col(fld, hashid_col, cursor)
-                    for fld in new_rows.schema.fields
-                ],
-                F.to_timestamp(F.lit("1970-01-01")).alias(deleted_col),
+            fields = tuple((f.name, f.dataType) for f in new_rows.schema.fields)
+            live_x, tomb_x, sentinel_x = _child_batch_exprs(
+                fields, hashid_col, cursor, deleted_col
             )
             child_batch = (
-                new_eff.withColumn(deleted_col, F.lit(None).cast("timestamp"))
-                .unionByName(tombstones)
-                .unionByName(sentinels)
+                new_eff.select(*live_x)
+                .unionByName(stale.select(*tomb_x))
+                .unionByName(adv.select(*sentinel_x))
             )
             stats[name] = merge_batch(
                 table,
@@ -256,25 +245,46 @@ def merge_children_batch(
         winners.unpersist()
 
 
-def _at_new_lsn(new_rows: DataFrame, cursor: str):
-    """Projection of a stale row onto the child schema with the cursor
-    bumped to the parent's new LSN (the tombstone's conflict key)."""
-    return [
-        F.col("_new_lsn").cast(fld.dataType).alias(fld.name)
-        if fld.name == cursor
-        else F.col(fld.name)
-        for fld in new_rows.schema.fields
-    ]
+@expr_cache
+def _fence_conds():
+    """The late-parent fence over (parent cursor ``_new_lsn``, stored
+    watermark ``_wm``): (strictly advances, advances or ties). A NULL
+    parent cursor sorts just above the no-watermark floor."""
+    new_cur = F.coalesce(F.col("_new_lsn"), F.lit(-(2**62) + 1))
+    old_wm = F.coalesce(F.col("_wm"), F.lit(-(2**62)))
+    return new_cur > old_wm, new_cur >= old_wm
 
 
-def _sentinel_col(fld, hashid_col: str, cursor: str):
-    if fld.name == hashid_col:
-        return F.col(hashid_col)
-    if fld.name == "pos":
-        return F.lit(-1).cast(fld.dataType).alias("pos")
-    if fld.name == cursor:
-        return F.col("_new_lsn").cast(fld.dataType).alias(fld.name)
-    return F.lit(None).cast(fld.dataType).alias(fld.name)
+@expr_cache
+def _child_batch_exprs(
+    fields: tuple, hashid_col: str, cursor: str, deleted_col: str
+) -> tuple[tuple, tuple, tuple]:
+    """Select lists of a child batch's three parts over the child schema
+    ``fields`` ((name, dataType) pairs): live rows (deleted NULL); stale
+    rows tombstoned at the parent's new LSN, the tombstone's conflict key;
+    and each advanced parent's sentinel row (pos -1)."""
+    epoch = F.to_timestamp(F.lit("1970-01-01")).alias(deleted_col)
+    at_new_lsn = F.col("_new_lsn")
+    live = tuple(F.col(name) for name, _ in fields)
+    tomb = tuple(
+        at_new_lsn.cast(dt).alias(name) if name == cursor else F.col(name)
+        for name, dt in fields
+    )
+    sentinel = []
+    for name, dt in fields:
+        if name == hashid_col:
+            sentinel.append(F.col(hashid_col))
+        elif name == "pos":
+            sentinel.append(F.lit(-1).cast(dt).alias("pos"))
+        elif name == cursor:
+            sentinel.append(at_new_lsn.cast(dt).alias(name))
+        else:
+            sentinel.append(F.lit(None).cast(dt).alias(name))
+    return (
+        (*live, F.lit(None).cast("timestamp").alias(deleted_col)),
+        (*tomb, epoch),
+        (*sentinel, epoch),
+    )
 
 
 def read_children(

@@ -16,13 +16,17 @@ the row, so late lower-LSN events cannot resurrect the key across batches.
 
 Scale shape (the part that must survive 100 TB):
 1. The batch is first collapsed to ONE row per key via ``latest_per_key``
-   (hash agg with map-side combine — no window sort).
+   (a ``max_by`` aggregate with map-side partial combine — no window
+   sort).
 2. One write for both strategies: the collapsed batch is appended as
    per-bucket DELTA files in ONE Spark action, its write. Collapse,
    canonicalize, conform and bucket all run inside it, and the per-bucket
    lineage (rows, LSN high-watermark, deletes) comes from the written
    files' footers plus an Observation on the same write — no persist, no
-   stats job.
+   stats job. The delta rows are one select whose expressions, like the
+   collapse's, are memoized per schema, key and bucket layout
+   (``functions/plan_cache.py``): a warm trigger plans in ~100 py4j round
+   trips, write included.
 3. One resolution rule: the merge-on-read scan's latest-per-key by
    (``__lsn``, −commit) — a strictly newer LSN wins, and on a tie the older
    commit keeps its row. strategy="mor" commits the deltas and leaves them
@@ -49,8 +53,12 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..functions.plan_cache import expr_cache, fields_key
 from ..operators.dedup import latest_per_key
-from .table import LakeTable, META_DELETED, META_LSN, Snapshot, overlay
+from .table import (
+    LakeTable, META_DELETED, META_LSN, Snapshot, bucket_column, conform_exprs,
+    overlay,
+)
 
 
 @dataclass
@@ -117,12 +125,11 @@ def merge_batch(
     src = latest_per_key(batch, pk, order_cols)
     if post_collapse is not None:
         src = post_collapse(src)
-    src = src.withColumn(META_LSN, F.col(cursor).cast("long")).withColumn(
-        "_src_deleted", F.col(deleted_col).isNotNull()
-    )
-    src = src.withColumn("_b", table.bucket_expr(snap))
     # the fold rewrites COW deltas right away: no point-lookup bloom for them
-    written = _write_mor(table, replace(snap, bloom_bits=0) if cow else snap, src)
+    written = _write_mor(
+        table, replace(snap, bloom_bits=0) if cow else snap, src, cursor,
+        deleted_col,
+    )
 
     if written is None:
         if not commit_empty:
@@ -187,25 +194,22 @@ def merge_batch(
     )
 
 
-def _write_mor(table: LakeTable, snap: Snapshot, src: DataFrame):
+def _write_mor(
+    table: LakeTable, snap: Snapshot, src: DataFrame, cursor: str,
+    deleted_col: str,
+):
     """LSM write path: ONE Spark action, the write. The collapsed batch is
-    conformed to the table schema and appended as per-bucket delta files
-    — no target read, no persist, no stats job. Per-bucket rows and LSN
-    high-watermarks come from the footers of the files just written (one
-    file per bucket); per-bucket delete counts from an Observation riding
-    the same write."""
-    schema_cols = []
-    for fs in snap.schema.fields:
-        if fs.name in src.columns:
-            schema_cols.append(F.col(fs.name).cast(fs.dtype).alias(fs.name))
-        else:
-            schema_cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
-    rows = src.select(
-        *schema_cols,
-        F.col(META_LSN),
-        F.col("_src_deleted").alias(META_DELETED),
-        F.col("_b"),
-    )
+    conformed to the table schema, given its LSN, delete flag and bucket in
+    one select, and appended as per-bucket delta files — no target read,
+    no persist, no stats job. Per-bucket rows and LSN high-watermarks come
+    from the footers of the files just written (one file per bucket);
+    per-bucket delete counts from an Observation riding the same write."""
+    have = set(src.columns)
+    rows = src.select(*_delta_exprs(
+        fields_key(snap.schema),
+        tuple(f.name for f in snap.schema.fields if f.name in have),
+        cursor, deleted_col, tuple(snap.bucket_cols), snap.n_buckets,
+    ))
     deleted = Observation()
     adds, total = table.write_data_files(
         snap,
@@ -214,10 +218,7 @@ def _write_mor(table: LakeTable, snap: Snapshot, src: DataFrame):
         # them, and the write's task count is min(that, cores) anyway
         touched_buckets=snap.n_buckets,
         kind="delta",
-        observe=(
-            deleted,
-            F.collect_list(F.when(F.col(META_DELETED), F.col("_b"))).alias("b"),
-        ),
+        observe=(deleted, _deleted_buckets()),
     )
     if total == 0:
         return None
@@ -225,6 +226,27 @@ def _write_mor(table: LakeTable, snap: Snapshot, src: DataFrame):
     for b in deleted.get["b"]:
         per_bucket[int(b)]["deletes"] += 1
     return adds, per_bucket, total
+
+
+@expr_cache
+def _delta_exprs(
+    fields: tuple, present: tuple[str, ...], cursor: str, deleted_col: str,
+    bucket_cols: tuple[str, ...], n_buckets: int,
+) -> tuple:
+    """A delta file's select list over the collapsed batch: the conformed
+    payload, ``__lsn``, ``__deleted`` and the bucket ``_b``."""
+    return (
+        *conform_exprs(fields, present),
+        F.col(cursor).cast("long").alias(META_LSN),
+        F.col(deleted_col).isNotNull().alias(META_DELETED),
+        bucket_column(bucket_cols, n_buckets).alias("_b"),
+    )
+
+
+@expr_cache
+def _deleted_buckets():
+    """The Observation aggregate: the bucket of every tombstone written."""
+    return F.collect_list(F.when(F.col(META_DELETED), F.col("_b"))).alias("b")
 
 
 def bucket_lineage(adds: list[dict]) -> dict[int, dict]:

@@ -62,10 +62,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import TableSchema
+from ..functions.plan_cache import expr_cache, fields_key
 from ..operators.dedup import scd2, scd2_bounded, surrogate_key_expr
 from ..operators.skew import salted_scd2_input
 from .merge import bucket_lineage
-from .table import LakeTable, META_DELETED, META_LSN, Snapshot, overlay
+from .table import (
+    LakeTable, META_DELETED, META_LSN, Snapshot, bucket_column, overlay,
+)
 
 #: columns computed by the SCD window — everything else is carried state
 SCD_OUT_COLS = [
@@ -155,7 +158,6 @@ def scd_merge_batch(
     new = salted_scd2_input(batch, pk, cursor)
     if post_dedup is not None:
         new = post_dedup(new)
-    new = new.withColumn("_b", table.bucket_expr(snap))
     deltas = _scd_append_mor(table, snap, new, pk, cursor)
     if not deltas:
         return _scd_commit_empty(table, snap, app_id, batch_id, epoch, commit_empty)
@@ -200,29 +202,43 @@ def _scd_append_mor(
     lag. Per-bucket rows and cursor high-watermarks come from the written
     files' footers (``__lsn`` is the cursor); history rows are never
     deletes."""
-    uk = surrogate_key_expr(pk)
-    schema_cols = []
-    for fs in snap.schema.fields:
-        if fs.name == "_airbyte_unique_key":
-            schema_cols.append(uk.cast(fs.dtype).alias(fs.name))
-        elif fs.name == "_airbyte_start_at":
-            schema_cols.append(F.col(cursor).cast(fs.dtype).alias(fs.name))
-        elif fs.name in ("_airbyte_end_at", "_airbyte_active_row"):
-            schema_cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
-        elif fs.name in new.columns:
-            schema_cols.append(F.col(fs.name).cast(fs.dtype).alias(fs.name))
-        else:
-            schema_cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
-    rows = new.select(
-        *schema_cols,
-        F.col(cursor).cast("long").alias(META_LSN),
-        F.lit(False).alias(META_DELETED),
-        F.col("_b"),
-    )
+    have = set(new.columns)
+    rows = new.select(*_scd_delta_exprs(
+        fields_key(snap.schema),
+        tuple(f.name for f in snap.schema.fields if f.name in have),
+        tuple(pk), cursor, tuple(snap.bucket_cols), snap.n_buckets,
+    ))
     adds, _ = table.write_data_files(
         snap, rows, touched_buckets=snap.n_buckets, kind="delta"
     )
     return adds
+
+
+@expr_cache
+def _scd_delta_exprs(
+    fields: tuple, present: tuple[str, ...], pk: tuple[str, ...], cursor: str,
+    bucket_cols: tuple[str, ...], n_buckets: int,
+) -> tuple:
+    """An SCD delta file's select list over the collapsed versions: the
+    surrogate key and start cursor derived, the end/active columns NULL,
+    the rest conformed, then ``__lsn``, ``__deleted`` and the bucket."""
+    derived = {
+        "_airbyte_unique_key": surrogate_key_expr(pk),
+        "_airbyte_start_at": F.col(cursor),
+        "_airbyte_end_at": F.lit(None),
+        "_airbyte_active_row": F.lit(None),
+    }
+    cols = [
+        derived.get(name, F.col(name) if name in present else F.lit(None))
+        .cast(dtype).alias(name)
+        for name, _uid, dtype in fields
+    ]
+    return (
+        *cols,
+        F.col(cursor).cast("long").alias(META_LSN),
+        F.lit(False).alias(META_DELETED),
+        bucket_column(bucket_cols, n_buckets).alias("_b"),
+    )
 
 
 def _scd_commit_empty(
@@ -264,8 +280,26 @@ def _resolved_history(
     versions = salted_scd2_input(raw.drop(*SCD_OUT_COLS), pk, cursor)
     window = scd2_bounded if bounded else scd2
     hist = window(versions, pk, cursor)
-    return hist.select(
-        *[F.col(fs.name).cast(fs.dtype).alias(fs.name) for fs in snap.schema.fields]
+    return hist.select(*_history_exprs(fields_key(snap.schema)))
+
+
+@expr_cache
+def _history_exprs(fields: tuple) -> tuple:
+    """A re-windowed history cast onto the table schema's ``fields``."""
+    return tuple(F.col(name).cast(dtype).alias(name) for name, _uid, dtype in fields)
+
+
+@expr_cache
+def _fold_meta_exprs(
+    cursor: str, bucket_cols: tuple[str, ...], n_buckets: int
+) -> tuple:
+    """Appended to a re-windowed history: ``__lsn`` (the cursor),
+    ``__deleted`` and the bucket."""
+    return (
+        F.col("*"),
+        F.col(cursor).cast("long").alias(META_LSN),
+        F.lit(False).alias(META_DELETED),
+        bucket_column(bucket_cols, n_buckets).alias("_b"),
     )
 
 
@@ -410,11 +444,9 @@ def _scd_fold(
     one base file per bucket; return (add-entries, rows written)."""
     raw = table.read(buckets=buckets, snap=snap, resolve=False)
     hist = _resolved_history(snap, raw, bounded)
-    rows = hist.select(
-        "*",
-        F.col(snap.primary_key[-1]).cast("long").alias(META_LSN),
-        F.lit(False).alias(META_DELETED),
-    ).withColumn("_b", table.bucket_expr(snap))
+    rows = hist.select(*_fold_meta_exprs(
+        snap.primary_key[-1], tuple(snap.bucket_cols), snap.n_buckets
+    ))
     return table.write_data_files(snap, rows, touched_buckets=len(buckets))
 
 

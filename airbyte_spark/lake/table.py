@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import TableSchema, FieldTransform, apply_transforms
+from ..functions.plan_cache import expr_cache, fields_key
 
 META_LSN = "__lsn"
 META_DELETED = "__deleted"
@@ -164,19 +165,118 @@ def overlay(
     return replace(snap, files=files, fences=fences)
 
 
-def _commit_version(files: Iterable[tuple[str, int]]) -> Column:
-    """Each scanned row's commit version, from ``(path, version)`` pairs of
-    the files in the scan. Keyed by the file's write subdir (path component
-    -3: one ``write_data_files`` call is one uuid subdir, committed by one
-    commit), so it is a literal map in the plan: no manifest relation, no
-    join and no Spark job. NULL for a file not in ``files``."""
-    versions = {p.split("/")[-3]: v for p, v in files}
-    commit_v = F.create_map(*[
-        c
-        for sub, v in sorted(versions.items())
-        for c in (F.lit(sub), F.lit(v).cast("long"))
-    ])
-    return commit_v[F.element_at(F.split(F.col("_metadata.file_path"), "/"), -3)]
+def _commit_version(files: Iterable[tuple[str, int]]) -> str:
+    """Each scanned row's commit version, as a SQL expression, from
+    ``(path, version)`` pairs of the files in the scan. Keyed by the file's
+    write subdir (path component -3: one ``write_data_files`` call is one
+    uuid subdir, committed by one commit), so it is a literal map in the
+    plan: no manifest relation, no join and no Spark job. The map is SQL
+    text, so building it is one JVM call however many subdirs the scan
+    holds. NULL for a file not in ``files``."""
+    versions = {p.split("/")[-3]: int(v) for p, v in files}
+    if not versions:
+        return "CAST(NULL AS BIGINT)"
+    entries = ", ".join(
+        f"{_sql_string(sub)}, {v}L" for sub, v in sorted(versions.items())
+    )
+    return f"map({entries})[element_at(split(_metadata.file_path, '/'), -3)]"
+
+
+def _sql_string(s: str) -> str:
+    """A SQL string literal for ``s``, whatever it holds: its UTF-8 bytes
+    in hex, cast back (no quote or backslash escaping to get wrong)."""
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+
+
+@expr_cache
+def bucket_column(bucket_cols: tuple[str, ...], n_buckets: int) -> Column:
+    """``pmod(hash(bucket_cols), n_buckets)``: the bucket of a row."""
+    return F.pmod(F.hash(*[F.col(c) for c in bucket_cols]), F.lit(n_buckets))
+
+
+@expr_cache
+def conform_exprs(fields: tuple, present: tuple[str, ...]) -> tuple[Column, ...]:
+    """The select list projecting a frame whose columns include
+    ``present`` onto a schema's ``fields`` (``fields_key``): cast what is
+    there, null-pad the rest."""
+    return tuple(
+        (F.col(name) if name in present else F.lit(None)).cast(dtype).alias(name)
+        for name, _uid, dtype in fields
+    )
+
+
+@expr_cache
+def _era_projection(file_fields: tuple, cur_fields: tuple) -> tuple[Column, ...]:
+    """One schema era's projection onto the current schema by field uid
+    (rename/widen/null-pad), plus the physical meta columns."""
+    by_uid = {uid: (name, dtype) for name, uid, dtype in file_fields}
+    cols = []
+    for name, uid, dtype in cur_fields:
+        src = by_uid.get(uid)
+        if src is None:
+            cols.append(F.lit(None).cast(dtype).alias(name))
+        elif src == (name, dtype):
+            cols.append(F.col(name))
+        else:
+            cols.append(F.col(src[0]).cast(dtype).alias(name))
+    return (*cols, F.col(META_LSN), F.col(META_DELETED))
+
+
+@expr_cache
+def _columns(names: tuple[str, ...]) -> tuple[Column, ...]:
+    return tuple(F.col(c) for c in names)
+
+
+@expr_cache
+def _probe_exprs(
+    pk: tuple[str, ...], bucket_cols: tuple[str, ...], n_buckets: int,
+    bloom_bits: int, bloom_k: int,
+) -> tuple[Column, ...]:
+    """A point-lookup key's pk columns, ``__bucket`` and bloom ``__pos``."""
+    cols = [F.col(c) for c in pk]
+    if set(bucket_cols) <= set(pk):
+        bucket = bucket_column(bucket_cols, n_buckets).cast("int")
+    else:
+        bucket = F.lit(None).cast("int")
+    if bloom_bits:
+        pos = _bloom_positions(cols, bloom_bits, bloom_k)
+    else:
+        pos = F.lit(None).cast("array<bigint>")
+    return (*cols, bucket.alias("__bucket"), pos.alias("__pos"))
+
+
+def _sql_name(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _key_literals(snap: Snapshot, keys: list) -> list[list[str]]:
+    """Primary-key value tuples as rows of SQL literals of the key types."""
+    types = snap.schema.to_struct()
+    return [
+        [_sql_literal(v, types[c].dataType) for c, v in zip(snap.primary_key, k)]
+        for k in keys
+    ]
+
+
+def _sql_literal(v, dtype: T.DataType) -> str:
+    """A SQL literal of type ``dtype`` holding the Python value ``v`` as
+    ``createDataFrame`` would store it."""
+    if v is None:
+        return f"CAST(NULL AS {dtype.simpleString()})"
+    if isinstance(dtype, T.StringType):
+        return _sql_string(str(v))
+    if isinstance(dtype, T.BinaryType):
+        return f"X'{bytes(v).hex()}'"
+    if isinstance(dtype, T.TimestampType):  # through the same time zone rule
+        return f"TIMESTAMP_MICROS({dtype.toInternal(v)})"
+    if isinstance(dtype, T.DateType):
+        return f"DATE_FROM_UNIX_DATE({dtype.toInternal(v)})"
+    return f"CAST({_sql_string(str(v))} AS {dtype.simpleString()})"
+
+
+@expr_cache
+def _live_filter() -> Column:
+    return ~F.col(META_DELETED)
 
 
 #: parquet timestamp encoding pinned around every data-file write
@@ -277,6 +377,14 @@ class LakeTable:
         for c in (*(stats_cols or []), *(sort_cols or []), *(zorder_cols or [])):
             if c not in names:
                 raise ValueError(f"stats/sort/zorder column {c!r} not in schema")
+        bucket_cols = list(bucket_cols or primary_key[:1])
+        if primary_key and not set(bucket_cols) <= set(primary_key):
+            # a key whose bucket columns change between versions would
+            # leave versions in two buckets, and folds resolve per bucket
+            raise ValueError(
+                f"bucket_cols {bucket_cols} must be a subset of the "
+                f"primary key {list(primary_key)}"
+            )
         if bloom_bits and (bloom_bits % 64 or bloom_bits < 64):
             raise ValueError("bloom_bits must be a positive multiple of 64")
         if bloom_bits and bloom_k < 1:
@@ -317,7 +425,7 @@ class LakeTable:
                 "op": "create",
                 "schema": schema.to_json(),
                 "n_buckets": n_buckets,
-                "bucket_cols": list(bucket_cols or primary_key[:1]),
+                "bucket_cols": bucket_cols,
                 "primary_key": list(primary_key),
                 "stats_cols": list(stats_cols or []),
                 "sort_cols": list(sort_cols or []),
@@ -817,10 +925,8 @@ class LakeTable:
 
     # ------------------------------------------------------------- writes
 
-    def bucket_expr(self, snap: Snapshot):
-        return F.pmod(
-            F.hash(*[F.col(c) for c in snap.bucket_cols]), F.lit(snap.n_buckets)
-        )
+    def bucket_expr(self, snap: Snapshot) -> Column:
+        return bucket_column(tuple(snap.bucket_cols), snap.n_buckets)
 
     def write_data_files(
         self,
@@ -828,7 +934,7 @@ class LakeTable:
         df: DataFrame,
         touched_buckets: Optional[int] = None,
         kind: str = "base",
-        sort_within: Optional[Sequence[str]] = None,
+        sort_within: Optional[Sequence] = None,
         observe: Optional[tuple] = None,
     ) -> tuple[list[dict], int]:
         """Write rows (payload + meta cols, with ``_b`` bucket col already
@@ -870,7 +976,7 @@ class LakeTable:
             # output file's rows contiguous per bucket and clustered on
             # the sort columns — tight per-row-group min/max bounds, so
             # pushed-down range predicates prune inside surviving files
-            writer = writer.sortWithinPartitions("_b", *sort_within)
+            writer = writer.sortWithinPartitions(*_columns(("_b",)), *sort_within)
         if observe is not None:
             writer = writer.observe(*observe)
         # INT96 (Spark's default parquet timestamp encoding) carries no
@@ -1105,12 +1211,11 @@ class LakeTable:
         ``extra`` appends expressions resolved against the INCOMING frame
         (e.g. a cursor column the schema doesn't carry) in the same
         select, before the conform would drop their inputs."""
-        cols = []
-        for fs in snap.schema.fields:
-            if fs.name in df.columns:
-                cols.append(F.col(fs.name).cast(fs.dtype).alias(fs.name))
-            else:
-                cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
+        have = set(df.columns)
+        cols = conform_exprs(
+            fields_key(snap.schema),
+            tuple(f.name for f in snap.schema.fields if f.name in have),
+        )
         return df.select(*cols, *(extra or []))
 
     # -------------------------------------------------------------- reads
@@ -1127,7 +1232,11 @@ class LakeTable:
     ) -> DataFrame:
         """Current-snapshot scan. Old-schema file groups are projected onto
         the current schema by field uid (rename/widen/null-pad), then
-        union-by-name'd — the scan stays fully columnar/JVM-side.
+        union-by-name'd — the scan stays fully columnar/JVM-side. Each
+        era's projection and the resolution's expressions are built once
+        per schema and key (``functions/plan_cache.py``), and the
+        commit-version map is one SQL expression, so planning a read costs
+        a few py4j calls per scanned file and a handful per era.
 
         The scan is built from the snapshot's own file list: planning
         checks the selected files in-process and starts NO Spark job,
@@ -1165,6 +1274,35 @@ class LakeTable:
         filtering versions before latest-per-key changes which version
         wins."""
         snap = snap or self.snapshot()
+        df, resolving = self._scan(snap, buckets, since_lsn, ranges, resolve)
+        if resolving:
+            from ..operators.dedup import latest_per_key
+
+            # max_by on (lsn, -commit): highest LSN wins; on an LSN tie the
+            # OLDEST commit wins (COW target-keeps-on-tie)
+            df = latest_per_key(
+                df, snap.primary_key, [META_LSN, "_neg_commit"]
+            ).drop("_neg_commit")
+        if not include_deleted:
+            df = df.filter(_live_filter())
+        if not include_meta:
+            df = df.drop(META_LSN, META_DELETED)
+        return df
+
+    def _scan(
+        self,
+        snap: Snapshot,
+        buckets: Optional[Sequence[int]] = None,
+        since_lsn: Optional[int] = None,
+        ranges: Optional[dict] = None,
+        resolve: bool = True,
+    ) -> tuple[DataFrame, bool]:
+        """``read``'s scan before resolution: the selected files' rows
+        projected onto the current schema, meta columns included, with the
+        ``since_lsn``/``ranges`` residual filters. Returns ``(rows,
+        resolving)``; when ``resolving`` (``resolve`` and a delta file in
+        the scan) the rows carry ``_neg_commit``, the negated commit
+        version of their file, for the (lsn, -commit) resolution."""
         cur = snap.schema
         groups: dict[int, list[str]] = {}
         has_delta = False
@@ -1190,14 +1328,18 @@ class LakeTable:
             groups.setdefault(meta["schema_id"], []).append(
                 os.path.join(self.path, path)
             )
-        need_commit_col = has_delta and resolve
-        if need_commit_col:
-            commit_v = _commit_version((p, m.get("v", 0)) for p, m in selected)
+        resolving = has_delta and resolve
+        if resolving:
+            neg_commit = F.expr(
+                "-coalesce("
+                + _commit_version((p, m.get("v", 0)) for p, m in selected)
+                + ", 0L) AS _neg_commit"
+            )
         parts: list[DataFrame] = []
         for sid, paths in sorted(groups.items()):
             raw, cols = self._file_group_scan(snap, sid, paths, cur)
-            if need_commit_col:
-                cols.append((-F.coalesce(commit_v, F.lit(0))).alias("_neg_commit"))
+            if resolving:
+                cols.append(neg_commit)
             parts.append(raw.select(*cols))
         if not parts:
             struct = cur.to_struct().add(META_LSN, "long").add(META_DELETED, "boolean")
@@ -1215,19 +1357,7 @@ class LakeTable:
                 df = df.filter(F.col(c) >= F.lit(lo))
             if hi is not None:
                 df = df.filter(F.col(c) <= F.lit(hi))
-        if need_commit_col:
-            from ..operators.dedup import latest_per_key
-
-            # max_by on (lsn, -commit): highest LSN wins; on an LSN tie the
-            # OLDEST commit wins (COW target-keeps-on-tie)
-            df = latest_per_key(
-                df, snap.primary_key, [META_LSN, "_neg_commit"]
-            ).drop("_neg_commit")
-        if not include_deleted:
-            df = df.filter(~F.col(META_DELETED))
-        if not include_meta:
-            df = df.drop(META_LSN, META_DELETED)
-        return df
+        return df, resolving
 
     def plan_point_lookup(
         self, keys: Sequence, snap: Optional[Snapshot] = None
@@ -1291,55 +1421,42 @@ class LakeTable:
         )
         pk = snap.primary_key
         probes = plan["probes"]
+        lits = _key_literals(snap, [[p[c] for c in pk] for p in probes])
         if len(probes) <= 64:
             # small key sets: an OR-of-ANDs residual lands in the parquet
             # scan's PushedFilters, pruning row groups inside survivors
-            cond = F.lit(False)
-            for p in probes:
-                c = F.lit(True)
-                for col in pk:
-                    c = c & F.col(col).eqNullSafe(F.lit(p[col]))
-                cond = cond | c
-            return df.filter(cond)
-        from pyspark.sql.types import StructType
-
-        full = snap.schema.to_struct()
-        kdf = self.spark.createDataFrame(
-            [tuple(p[c] for c in pk) for p in probes],
-            StructType([full[c] for c in pk]),
-        )
+            return df.filter(F.expr(" OR ".join(
+                "(" + " AND ".join(
+                    f"{_sql_name(c)} <=> {v}" for c, v in zip(pk, row)
+                ) + ")"
+                for row in lits
+            )))
+        kdf = self._values(pk, lits)
         return df.join(F.broadcast(kdf.dropDuplicates()), on=pk, how="left_semi")
 
+    def _values(self, names: Sequence[str], lits: list[list[str]]) -> DataFrame:
+        """A local ``VALUES`` relation of SQL literal rows: planned and, when
+        collected, evaluated in the driver, with no Spark job."""
+        rows = ", ".join("(" + ", ".join(r) + ")" for r in lits)
+        cols = ", ".join(_sql_name(c) for c in names)
+        return self.spark.sql(f"SELECT * FROM VALUES {rows} AS _keys({cols})")
+
     def _probe_point_keys(self, keys: Sequence, snap: Snapshot) -> list:
-        """One tiny Spark job over the key literals computing, with the
-        SAME Catalyst expressions the write path used, each key's bucket
-        (None when bucket_cols ⊄ pk) and bloom bit positions."""
+        """Each key's bucket (None when bucket_cols ⊄ pk) and bloom bit
+        positions, computed with the SAME Catalyst expressions the write
+        path used over a local ``VALUES`` relation of the keys: the driver
+        evaluates it, so planning a lookup starts no Spark job."""
         if not keys:
             raise ValueError("point_lookup needs at least one key")
-        from pyspark.sql.types import StructType
-
         pk = snap.primary_key
-        full = snap.schema.to_struct()
-        struct = StructType([full[c] for c in pk])
-        rows = [
-            tuple(k) if isinstance(k, (tuple, list)) else (k,) for k in keys
-        ]
-        kdf = self.spark.createDataFrame(rows, struct)
-        cols = [F.col(c) for c in pk]
-        sel = list(cols)
-        if set(snap.bucket_cols) <= set(pk):
-            sel.append(self.bucket_expr(snap).cast("int").alias("__bucket"))
-        else:
-            sel.append(F.lit(None).cast("int").alias("__bucket"))
-        if snap.bloom_bits:
-            sel.append(
-                _bloom_positions(cols, snap.bloom_bits, snap.bloom_k).alias(
-                    "__pos"
-                )
-            )
-        else:
-            sel.append(F.lit(None).cast("array<bigint>").alias("__pos"))
-        return kdf.select(*sel).collect()
+        lits = _key_literals(
+            snap, [k if isinstance(k, (tuple, list)) else (k,) for k in keys]
+        )
+        probe = _probe_exprs(
+            tuple(pk), tuple(snap.bucket_cols), snap.n_buckets, snap.bloom_bits,
+            snap.bloom_k,
+        )
+        return self._values(pk, lits).select(*probe).collect()
 
     def read_incremental(
         self,
@@ -1397,17 +1514,7 @@ class LakeTable:
         # (one status call each) instead of in a distributed listing job
         with _scoped_conf(self.spark, _LISTING_KEY, _NO_LISTING_JOB):
             raw = self.spark.read.schema(read_struct).parquet(*paths)
-        by_uid = file_schema.by_uid()
-        cols = []
-        for fs in cur.fields:
-            src = by_uid.get(fs.uid)
-            if src is None:
-                cols.append(F.lit(None).cast(fs.dtype).alias(fs.name))
-            elif src.dtype == fs.dtype and src.name == fs.name:
-                cols.append(F.col(fs.name))
-            else:
-                cols.append(F.col(src.name).cast(fs.dtype).alias(fs.name))
-        cols += [F.col(META_LSN), F.col(META_DELETED)]
+        cols = list(_era_projection(fields_key(file_schema), fields_key(cur)))
         return raw, cols
 
     # -------------------------------------------------- change data feed
@@ -1636,11 +1743,14 @@ class LakeTable:
         groups: dict[int, list[str]] = {}
         for rel, sid, _ in change_files:
             groups.setdefault(sid, []).append(os.path.join(self.path, rel))
-        version = _commit_version((rel, v) for rel, _, v in change_files)
+        version = F.expr(
+            _commit_version((rel, v) for rel, _, v in change_files)
+            + " AS _change_version"
+        )
         parts = []
         for sid, paths in sorted(groups.items()):
             raw, cols = self._file_group_scan(snap, sid, paths, cur)
-            parts.append(raw.select(*cols, version.alias("_change_version")))
+            parts.append(raw.select(*cols, version))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -1698,12 +1808,24 @@ class LakeTable:
         rows written). Tombstones are kept (they carry delete semantics).
         The caller commits the adds against the removal of the buckets'
         old files."""
-        df = self.read(
-            buckets=buckets, include_meta=True, include_deleted=True, snap=snap
-        ).withColumn("_b", self.bucket_expr(snap))
+        # ONE shuffle: rows go to their bucket's task first, then resolve
+        # there by (_b, pk) — exact because bucket_cols ⊆ primary_key, so
+        # a key never spans buckets — and are written in place, keeping
+        # the partitioning (a pk shuffle to resolve plus a _b shuffle to
+        # write would run the final aggregate as its own stage)
+        df, resolving = self._scan(snap, buckets)
+        n_tasks = min(len(buckets), self.spark.sparkContext.defaultParallelism)
+        df = df.withColumn("_b", self.bucket_expr(snap)).repartition(
+            n_tasks, "_b"
+        )
+        if resolving:
+            from ..operators.dedup import latest_per_key
+
+            df = latest_per_key(
+                df, ["_b", *snap.primary_key], [META_LSN, "_neg_commit"]
+            ).drop("_neg_commit")
         return self.write_data_files(
-            snap, df, touched_buckets=len(buckets),
-            sort_within=self._rewrite_sort(snap),
+            snap, df, sort_within=self._rewrite_sort(snap)
         )
 
     def _rewrite_sort(self, snap: Snapshot):
@@ -1714,7 +1836,7 @@ class LakeTable:
         clustering improves as stats accumulate; correctness never
         depends on it)."""
         if not snap.zorder_cols:
-            return snap.sort_cols or None
+            return _columns(tuple(snap.sort_cols)) or None
         struct = snap.schema.to_struct()
         from pyspark.sql import types as _T
 
@@ -1737,7 +1859,7 @@ class LakeTable:
             else:
                 ranked.append((col, None, None))
         if not have_bounds:
-            return list(snap.zorder_cols)
+            return _columns(tuple(snap.zorder_cols))
         return [zorder_key(ranked)]
 
     def rebucket(self, new_n_buckets: int) -> int:
@@ -1755,10 +1877,9 @@ class LakeTable:
         if new_n_buckets == snap.n_buckets:
             return snap.version
         df = self.read(include_meta=True, include_deleted=True, snap=snap)
-        new_expr = F.pmod(
-            F.hash(*[F.col(c) for c in snap.bucket_cols]), F.lit(new_n_buckets)
+        rows = df.withColumn(
+            "_b", bucket_column(tuple(snap.bucket_cols), new_n_buckets)
         )
-        rows = df.withColumn("_b", new_expr)
         # temporarily advertise the new count so write_data_files
         # partitions correctly; the commit entry makes it durable
         adds, _ = self.write_data_files(

@@ -31,6 +31,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.plan_cache import expr_cache
+
 
 def resolve_order_cols(df: DataFrame, cursor: Optional[str]) -> list[str]:
     """D1: cursor fallback chain (stream_processor.py:1005-1029)."""
@@ -45,7 +47,7 @@ def resolve_order_cols(df: DataFrame, cursor: Optional[str]) -> list[str]:
     return cols
 
 
-def _order_struct(df: DataFrame, order_cols: Sequence[str]) -> Column:
+def _order_struct(order_cols: Sequence[str]) -> Column:
     # Total ordering with nulls-lose semantics (the reference's null-first
     # DESC): each order column becomes an (isNotNull, value) pair — false
     # sorts below true, so a NULL loses to EVERY real value; equal flags
@@ -61,6 +63,20 @@ def _order_struct(df: DataFrame, order_cols: Sequence[str]) -> Column:
     return F.struct(*parts)
 
 
+@expr_cache
+def _collapse_exprs(
+    pk: tuple[str, ...], order_cols: tuple[str, ...], payload_cols: tuple[str, ...]
+) -> tuple[tuple[Column, ...], Column, tuple[Column, ...]]:
+    """``latest_per_key``'s grouping keys, ``max_by`` aggregate and
+    payload-unpacking select list, built once per (pk, order, payload)."""
+    keys = tuple(F.col(c) for c in pk)
+    top = F.max_by(
+        F.struct(*[F.col(c) for c in payload_cols]), _order_struct(order_cols)
+    ).alias("_top")
+    unpack = (*keys, *[F.col(f"_top.{c}").alias(c) for c in payload_cols])
+    return keys, top, unpack
+
+
 def latest_per_key(
     df: DataFrame,
     pk: Sequence[str],
@@ -71,19 +87,19 @@ def latest_per_key(
 
     Implemented as ``max_by(struct(payload), struct(order))`` groupBy — an
     aggregate with map-side partial combine (see module docstring; it runs
-    as a ``SortAggregate``, as its buffers hold strings), NOT a window sort. Ties beyond order_cols are impossible in a WAL (LSN is
-    unique); exact duplicate (pk, lsn) rows are identical, so max_by is
-    deterministic for them.
+    as a ``SortAggregate``, as its buffers hold strings), NOT a window
+    sort. Ties beyond order_cols are impossible in a WAL (LSN is unique);
+    exact duplicate (pk, lsn) rows are identical, so max_by is
+    deterministic for them. The aggregate and the unpacking select are
+    memoized per (pk, order_cols, payload): a warm call costs one schema
+    read and three DataFrame calls.
     """
     base = df.columns if payload_cols is None else list(payload_cols)
-    payload_cols = [c for c in base if c not in pk]
-    if not payload_cols:  # explicit empty payload: the distinct key set
+    payload = tuple(c for c in base if c not in pk)
+    if not payload:  # explicit empty payload: the distinct key set
         return df.select(*pk).distinct()
-    ord_struct = _order_struct(df, order_cols)
-    agg = df.groupBy(*pk).agg(
-        F.max_by(F.struct(*payload_cols), ord_struct).alias("_top")
-    )
-    return agg.select(*pk, *[F.col(f"_top.{c}").alias(c) for c in payload_cols])
+    keys, top, unpack = _collapse_exprs(tuple(pk), tuple(order_cols), payload)
+    return df.groupBy(*keys).agg(top).select(*unpack)
 
 
 def intra_batch_dedup(df: DataFrame, pk: Sequence[str], cursor: str) -> DataFrame:

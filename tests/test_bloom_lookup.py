@@ -225,3 +225,31 @@ def test_compaction_rewrites_blooms(spark, tmp_path):
     assert all(m.get("bloom") for m in snap.files.values())
     got = table.point_lookup([("c33", 0)]).collect()
     assert len(got) == 1 and got[0].text == "t-33"
+
+
+def test_lookup_planning_starts_no_spark_job(spark, tmp_path):
+    """The probe keys are a local VALUES relation that the driver
+    evaluates: planning a lookup of a few keys or of more than 64 (the
+    broadcast semi-join) starts no Spark job, and both read exactly the
+    keys' rows."""
+    import uuid
+
+    table = _mk_table(spark, str(tmp_path / "t"))
+    _fill(spark, table, n_batches=3)
+    few = [(f"c{k}", 0) for k in (1, 25, 59, 999)]
+    many = [(f"c{k}", 0) for k in range(0, 60)] + [(f"c{k}", 0) for k in range(990, 1000)]
+    sc = spark.sparkContext
+    group = f"plan-lookup-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan lake lookups")
+    try:
+        plan = table.plan_point_lookup(few)
+        small = table.point_lookup(few)
+        large = table.point_lookup(many)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert plan["bloom_skipped"] > 0
+    full = {(r.conv_id, r.turn_idx): r.text for r in table.read().collect()}
+    for keys, df in ((few, small), (many, large)):
+        got = sorted((r.conv_id, r.turn_idx, r.text) for r in df.collect())
+        assert got == sorted((*k, full[k]) for k in set(keys) if k in full)
