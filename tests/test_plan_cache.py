@@ -217,10 +217,6 @@ def test_second_gateway_plans_with_live_handles(tmp_path):
     assert out.returncode == 0 and "OK" in out.stdout, out.stderr[-3000:]
 
 
-def _budget_table(spark, path, n_buckets=4):
-    return _create(spark, path, A_FIELDS, n_buckets)
-
-
 def _batches(spark, n, start=0):
     struct = T.StructType([*A_FIELDS, *CDC])
     out = []
@@ -237,7 +233,7 @@ def test_warm_mor_merge_py4j_budget(spark, tmp_path):
     """A warm MOR merge_batch builds its plan from memoized expressions:
     at most 400 py4j round trips, write included (about 1,000 when every
     expression was rebuilt per trigger)."""
-    table = _budget_table(spark, str(tmp_path / "m"))
+    table = _create(spark, str(tmp_path / "m"), A_FIELDS, 4)
     batches = _batches(spark, 4)
     for i, b in enumerate(batches[:3]):
         merge_batch(table, b, ["_ab_cdc_lsn"], batch_id=i, strategy="mor")
@@ -250,7 +246,7 @@ def test_maintain_cycle_py4j_budget(spark, tmp_path):
     """A warm maintenance cycle (fold every bucket's deltas, then vacuum)
     makes at most 300 py4j round trips; rebuilding the fold's resolution,
     projections and sort keys each cycle cost about 700 here."""
-    table = _budget_table(spark, str(tmp_path / "c"))
+    table = _create(spark, str(tmp_path / "c"), A_FIELDS, 4)
     batches = _batches(spark, 6)
     for i, b in enumerate(batches[:3]):
         merge_batch(table, b, ["_ab_cdc_lsn"], batch_id=i, strategy="mor")
@@ -280,7 +276,7 @@ def test_fold_is_one_shuffle_and_bucket_cols_must_be_in_the_key(spark, tmp_path)
     their bucket once and resolve there by (_b, pk). The resolved read is
     the same before and after. The per-bucket resolution is exact only
     because a key never spans buckets, which create() enforces."""
-    table = _budget_table(spark, str(tmp_path / "f"))
+    table = _create(spark, str(tmp_path / "f"), A_FIELDS, 4)
     for i, b in enumerate(_batches(spark, 3)):
         merge_batch(table, b, ["_ab_cdc_lsn"], batch_id=i, strategy="mor")
     cols = ["conv_id", "turn_idx", "text"]
